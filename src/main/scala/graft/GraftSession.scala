@@ -20,17 +20,12 @@ object GraftSession {
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      // AQE CAN rewrite sort-merge joins to shuffled-hash joins when
-      // every post-shuffle partition fits a bounded per-task hash map;
-      // an r14 full-subset A/B (48 queries, sf0.1) measured the GLOBAL
-      // rewrite as a net loss: the one-shot digest self-joins sped up
-      // 1.2-1.6x (q133/q134/q135/q92/q84) but the iterative/k-means
-      // classes regressed hard (q68 3.4x, q74 1.9x, q171 1.45x), so
-      // the default stays OFF and the winning joins carry a targeted
-      // shuffle_hash HINT instead (Dedup.jaccardPairs). Env override
-      // kept for re-measurement on other hardware.
-      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold",
-        sys.env.getOrElse("SPARK_GRAFT_SHJ_THRESHOLD", "0"))
+      // AQE's global sort-merge→shuffled-hash rewrite stays OFF: an r14
+      // A/B (48 queries, sf0.1) sped the one-shot digest self-joins up
+      // 1.2-1.6x but regressed the iterative classes up to 3.4x, so the
+      // winning joins carry a targeted shuffle_hash hint instead
+      // (Dedup.jaccardPairs, CoOccurrence).
+      .config("spark.sql.adaptive.maxShuffledHashJoinLocalMapThreshold", "0")
       // some events.parquet vintages store INT64 TIMESTAMP(NANOS), which
       // Spark's parquet reader rejects by default; read the raw long and
       // let Tables.load normalize whichever vintage is present.

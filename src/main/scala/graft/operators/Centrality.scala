@@ -83,26 +83,28 @@ object Centrality {
     val ew = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src"))
       .repartition(loopParts, col("src")).sortWithinPartitions("src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // ONE explode pass instead of a two-leg union (r15, guide §2.3):
-    // the union form scanned the caller's edge frame once per leg;
-    // identical distinct-endpoint set either way
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-      .localCheckpoint(true)
-    var pr = nodes.withColumn("pr", lit(scaleUnit))
-    for (_ <- 1 to iters) {
-      val inflow = ew
-        .join(pr.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"),
-          expr(s"($dampBp * pr) div (10000 * outdeg)").as("c"))
-        .groupBy("id")
-        .agg(sum(col("c")).as("inflow"))
-      pr = nodes.join(inflow, Seq("id"), "left")
-        .select(col("id"),
-          (lit(teleport) + coalesce(col("inflow"), lit(0L))).as("pr"))
+    val pr = try {
+      // ONE explode pass instead of a two-leg union (r15, guide §2.3):
+      // the union form scanned the caller's edge frame once per leg;
+      // identical distinct-endpoint set either way
+      val nodes = e.select(explode(array(col("src"), col("dst"))).as("id"))
+        .distinct()
         .localCheckpoint(true)
-    }
-    ew.unpersist(false)
+      var pr = nodes.withColumn("pr", lit(scaleUnit))
+      for (_ <- 1 to iters) {
+        val inflow = ew
+          .join(pr.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"),
+            expr(s"($dampBp * pr) div (10000 * outdeg)").as("c"))
+          .groupBy("id")
+          .agg(sum(col("c")).as("inflow"))
+        pr = nodes.join(inflow, Seq("id"), "left")
+          .select(col("id"),
+            (lit(teleport) + coalesce(col("inflow"), lit(0L))).as("pr"))
+          .localCheckpoint(true)
+      }
+      pr
+    } finally ew.unpersist(false)
     // re-spread the rank table for consumers (q124's kind/key
     // projection, q266's top-k) — same discipline as
     // Dedup.resolveWithStats' returned label table; the exchange is

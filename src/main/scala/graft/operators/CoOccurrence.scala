@@ -71,17 +71,10 @@ object CoOccurrence {
     * table — 16-byte rows whose per-key fanout is basket-sized
     * (callers with pathological baskets cap via maxBasket, the same
     * guard the quadratic pair fanout already requires), and partition
-    * count scales with the cluster's shuffle parallelism. Deployments
-    * preferring sort-merge's graceful spill set
-    * SPARK_GRAFT_COOC_SHJ=0. */
-  private def shjHint(df: DataFrame): DataFrame =
-    if (sys.env.getOrElse("SPARK_GRAFT_COOC_SHJ", "1") != "0")
-      df.hint("shuffle_hash")
-    else df
-
+    * count scales with the cluster's shuffle parallelism. */
   private def pairCountsOf(surv: DataFrame, minShared: Int): DataFrame =
     surv.as("a")
-      .join(shjHint(surv.as("b")),
+      .join(surv.as("b").hint("shuffle_hash"),
         col("a.bk") === col("b.bk") && col("a.item") < col("b.item"))
       .groupBy(col("a.item").as("item_a"), col("b.item").as("item_b"))
       .agg(count(lit(1)).as("n_shared"))

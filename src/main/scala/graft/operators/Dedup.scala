@@ -359,30 +359,23 @@ object Dedup {
     * The projection feeds multiple consumers; `ShingleHashes` is one
     * cheap native pass, so recomputing beats cache materialization +
     * eviction variance (measured in r1; at cluster scale persist a
-    * shingle table instead). */
-  /** Join-strategy choice for the shared-shingle SELF-JOIN: a
-    * shuffle_hash hint on the build side skips both sides' sorts —
-    * measured 1.2-1.6× on every one-shot jaccardPairs rider
-    * (q133/q134/q135/q92/q84 in the r14 optimization A/B; the same
-    * rewrite applied GLOBALLY regressed iterative classes, so it is a
-    * targeted hint, not a session config). 100 TB posture: the build
-    * side is one hash partition of the digest-thin (8-byte hash +
-    * 8-byte id) survivor table — per-key fanout is df-capped (maxDf),
-    * so no single key can blow a partition, and partition count scales
-    * with the cluster's shuffle parallelism. In the UNCAPPED
-    * (maxDf <= 0) branch that df-bound argument does NOT hold: the
-    * caller is asserting its corpus has no stop-phrase-hot shingles
-    * (the registered uncapped riders run on digest-sized fixtures),
-    * and SHJ's build side cannot spill a single giant key gracefully —
-    * an uncapped deployment on an unknown corpus should set maxDf, or
-    * trade the sorts back with the env escape (ADVICE r14).
-    * Deployments that would rather have sort-merge's graceful spill
-    * everywhere set SPARK_GRAFT_JACCARD_SHJ=0. */
-  private def shjHint(df: DataFrame): DataFrame =
-    if (sys.env.getOrElse("SPARK_GRAFT_JACCARD_SHJ", "1") != "0")
-      df.hint("shuffle_hash")
-    else df
-
+    * shingle table instead).
+    *
+    * Join strategy: a `shuffle_hash` hint on the self-join's build side
+    * skips both sides' sorts — measured 1.2-1.6× on every one-shot
+    * jaccardPairs rider (q133/q134/q135/q92/q84 in the r14 optimization
+    * A/B; the same rewrite applied GLOBALLY regressed iterative
+    * classes, so it is a targeted hint, not a session config). 100 TB
+    * posture: the build side is one hash partition of the digest-thin
+    * (8-byte hash + 8-byte id) survivor table — per-key fanout is
+    * df-capped (maxDf), so no single key can blow a partition, and
+    * partition count scales with the cluster's shuffle parallelism. In
+    * the UNCAPPED (maxDf <= 0) branch that df-bound argument does NOT
+    * hold: the caller is asserting its corpus has no stop-phrase-hot
+    * shingles (the registered uncapped riders run on digest-sized
+    * fixtures), and SHJ's build side cannot spill a single giant key
+    * gracefully — an uncapped deployment on an unknown corpus should
+    * set maxDf. */
   def jaccardPairs(shingled: DataFrame, threshold: Double,
       maxDf: Int = 0): DataFrame = {
     // Uncapped, the per-doc set size comes straight off the array
@@ -404,7 +397,7 @@ object Dedup {
         .localCheckpoint(true)
       val sizes = surv.groupBy("doc_id").agg(count(lit(1)).as("n"))
       val pairs = surv.as("a")
-        .join(shjHint(surv.as("b")),
+        .join(surv.as("b").hint("shuffle_hash"),
           col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
         .agg(count(lit(1)).as("inter"))
@@ -423,7 +416,7 @@ object Dedup {
       val sized = shingled.select(col("doc_id"),
         size(col("shs")).cast("long").as("n"), explode(col("shs")).as("h"))
       sized.as("a")
-        .join(shjHint(sized.as("b")),
+        .join(sized.as("b").hint("shuffle_hash"),
           col("a.h") === col("b.h") && col("a.doc_id") < col("b.doc_id"))
         .groupBy(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
           col("a.n").as("na"), col("b.n").as("nb"))
@@ -881,42 +874,44 @@ object Dedup {
       .unionAll(pairsP.select(col("doc_b").as("src"), col("doc_a").as("dst")))
       .repartition(loopParts, col("src")).sortWithinPartitions("src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // initialization fuses the first propagation round: label(v) =
-    // min(v, min neighbor) straight off the edge aggregation (the
-    // identity-label round it replaces cost a full join+agg pass and
-    // made the first jump a no-op).
-    var labels = edges.groupBy(col("src"))
-      .agg(min(col("dst")).as("mn"))
-      .select(col("src").as("id"), least(col("src"), col("mn")).as("label"))
-      .localCheckpoint(true)
-    var iter = 0
-    var converged = false
-    while (!converged && iter < maxIters) {
-      val propagated = edges
-        .join(labels.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"), col("label"))
-      // pointer doubling: v also adopts its label's current label —
-      // labels always name component members, so the minimum is
-      // preserved while chains halve every round (non-identity from
-      // the fused init, so the jump is useful immediately).
-      val jumped = labels.as("x")
-        .join(labels.as("y"), col("x.label") === col("y.id"))
-        .select(col("x.id").as("id"), col("y.label").as("label"))
-      // `own` tags the vertex's current label; min over own rows IS the
-      // previous label (labels has one row per id), so the new and old
-      // label land in the same aggregated, checkpointed frame.
-      val next = labels.withColumn("own", lit(true))
-        .unionAll(propagated.withColumn("own", lit(false)))
-        .unionAll(jumped.withColumn("own", lit(false)))
-        .groupBy("id")
-        .agg(min("label").as("label"),
-          min(when(col("own"), col("label"))).as("prev"))
+    val (labels, iter) = try {
+      // initialization fuses the first propagation round: label(v) =
+      // min(v, min neighbor) straight off the edge aggregation (the
+      // identity-label round it replaces cost a full join+agg pass and
+      // made the first jump a no-op).
+      var labels = edges.groupBy(col("src"))
+        .agg(min(col("dst")).as("mn"))
+        .select(col("src").as("id"), least(col("src"), col("mn")).as("label"))
         .localCheckpoint(true)
-      converged = next.filter(col("label") =!= col("prev")).isEmpty
-      labels = next.select("id", "label")
-      iter += 1
-    }
-    edges.unpersist(false)
+      var iter = 0
+      var converged = false
+      while (!converged && iter < maxIters) {
+        val propagated = edges
+          .join(labels.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"), col("label"))
+        // pointer doubling: v also adopts its label's current label —
+        // labels always name component members, so the minimum is
+        // preserved while chains halve every round (non-identity from
+        // the fused init, so the jump is useful immediately).
+        val jumped = labels.as("x")
+          .join(labels.as("y"), col("x.label") === col("y.id"))
+          .select(col("x.id").as("id"), col("y.label").as("label"))
+        // `own` tags the vertex's current label; min over own rows IS the
+        // previous label (labels has one row per id), so the new and old
+        // label land in the same aggregated, checkpointed frame.
+        val next = labels.withColumn("own", lit(true))
+          .unionAll(propagated.withColumn("own", lit(false)))
+          .unionAll(jumped.withColumn("own", lit(false)))
+          .groupBy("id")
+          .agg(min("label").as("label"),
+            min(when(col("own"), col("label"))).as("prev"))
+          .localCheckpoint(true)
+        converged = next.filter(col("label") =!= col("prev")).isEmpty
+        labels = next.select("id", "label")
+        iter += 1
+      }
+      (labels, iter)
+    } finally edges.unpersist(false)
     // re-spread the result: consumers that join/elect over the label
     // table (q143's winner election, q151's lineage joins) would
     // otherwise inherit the loop's narrow width for their own map

@@ -108,28 +108,30 @@ object Paths {
     val e = e0
       .repartition(loopParts, col("src")).sortWithinPartitions("src")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var dist = seeds.select(col("id")).distinct()
-      .withColumn("dist", lit(0L))
-      .localCheckpoint(true)
-    var frontier = dist.select("id")
-    var h = 1
-    var exhausted = false
-    while (h <= maxHops && !exhausted) {
-      val fresh = e
-        .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
-        .select(col("dst").as("id"))
-        .distinct()
-        .join(dist.select("id"), Seq("id"), "left_anti")
-        .withColumn("dist", lit(h.toLong))
+    val dist = try {
+      var dist = seeds.select(col("id")).distinct()
+        .withColumn("dist", lit(0L))
         .localCheckpoint(true)
-      if (fresh.isEmpty) exhausted = true
-      else {
-        dist = dist.unionByName(fresh).localCheckpoint(true)
-        frontier = fresh.select("id")
+      var frontier = dist.select("id")
+      var h = 1
+      var exhausted = false
+      while (h <= maxHops && !exhausted) {
+        val fresh = e
+          .join(frontier.withColumnRenamed("id", "src"), Seq("src"))
+          .select(col("dst").as("id"))
+          .distinct()
+          .join(dist.select("id"), Seq("id"), "left_anti")
+          .withColumn("dist", lit(h.toLong))
+          .localCheckpoint(true)
+        if (fresh.isEmpty) exhausted = true
+        else {
+          dist = dist.unionByName(fresh).localCheckpoint(true)
+          frontier = fresh.select("id")
+        }
+        h += 1
       }
-      h += 1
-    }
-    e.unpersist(false)
+      dist
+    } finally e.unpersist(false)
     // re-spread the distance table: consumers (q215's reach rollup,
     // q214's projection) would otherwise inherit the loop's narrow
     // width for their own map stages — the same consumer-width

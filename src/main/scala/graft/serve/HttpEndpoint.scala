@@ -1,12 +1,9 @@
 package graft.serve
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
-
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.serve.Routes.{Reply, Route}
 import graft.sources.Tables
 
 /** Engine-side HTTP query endpoints — SURVEY §2.1's S7, the
@@ -39,11 +36,6 @@ import graft.sources.Tables
   * recompute on demand, bytes out — is what is implemented and spec'd
   * with real HTTP round-trips (HttpEndpointSpec). */
 object HttpEndpoint {
-
-  final class Handle private[HttpEndpoint] (server: HttpServer) {
-    def port: Int = server.getAddress.getPort
-    def stop(): Unit = server.stop(0)
-  }
 
   /** The testing-trend daily input (q55's synthesis rules, plus the
     * chart label) — shared so the HTTP body and the spec build the
@@ -93,61 +85,17 @@ object HttpEndpoint {
         q("q317_forecast_chart").collect().head.getString(0)))
   }
 
-  /** Start the endpoint on `port` (0 = ephemeral). Blocking handlers
-    * on the server's default executor; stop with `Handle.stop()`. */
+  /** Start the endpoint on `port` (0 = ephemeral); stop with
+    * `Handle.stop()`. Request order: [[Routes]]. */
   def start(spark: SparkSession, dir: String, port: Int = 0): Handle = {
-    val routes = chartRoutes(spark, dir)
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-
-    def respond(ex: HttpExchange, code: Int, ctype: String,
-        body: Array[Byte]): Unit = {
-      ex.getResponseHeaders.set("Content-Type", ctype)
-      ex.sendResponseHeaders(code, body.length)
-      ex.getResponseBody.write(body)
-      ex.close()
-    }
-    // com.sun.net.httpserver matches contexts by LONGEST STRING PREFIX,
-    // so without an exact-path check /todayfoo and /today/anything land
-    // in the /today handler with a 200 instead of reaching the root 404
-    // fallback. Each handler therefore re-checks the literal route
-    // (null `route` = the fallback context, which accepts any path).
-    def handle(route: String)(f: HttpExchange => Unit): HttpHandler =
-      new HttpHandler {
-        override def handle(ex: HttpExchange): Unit =
-          try {
-            if (route != null && ex.getRequestURI.getPath != route)
-              respond(ex, 404, "text/plain",
-                "not found".getBytes(StandardCharsets.UTF_8))
-            else if (ex.getRequestMethod != "GET")
-              respond(ex, 405, "text/plain", "GET only".getBytes(StandardCharsets.UTF_8))
-            else f(ex)
-          } catch {
-            case e: Throwable =>
-              respond(ex, 500, "text/plain",
-                String.valueOf(e.getMessage).getBytes(StandardCharsets.UTF_8))
-          }
-      }
-
-    routes.foreach { case (name, body) =>
-      server.createContext(s"/$name", handle(s"/$name") { ex =>
-        respond(ex, 200, "application/json",
-          body().getBytes(StandardCharsets.UTF_8))
-      })
-      server.createContext(s"/charts/$name.png", handle(s"/charts/$name.png") { ex =>
-        respond(ex, 200, "image/png", graft.render.ChartPng.render(body()))
-      })
-    }
-    server.createContext("/refresh", handle("/refresh") { ex =>
-      routes.values.foreach(_.apply())
-      respond(ex, 200, "application/json",
-        s"""{"recomputed":${routes.size}}""".getBytes(StandardCharsets.UTF_8))
+    val charts = chartRoutes(spark, dir)
+    Routes.serve(port, charts.toSeq.flatMap { case (name, body) =>
+      Seq(Route(s"/$name")(_ => Reply.json(body())),
+        Route(s"/charts/$name.png")(_ =>
+          Reply(200, "image/png", graft.render.ChartPng.render(body()))))
+    } :+ Route("/refresh") { _ =>
+      charts.values.foreach(_.apply())
+      Reply.json(s"""{"recomputed":${charts.size}}""")
     })
-    // everything else: 404 (the root context catches unmatched paths)
-    server.createContext("/", handle(null) { ex =>
-      respond(ex, 404, "text/plain",
-        "not found".getBytes(StandardCharsets.UTF_8))
-    })
-    server.start()
-    new Handle(server)
   }
 }

@@ -1,14 +1,11 @@
 package graft.serve
 
-import java.net.InetSocketAddress
-import java.nio.charset.StandardCharsets
-
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
+import graft.serve.Routes.{Reply, Route}
 import graft.state.MaterializedViews
 
 /** The serving-row computation shared by the ORACLED batch query
@@ -77,13 +74,14 @@ object LiveServing {
   * from parquet per GET; THIS endpoint serves
   * [[MaterializedViews.serveDailyTotalsAsView]]'s global temp view
   * while the stream that maintains it is RUNNING, so a GET after a
-  * micro-batch reflects that batch.
+  * micro-batch reflects that batch. Every server here answers 503
+  * until the stream has materialized its first micro-batch (request
+  * order: [[Routes]]).
   *
-  * Routes (same exact-path discipline as [[HttpEndpoint]]):
+  * Routes of [[start]]:
   *  - `GET /state/<key>` — the one serving row for `<key>`
   *    ([[LiveServing.servingRows]] over the live view, filtered to the
-  *    key): 404 for an unknown key, 503 before the first micro-batch
-  *    materializes the view;
+  *    key): 404 for an unknown key;
   *  - `GET /summary` — every key's serving row, sorted by total
   *    descending (the reference's W1 ranking sort).
   *
@@ -93,10 +91,7 @@ object LiveServing {
   * that view, never over the event stream. */
 object LiveEndpoint {
 
-  final class Handle private[LiveEndpoint] (server: HttpServer) {
-    def port: Int = server.getAddress.getPort
-    def stop(): Unit = server.stop(0)
-  }
+  type Handle = graft.serve.Handle
 
   private def esc(s: String): String = s.flatMap {
     case '"' => "\\\""
@@ -120,63 +115,30 @@ object LiveEndpoint {
         col("delta").cast("double").as("delta"),
         col("doubling_rate"))
 
+  /** The live servers' readiness: the maintaining stream has created
+    * `global_temp.<viewName>`. */
+  private def viewReady(spark: SparkSession, viewName: String): () => Boolean =
+    () => spark.catalog.tableExists(s"global_temp.$viewName")
+
+  /** The first row as a JSON body; 404 when there is none. */
+  private def first(rows: Array[Row])(json: Row => String): Reply =
+    rows.headOption.fold(Reply.notFound)(r => Reply.json(json(r)))
+
   /** Start serving `global_temp.<viewName>` (maintained by a running
     * [[MaterializedViews.serveDailyTotalsAsView]] stream) on `port`
     * (0 = ephemeral). */
   def start(spark: SparkSession, viewName: String,
       keyCol: String = "event_type", port: Int = 0): Handle = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-
-    def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-      val b = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type",
-        if (code == 200) "application/json" else "text/plain")
-      ex.sendResponseHeaders(code, b.length)
-      ex.getResponseBody.write(b)
-      ex.close()
-    }
-    def viewReady: Boolean =
-      spark.catalog.tableExists(s"global_temp.$viewName")
-    def handle(f: HttpExchange => Unit): HttpHandler = new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        try {
-          if (ex.getRequestMethod != "GET") respond(ex, 405, "GET only")
-          else if (!viewReady)
-            // the stream has not materialized a first micro-batch yet —
-            // a retryable serving condition, not a routing failure
-            respond(ex, 503, "view not ready")
-          else f(ex)
-        } catch {
-          case e: Throwable => respond(ex, 500, String.valueOf(e.getMessage))
-        }
-    }
-
-    server.createContext("/state/", handle { ex =>
-      val path = ex.getRequestURI.getPath
-      val key = path.stripPrefix("/state/")
-      if (key.isEmpty || key.contains('/')) respond(ex, 404, "not found")
-      else {
-        val rows = liveRows(spark, viewName, keyCol)
-          .filter(col(keyCol) === key).collect()
-        if (rows.isEmpty) respond(ex, 404, "not found")
-        else respond(ex, 200, rowJson(keyCol, rows.head))
-      }
-    })
-    server.createContext("/summary", handle { ex =>
-      if (ex.getRequestURI.getPath != "/summary") respond(ex, 404, "not found")
-      else {
-        val rows = liveRows(spark, viewName, keyCol)
-          .orderBy(col("total").desc, col(keyCol)).collect()
-        respond(ex, 200,
-          rows.map(rowJson(keyCol, _)).mkString("[", ",", "]"))
-      }
-    })
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        respond(ex, 404, "not found")
-    })
-    server.start()
-    new Handle(server)
+    def rows = liveRows(spark, viewName, keyCol)
+    Routes.serve(port, Seq(
+      Route("/state/*") { req =>
+        first(rows.filter(col(keyCol) === req.args.head).collect())(
+          rowJson(keyCol, _))
+      },
+      Route("/summary") { _ =>
+        Reply.jsonArray(rows.orderBy(col("total").desc, col(keyCol))
+          .collect().map(rowJson(keyCol, _)))
+      }), viewReady(spark, viewName))
   }
 
   private def districtJson(r: Row): String =
@@ -195,62 +157,30 @@ object LiveEndpoint {
     *    row ([[LiveServing.districtRows]]: latest day's count +
     *    lifetime total), 404 unknown key or malformed id;
     *  - `GET /district/<user_id>` — all of the key-1 group's rows,
-    *    event_type-ascending (the bot's per-state district listing);
-    *  - 503 before the first micro-batch, 405 non-GET, exact-path
-    *    404s elsewhere.
+    *    event_type-ascending (the bot's per-state district listing).
     * Same scale posture as [[start]]: the view is (keys × days) —
     * serving-sized — and each GET runs ONE aggregate over it,
     * collecting only final serving rows. */
   def startDistrict(spark: SparkSession, viewName: String,
       port: Int = 0): Handle = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-      val b = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type",
-        if (code == 200) "application/json" else "text/plain")
-      ex.sendResponseHeaders(code, b.length)
-      ex.getResponseBody.write(b)
-      ex.close()
-    }
-    def rows: DataFrame =
-      LiveServing.districtRows(spark.table(s"global_temp.$viewName"),
-        Seq("user_id", "event_type"))
-        .select(col("user_id").cast("long"), col("event_type"),
-          col("day"), col("n").cast("long"), col("total_n").cast("long"))
-    server.createContext("/district/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        try {
-          if (ex.getRequestMethod != "GET") respond(ex, 405, "GET only")
-          else if (!spark.catalog.tableExists(s"global_temp.$viewName"))
-            respond(ex, 503, "view not ready")
-          else {
-            val parts = ex.getRequestURI.getPath.stripPrefix("/district/")
-              .split("/", -1).toSeq
-            (parts, parts.headOption.flatMap(_.toLongOption)) match {
-              case (Seq(_, district), Some(uid)) if district.nonEmpty =>
-                val got = rows.filter(col("user_id") === uid &&
-                  col("event_type") === district).collect()
-                if (got.isEmpty) respond(ex, 404, "not found")
-                else respond(ex, 200, districtJson(got.head))
-              case (Seq(_), Some(uid)) =>
-                val got = rows.filter(col("user_id") === uid)
-                  .orderBy("event_type").collect()
-                if (got.isEmpty) respond(ex, 404, "not found")
-                else respond(ex, 200,
-                  got.map(districtJson).mkString("[", ",", "]"))
-              case _ => respond(ex, 404, "not found")
-            }
-          }
-        } catch {
-          case e: Throwable => respond(ex, 500, String.valueOf(e.getMessage))
-        }
-    })
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        respond(ex, 404, "not found")
-    })
-    server.start()
-    new Handle(server)
+    // the request's user id's serving rows; None for a malformed id
+    def userRows(req: Routes.Request): Option[DataFrame] =
+      req.args.head.toLongOption.map(uid =>
+        LiveServing.districtRows(spark.table(s"global_temp.$viewName"),
+          Seq("user_id", "event_type"))
+          .select(col("user_id").cast("long"), col("event_type"),
+            col("day"), col("n").cast("long"), col("total_n").cast("long"))
+          .filter(col("user_id") === uid))
+    Routes.serve(port, Seq(
+      Route("/district/*/*") { req =>
+        userRows(req).fold(Reply.notFound)(df => first(
+          df.filter(col("event_type") === req.args(1)).collect())(districtJson))
+      },
+      Route("/district/*") { req =>
+        userRows(req).map(_.orderBy("event_type").collect())
+          .filter(_.nonEmpty)
+          .fold(Reply.notFound)(got => Reply.jsonArray(got.map(districtJson)))
+      }), viewReady(spark, viewName))
   }
 
   private def sketchJson(r: Row): String =
@@ -260,56 +190,22 @@ object LiveEndpoint {
   /** Live distinct-count dashboard over a view maintained by
     * [[graft.state.MaterializedViews.serveKmvAsView]]:
     *  - `GET /distinct/<key>` — the key's latest KMV reading
-    *    (saturation size + cardinality estimate), 404 unknown key,
-    *    503 before the first micro-batch;
+    *    (saturation size + cardinality estimate), 404 unknown key;
     *  - `GET /distinct` — every key by estimate descending.
     * The view holds one ≤(k+3)-field row per key, so a GET collects
     * kilobytes regardless of how many billions of rows the stream has
     * folded — the sketch IS the serving artifact. */
   def startDistinct(spark: SparkSession, viewName: String,
       port: Int = 0): Handle = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-      val b = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type",
-        if (code == 200) "application/json" else "text/plain")
-      ex.sendResponseHeaders(code, b.length)
-      ex.getResponseBody.write(b)
-      ex.close()
-    }
     def rows: DataFrame = spark.table(s"global_temp.$viewName")
       .select(col("key"), col("nSk"), col("est"))
-    def handle(f: HttpExchange => Unit): HttpHandler = new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        try {
-          if (ex.getRequestMethod != "GET") respond(ex, 405, "GET only")
-          else if (!spark.catalog.tableExists(s"global_temp.$viewName"))
-            respond(ex, 503, "view not ready")
-          else f(ex)
-        } catch {
-          case e: Throwable => respond(ex, 500, String.valueOf(e.getMessage))
-        }
-    }
-    server.createContext("/distinct", handle { ex =>
-      val path = ex.getRequestURI.getPath
-      if (path == "/distinct")
-        respond(ex, 200, rows.orderBy(col("est").desc, col("key")).collect()
-          .map(sketchJson).mkString("[", ",", "]"))
-      else {
-        val key = path.stripPrefix("/distinct/")
-        if (key.isEmpty || key.contains('/')) respond(ex, 404, "not found")
-        else {
-          val got = rows.filter(col("key") === key).collect()
-          if (got.isEmpty) respond(ex, 404, "not found")
-          else respond(ex, 200, sketchJson(got.head))
-        }
-      }
-    })
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        respond(ex, 404, "not found")
-    })
-    server.start()
-    new Handle(server)
+    Routes.serve(port, Seq(
+      Route("/distinct") { _ =>
+        Reply.jsonArray(rows.orderBy(col("est").desc, col("key")).collect()
+          .map(sketchJson))
+      },
+      Route("/distinct/*") { req =>
+        first(rows.filter(col("key") === req.args.head).collect())(sketchJson)
+      }), viewReady(spark, viewName))
   }
 }

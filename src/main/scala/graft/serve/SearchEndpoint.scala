@@ -1,13 +1,12 @@
 package graft.serve
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets
 
-import com.sun.net.httpserver.{HttpExchange, HttpHandler, HttpServer}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import graft.operators.TextIndex
+import graft.serve.Routes.{Reply, Route}
 
 /** PARAMETERIZED retrieval serving over the persisted text index —
   * the search face the fixed-route layers ([[HttpEndpoint]]'s charts,
@@ -21,10 +20,9 @@ import graft.operators.TextIndex
   *
   * Bodies are JSON arrays of {doc_id, score_u6, rn} — the SAME exact
   * integer micros the oracled q179/q276 emit, so the spec pins the
-  * HTTP body against the registered query machinery directly. Request
-  * discipline: 400 on a missing/empty `q`, exact-path 404 elsewhere
-  * (the r10 advice's prefix-matching lesson), terms split on
-  * whitespace after standard URL decoding.
+  * HTTP body against the registered query machinery directly. A
+  * missing or empty `q` is a 400; terms split on whitespace after
+  * standard URL decoding. Request order: [[Routes]].
   *
   * Scale posture: each GET is one Spark job whose plan partition-
   * prunes to the query terms' buckets (exact path) or joins the
@@ -34,20 +32,13 @@ import graft.operators.TextIndex
   * contract. */
 object SearchEndpoint {
 
-  final class Handle private[SearchEndpoint] (server: HttpServer) {
-    def port: Int = server.getAddress.getPort
-    def stop(): Unit = server.stop(0)
-  }
-
-  private def parseQ(ex: HttpExchange): Option[Seq[String]] = {
-    val raw = Option(ex.getRequestURI.getRawQuery).getOrElse("")
-    raw.split("&").collectFirst {
+  private def parseQ(rawQuery: Option[String]): Option[Seq[String]] =
+    rawQuery.getOrElse("").split("&").collectFirst {
       case p if p.startsWith("q=") =>
         java.net.URLDecoder
           .decode(p.stripPrefix("q="), StandardCharsets.UTF_8)
           .split("\\s+").filter(_.nonEmpty).toSeq
     }.filter(_.nonEmpty)
-  }
 
   private[graft] def hits(spark: SparkSession, root: String,
       terms: Seq[String], fuzzy: Boolean): Seq[(Long, Long, Long)] = {
@@ -68,46 +59,17 @@ object SearchEndpoint {
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
   }
 
-  private def json(rows: Seq[(Long, Long, Long)]): String =
-    rows.map { case (d, s, rn) =>
-      s"""{"doc_id":$d,"score_u6":$s,"rn":$rn}"""
-    }.mkString("[", ",", "]")
-
   /** Serve the index at `root` on `port` (0 = ephemeral). The index
     * must already be built — probe-only serving fails fast otherwise
     * (the [[TextIndex]] readiness contract). */
   def start(spark: SparkSession, root: String, port: Int = 0): Handle = {
-    val server = HttpServer.create(new InetSocketAddress(port), 0)
-    def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-      val b = body.getBytes(StandardCharsets.UTF_8)
-      ex.getResponseHeaders.set("Content-Type",
-        if (code == 200) "application/json" else "text/plain")
-      ex.sendResponseHeaders(code, b.length)
-      ex.getResponseBody.write(b)
-      ex.close()
-    }
-    def route(path: String, fuzzy: Boolean): HttpHandler = new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        try {
-          if (ex.getRequestMethod != "GET") respond(ex, 405, "GET only")
-          else if (ex.getRequestURI.getPath != path) respond(ex, 404, "not found")
-          else parseQ(ex) match {
-            case None => respond(ex, 400, "missing or empty q parameter")
-            case Some(terms) =>
-              respond(ex, 200, json(hits(spark, root, terms, fuzzy)))
-          }
-        } catch {
-          case e: Throwable => respond(ex, 500, String.valueOf(e.getMessage))
-        }
-    }
-    // longest-prefix context matching: register the NESTED route first
-    server.createContext("/search/fuzzy", route("/search/fuzzy", fuzzy = true))
-    server.createContext("/search", route("/search", fuzzy = false))
-    server.createContext("/", new HttpHandler {
-      override def handle(ex: HttpExchange): Unit =
-        respond(ex, 404, "not found")
-    })
-    server.start()
-    new Handle(server)
+    def search(fuzzy: Boolean)(req: Routes.Request): Reply =
+      parseQ(req.rawQuery).fold(Reply.text(400, "missing or empty q parameter"))(
+        terms => Reply.jsonArray(hits(spark, root, terms, fuzzy).map {
+          case (d, s, rn) => s"""{"doc_id":$d,"score_u6":$s,"rn":$rn}"""
+        }))
+    Routes.serve(port, Seq(
+      Route("/search")(search(fuzzy = false)),
+      Route("/search/fuzzy")(search(fuzzy = true))))
   }
 }

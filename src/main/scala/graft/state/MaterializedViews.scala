@@ -2,6 +2,7 @@ package graft.state
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** S1 / §1.1 — the "KTable" layer: latest-value-per-key views of a
   * record stream, the load-bearing piece that lets interactive queries
@@ -62,14 +63,21 @@ object MaterializedViews {
     * is convenient in specs, not because anything in the engine
     * should route here. */
   def serveAsView(streaming: DataFrame, keyCols: Seq[String], tsCol: String,
-      viewName: String): org.apache.spark.sql.streaming.StreamingQuery = {
-    val latest = latestPerKey(streaming, keyCols, tsCol)
-    latest.writeStream
-      .outputMode("update")
-      .foreachBatch { (changed: DataFrame, _: Long) =>
-        upsertIntoGlobalView(changed, keyCols, viewName)
-      }
-      .start()
+      viewName: String): StreamingQuery =
+    upsertStream(latestPerKey(streaming, keyCols, tsCol), "update", keyCols,
+      viewName)
+
+  /** Start the stream that keeps `global_temp.<viewName>` current:
+    * every micro-batch of `changed` rows (one per key) is upserted by
+    * [[upsertIntoGlobalView]]. */
+  private def upsertStream(changed: DataFrame, outputMode: String,
+      keyCols: Seq[String], viewName: String,
+      checkpointLocation: Option[String] = None): StreamingQuery = {
+    val w = changed.writeStream.outputMode(outputMode)
+    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
+    w.foreachBatch { (batch: DataFrame, _: Long) =>
+      upsertIntoGlobalView(batch, keyCols, viewName)
+    }.start()
   }
 
   /** The foreachBatch body shared by the view-maintaining streams:
@@ -108,14 +116,9 @@ object MaterializedViews {
     * caveat as [[serveAsView]]; production routes through
     * [[KeyedStore.serveToStore]]. */
   def serveKmvAsView(hashes: org.apache.spark.sql.Dataset[graft.streaming.KeyedHash],
-      k: Int, viewName: String): org.apache.spark.sql.streaming.StreamingQuery =
-    graft.streaming.KmvTracker.track(hashes, k).toDF()
-      .writeStream.outputMode("append")
-      .foreachBatch { (changed: DataFrame, _: Long) =>
-        upsertIntoGlobalView(changed.select("key", "nSk", "hK", "est"),
-          Seq("key"), viewName)
-      }
-      .start()
+      k: Int, viewName: String): StreamingQuery =
+    upsertStream(graft.streaming.KmvTracker.track(hashes, k).toDF()
+      .select("key", "nSk", "hK", "est"), "append", Seq("key"), viewName)
 
   /** Continuously-maintained DAILY TOTALS view — the reference bot's
     * per-day stats KTables (StateStoresManager.java:121-186 keeps
@@ -137,18 +140,13 @@ object MaterializedViews {
     * writeStream checkpoint via `checkpointLocation`. */
   def serveDailyTotalsAsView(streaming: DataFrame, keyCol: String,
       tsCol: String, valueCol: String, viewName: String,
-      checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointLocation: Option[String] = None): StreamingQuery = {
     val daily = streaming
       .groupBy(window(col(tsCol), "1 day").as("w"), col(keyCol))
       .agg(sum(col(valueCol)).as("total"))
       .select(col(keyCol), to_date(col("w.start")).as("day"), col("total"))
-    val w = daily.writeStream.outputMode("update")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (changed: DataFrame, _: Long) =>
-        upsertIntoGlobalView(changed, Seq(keyCol, "day"), viewName)
-      }
-      .start()
+    upsertStream(daily, "update", Seq(keyCol, "day"), viewName,
+      checkpointLocation)
   }
 
   /** Continuously-maintained COMPOSITE-KEY daily counts view — the
@@ -165,18 +163,13 @@ object MaterializedViews {
     * is serving-sized, unwatermarked by design for full history. */
   def serveDailyCountsAsView(streaming: DataFrame, keyCols: Seq[String],
       tsCol: String, viewName: String,
-      checkpointLocation: Option[String] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
+      checkpointLocation: Option[String] = None): StreamingQuery = {
     val daily = streaming
       .groupBy(window(col(tsCol), "1 day").as("w") +: keyCols.map(col): _*)
       .agg(count(lit(1)).as("n"))
       .select(keyCols.map(col) ++
         Seq(to_date(col("w.start")).as("day"), col("n")): _*)
-    val w = daily.writeStream.outputMode("update")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (changed: DataFrame, _: Long) =>
-        upsertIntoGlobalView(changed, keyCols :+ "day", viewName)
-      }
-      .start()
+    upsertStream(daily, "update", keyCols :+ "day", viewName,
+      checkpointLocation)
   }
 }

@@ -134,17 +134,26 @@ class HttpEndpointSpec extends SparkSpec {
 
   test("unknown paths 404, non-GET 405") {
     assert(get("/nope").statusCode() == 404)
-    // com.sun.net.httpserver context matching is longest-string-PREFIX:
-    // without the handlers' exact-path check these land in /today with
-    // a 200 (ADVICE r10)
     assert(get("/todayfoo").statusCode() == 404)
     assert(get("/today/anything").statusCode() == 404)
     assert(get("/charts/today.pngx").statusCode() == 404)
-    val post = client.send(
-      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${handle.port}/today"))
+    def post(path: String) = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${handle.port}$path"))
         .POST(HttpRequest.BodyPublishers.noBody()).build(),
       HttpResponse.BodyHandlers.ofByteArray())
-    assert(post.statusCode() == 405)
+    assert(post("/today").statusCode() == 405)
+    // an unknown path is a 404 whatever the method
+    assert(post("/nope").statusCode() == 404)
+    // a failing query answers 500 text/plain
+    val broken = HttpEndpoint.start(spark, "/nonexistent/sf_dir")
+    try {
+      val r = client.send(
+        HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:${broken.port}/today"))
+          .GET().build(),
+        HttpResponse.BodyHandlers.ofByteArray())
+      assert(r.statusCode() == 500)
+      assert(r.headers().firstValue("Content-Type").orElse("") == "text/plain")
+    } finally broken.stop()
   }
 
   test("handle stops cleanly (runs last — relies on suite order)") {

@@ -113,9 +113,16 @@ class KmvStreamSpec extends SparkSpec {
         .map(_.group(1).toLong).toSeq
       assert(ests.size == all.map(_.key).distinct.size)
       assert(ests == ests.sortBy(-_))
-      // routing discipline: unknown key and nested paths are 404
+      // routing discipline: unknown key and nested paths are 404,
+      // non-GET 405
       assert(get(handle.port, "/distinct/nope").statusCode() == 404)
       assert(get(handle.port, s"/distinct/$key/x").statusCode() == 404)
+      val post = client.send(
+        java.net.http.HttpRequest
+          .newBuilder(java.net.URI.create(s"http://127.0.0.1:${handle.port}/distinct"))
+          .POST(java.net.http.HttpRequest.BodyPublishers.noBody()).build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(post.statusCode() == 405)
     } finally { handle.stop(); q.stop() }
   }
 

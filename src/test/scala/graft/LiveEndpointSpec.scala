@@ -42,8 +42,11 @@ class LiveEndpointSpec extends SparkSpec {
       "event_type", "ts", "value", view)
     val handle = LiveEndpoint.start(spark, view)
     try {
-      // before the first micro-batch there is no view: retryable 503
+      // before the first micro-batch there is no view: retryable 503,
+      // but a path no route matches is still a 404
       assert(get(handle, "/state/alpha").statusCode() == 503)
+      assert(get(handle, "/summaryfoo").statusCode() == 404)
+      assert(get(handle, "/state/a/b").statusCode() == 404)
 
       // batch 1: alpha day-1 total 15 (10+5), beta day-1 total 7.
       // First-day delta measures against the zero-initialized aggregate

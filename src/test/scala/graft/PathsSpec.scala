@@ -78,6 +78,17 @@ class PathsSpec extends SparkSpec {
     assert(d === bruteBfs(g, Seq(0L), 2))
   }
 
+  test("a query that throws inside the loop releases the edge cache") {
+    spark.catalog.clearCache()
+    val e = (g ++ g.map(_.swap)).toDF("src", "dst")
+    // the first distance table's eager checkpoint evaluates this
+    val seeds = Seq(0L).toDF("id")
+      .select(expr("IF(id >= 0, raise_error('seed boom'), id)").as("id"))
+    intercept[Exception](Paths.boundedDistances(e, seeds, 2))
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "the persisted edge cache outlived the failed query")
+  }
+
   test("q214 layers are consistent: one seed, a populated first layer") {
     val d = GraphQueries.graphDistances.fn(spark, sf)
       .groupBy("dist").count()
