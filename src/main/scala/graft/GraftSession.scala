@@ -8,6 +8,17 @@ import org.apache.spark.sql.SparkSession
   * Scale posture: shuffle partitions default to the local core count here,
   * but on a real cluster these settings are safe — AQE coalesces and
   * re-plans skewed joins at runtime.
+  *
+  * Invariant: no Hadoop `file:` operation forks a process. Without the
+  * native-hadoop library the stock local file system runs `chmod` on
+  * every create/mkdirs and `readlink` on every FileContext rename, each
+  * a fork of this JVM; a micro-batch does dozens (offsets and commits
+  * logs, RocksDB checkpoint files, their `.crc` and checksum files).
+  * `fs.file.impl` and `fs.AbstractFileSystem.file.impl` name
+  * [[graft.sources.ForkFreeLocalFileSystem]] and
+  * [[graft.sources.ForkFreeLocalFs]] instead. Measured on perfbench
+  * live-loop (4 cores): walCommit 72 → 4 ms and RocksDB commit 866 →
+  * 198 ms per batch, freshness geomean 2.34 → 1.42 s (median of 12 pairs).
   */
 object GraftSession {
 
@@ -45,6 +56,11 @@ object GraftSession {
       // checkpoints) — the analog of the reference's RocksDB stores
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      // file: I/O without a forked chmod/readlink (see the invariant above)
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.sources.ForkFreeLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.sources.ForkFreeLocalFs].getName)
       .config("spark.ui.enabled", "false")
 
   /** Default parallelism: the driver environment's CPU count (capped at

@@ -593,21 +593,17 @@ object StreamBench {
   /** Feed `batches` one-window micro-batches through
     * [[graft.streaming.HeavyHitters.windowedTopK]] (two chained
     * transformWithState stages: salted Misra-Gries shards → per-window
-    * merge, RocksDB state) plus a flush batch that closes every
-    * window, and time the processing, warmup excluded. Accounting:
-    * every emitted (window, key) estimate must satisfy the Misra-Gries
-    * bound est ≤ true ≤ est + maxErr against exact counts of the fed
-    * rows, and each window's 3 hottest true keys must be present in
-    * its emitted top-k (they sit far above the error bound by
+    * merge, state in the session's RocksDB provider) plus a flush batch
+    * that closes every window, and time the processing, warmup excluded.
+    * Accounting: every emitted (window, key) estimate must satisfy the
+    * Misra-Gries bound est ≤ true ≤ est + maxErr against exact counts of
+    * the fed rows, and each window's 3 hottest true keys must be present
+    * in its emitted top-k (they sit far above the error bound by
     * construction). */
   def runHeavyHitters(spark: SparkSession, batchRows: Int,
       batches: Int): Result = {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(provKey)
-    spark.conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
     val ms = MemoryStream[(java.sql.Timestamp, String)]
     val name = s"sb_hh_${batchRows}_$batches"
     val q = graft.streaming.HeavyHitters.windowedTopK(
@@ -657,13 +653,7 @@ object StreamBench {
           s"window $ws lost true heavy hitter $k (got $got)"))
       }
       Result(batchRows, batches, 1007, total, total, sec, total / sec)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(provKey, v)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    } finally q.stop()
   }
 
   private def runsJson(results: Seq[Result]): String = results.map { r =>
