@@ -83,8 +83,11 @@ object GraftSession {
     * whichever queries run LATE — the r9 driver record measured q91 at
     * 15.29s in-process vs 0.98s isolated for exactly this reason.
     * Called between Bench queries so each measurement sees a clean
-    * block manager; safe anywhere because graft queries never rely on
-    * cross-query persisted state. */
+    * block manager. Safe anywhere, running streams included: graft
+    * queries never rely on cross-query persisted state, and the
+    * `global_temp` serving views hold their rows on the driver
+    * ([[graft.state.MaterializedViews.upsertIntoGlobalView]]), not in
+    * pinned blocks. */
   def releaseCaches(spark: SparkSession): Unit = {
     spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
     spark.catalog.clearCache()

@@ -86,9 +86,10 @@ object LiveServing {
   *    descending (the reference's W1 ranking sort).
   *
   * Scale posture: the view is day-grain (keys × days — serving-sized
-  * by construction), each GET runs one Spark job over it and collects
-  * only final serving rows. The per-request window+aggregate is over
-  * that view, never over the event stream. */
+  * by construction) and held on the driver; a GET runs 2.1 Spark jobs
+  * on average over it (traced live-loop) and collects only final
+  * serving rows. The per-request window+aggregate is over that view,
+  * never over the event stream. */
 object LiveEndpoint {
 
   type Handle = graft.serve.Handle

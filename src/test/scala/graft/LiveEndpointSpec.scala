@@ -74,6 +74,13 @@ class LiveEndpointSpec extends SparkSpec {
         r2.body())
       assert(r1.body() != r2.body(), "body did not change across batches")
 
+      // releasing every pinned block between batches leaves the served
+      // view intact: it holds its rows on the driver, not in blocks
+      GraftSession.releaseCaches(spark)
+      val r2b = get(handle, "/state/alpha")
+      assert(r2b.statusCode() == 200, r2b.body())
+      assert(r2b.body() == r2.body(), r2b.body())
+
       // beta saw no day-2 data: its serving row still answers (day 1)
       val rb = get(handle, "/summary")
       assert(rb.statusCode() == 200)

@@ -275,15 +275,25 @@ class StreamingSpec extends SparkSpec {
       DeltaTracker.statewise(ms.toDS()).toDF()
         .select(col("eventTime"), col("delta.*")),
       Seq("state"), "eventTime", "delta_view")
+    // a frame whose state decoded to null: its group must upsert in
+    // place (null-safe key equality), not add a row per batch
+    def unnamed(confirmed: String, at: String) =
+      StatewiseStats("0", confirmed, "0", "0", null, null, at)
     try {
-      ms.addData(StampedStats(t1, snap1))
+      ms.addData(StampedStats(t1, snap1),
+        StampedStats(t1, unnamed("10", "08/04/2020 00:04:28")))
       q.processAllAvailable()
-      ms.addData(StampedStats(t2, snap2))
+      ms.addData(StampedStats(t2, snap2),
+        StampedStats(t2, unnamed("12", "08/04/2020 06:00:00")))
       q.processAllAvailable()
       val rows = spark.table("global_temp.delta_view").collect()
-      assert(rows.length == 1)
-      assert(rows(0).getAs[Long]("currentConfirmed") == 5372L)
-      assert(rows(0).getAs[Long]("deltaConfirmed") == 31L)
+      assert(rows.length == 2, rows.toSeq)
+      val (nulls, named) = rows.partition(_.getAs[String]("state") == null)
+      assert(nulls.length == 1, rows.toSeq)
+      assert(nulls(0).getAs[Long]("currentConfirmed") == 12L)
+      assert(nulls(0).getAs[Long]("deltaConfirmed") == 2L)
+      assert(named(0).getAs[Long]("currentConfirmed") == 5372L)
+      assert(named(0).getAs[Long]("deltaConfirmed") == 31L)
     } finally q.stop()
   }
 
