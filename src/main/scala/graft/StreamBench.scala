@@ -161,7 +161,7 @@ object StreamBench {
     * past ~50k rows nearly every doc has ~36 true near-dup "cousins"
     * and the feed collapses transitively (measured: 6,282 survivors of
     * an expected 35,000 — the large-size accounting caught what the
-    * 1,200-row spec could not). Salting every token with the key makes
+    * 1,200-row spec could not). Prefixing every token with the key makes
     * non-copy shingle sets DISJOINT, so the 7-in-10 accounting is
     * provable at any scale. */
   def nearDedupBatch(i: Int, rows: Int): Seq[(Long, String, Long)] = {

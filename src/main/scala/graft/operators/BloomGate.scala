@@ -125,21 +125,4 @@ object BloomGate {
       throw new java.io.IOException(s"bloom sketch rename failed: $path")
     }
   }
-
-  /** Rows of `probe` whose `keyCol` value does NOT occur in
-    * `seen.seenKeyCol` — semantically `probe LEFT ANTI JOIN seen`.
-    * Bloom-negative rows pass straight through (no exchange);
-    * bloom-positive rows are re-checked exactly. The probe frame is
-    * read twice (once per branch) — at corpus scale two columnar
-    * scans cost far less than shuffling every probe row, and the
-    * caller can cache `probe` when it is already narrow. */
-  def gatedAntiJoin(probe: DataFrame, keyCol: String, seen: DataFrame,
-      seenKeyCol: String, expectedItems: Long,
-      fpp: Double = 0.01): DataFrame = {
-    val bloom = build(seen, seenKeyCol, expectedItems, fpp)
-    val gate = mightContain(bloom, col(keyCol))
-    probe.filter(!gate).unionByName(
-      probe.filter(gate)
-        .join(seen.select(col(seenKeyCol).as(keyCol)), Seq(keyCol), "left_anti"))
-  }
 }

@@ -28,8 +28,9 @@ object Centrality {
     * ranking granularity.
     *
     * Scale shape: `edges` (src, dst) materializes once with outdegree
-    * attached (one groupBy + self-join, both keyed on src, then
-    * pinned — every iteration reuses it without re-execution). Each
+    * attached (one groupBy + self-join, both keyed on src, then pinned
+    * as the [[Pins.loopFrame]] — every iteration reuses it without
+    * re-execution). Each
     * iteration is one join of the weighted edge list against the
     * current rank table on src (both sides hash-partitioned on the
     * same key) and one map-side-combining sum on dst — integer sums
@@ -57,33 +58,12 @@ object Centrality {
     // — an explicit localCheckpoint here re-materialized ~1.5M rows as
     // deserialized blocks and measured a 0.3-0.4 s LOSS on q124.
     val e = edges.select(col("src"), col("dst"))
-    // SIZE-DERIVED loop width (guide §2; the r14 Dedup.resolve pattern,
-    // ported per the r14 verdict): the weighted edge cache pinned at
-    // the session's shuffle.partitions made every iteration scan 32
-    // near-empty cache partitions — q124 measured 3.2 s at 32 cores vs
-    // 1.9 s at 8 on the r14 driver box (ratio 0.59). One cheap count
-    // (callers pin the upstream pair table) sizes the cache at
-    // ceil(edge_bytes / 64 MB) partitions capped at the session width.
-    // Per-frame repartition, never a session-conf flip, so concurrent
-    // queries on the shared session are unaffected.
-    val sessWidth = e.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val nEdges = e.count()
-    val loopParts = math.max(1L, math.min(sessWidth.toLong,
-      nEdges * 48L / (64L << 20) + 1L)).toInt
-    // weighted edge list, built once: (src, dst, outdeg) — pinned
-    // repartition(src) + sorted + CACHED, not localCheckpoint'ed: an
-    // InMemoryRelation preserves outputPartitioning/outputOrdering
-    // into every iteration's join, so only the rank side exchanges; a
-    // LogicalRDD reports UnknownPartitioning and the r14 BFS Stress
-    // curve measured the consequence — the FULL pinned table
-    // re-exchanges every round once past the broadcast threshold
-    // (Paths.boundedDistances, same fix; ARCHITECTURE §4). Released
-    // before return: pr is eagerly checkpointed per iteration.
-    val ew = e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src"))
-      .repartition(loopParts, col("src")).sortWithinPartitions("src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val pr = try {
+    // the weighted edge list (src, dst, outdeg) is the loop frame, sized
+    // by one cheap count (callers pin the upstream pair table); pr is
+    // eagerly checkpointed per iteration, so nothing outlives its release
+    val weighted =
+      e.join(e.groupBy("src").agg(count(lit(1)).as("outdeg")), Seq("src"))
+    Pins.loopFrame(weighted, "src", e.count()) { (ew, sessWidth) =>
       // ONE explode pass instead of a two-leg union (r15, guide §2.3):
       // the union form scanned the caller's edge frame once per leg;
       // identical distinct-endpoint set either way
@@ -103,13 +83,8 @@ object Centrality {
             (lit(teleport) + coalesce(col("inflow"), lit(0L))).as("pr"))
           .localCheckpoint(true)
       }
-      pr
-    } finally ew.unpersist(false)
-    // re-spread the rank table for consumers (q124's kind/key
-    // projection, q266's top-k) — same discipline as
-    // Dedup.resolveWithStats' returned label table; the exchange is
-    // (id, pr)-grain and only planned when a consumer executes.
-    pr.repartition(sessWidth, col("id"))
+      pr.repartition(sessWidth, col("id"))
+    }
   }
 
   /** Per-node TRIANGLE counts of an undirected graph, by degree-ordered

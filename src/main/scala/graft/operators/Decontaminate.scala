@@ -34,27 +34,6 @@ object Decontaminate {
       .otherwise(array().cast("array<string>"))
   }
 
-  /** Stateless filter form: drop every document sharing an n-gram with
-    * the benchmark — works identically on batch frames and append-mode
-    * STREAMS (stream-static join, no state, no watermark), because the
-    * membership test happens inside the row: the benchmark's distinct
-    * grams collapse to one broadcast row and `arrays_overlap` checks
-    * the document's grams against it. The right form for ingest-time
-    * decontamination (new documents arrive continuously; the benchmark
-    * set is a static side input); [[ngramHits]] is the audit form that
-    * also counts the leaks. */
-  def cleanOf(docs: DataFrame, benchmark: DataFrame, textCol: String,
-      n: Int): DataFrame = {
-    val bg = benchmark
-      .select(T.words(col(textCol)).as("ws"))
-      .select(explode(array_distinct(wordNgrams(col("ws"), n))).as("g"))
-      .agg(collect_set(col("g")).as("__bench_grams"))
-    docs.crossJoin(broadcast(bg))
-      .filter(!arrays_overlap(
-        wordNgrams(T.words(col(textCol)), n), col("__bench_grams")))
-      .drop("__bench_grams")
-  }
-
   /** (doc_id, n_hits) for every corpus document sharing at least one
     * distinct word n-gram with the benchmark set; n_hits counts the
     * DISTINCT contaminated grams. Dropping (or auditing) the flagged

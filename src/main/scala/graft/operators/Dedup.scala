@@ -827,54 +827,22 @@ object Dedup {
     * measured in the spec), and the join's build side is one row per
     * key, which is exactly the shape AQE's skew-split handles at real
     * scale (splits the fat stream-side partition, replicates the
-    * single matching row). [[Salting.saltedJoin]] stays the manual
-    * fallback if a deployment pins AQE off. */
+    * single matching row). */
   def resolveWithStats(pairs: DataFrame, maxIters: Int = 20): (DataFrame, Int) = {
-    // materialize the edge list once: every propagation round joins it,
-    // and without this each round would re-execute the full upstream
-    // candidate-pair pipeline (measured 3-4× on q44). Pinned
-    // repartition(src) + sorted + CACHED, not localCheckpoint'ed: an
-    // InMemoryRelation keeps outputPartitioning/outputOrdering visible
-    // to every round's propagation join, so only the label side
-    // exchanges; a LogicalRDD reports UnknownPartitioning and the r14
-    // BFS Stress curve measured the full-table re-exchange that causes
-    // past the broadcast threshold (Paths.boundedDistances, same fix).
-    // Released before return: labels is eagerly checkpointed per round.
-    // pin the pair frame first: the symmetric union scans it twice,
-    // and plan-duplicated subtrees get no exchange reuse across a
-    // union — unpinned, the whole upstream candidate-pair pipeline
-    // (e.g. q92's shared-shingle self-join) executed twice inside the
-    // single edge materialization job (r14 optimization, measured)
+    // materialize the edge list once as the Pins.loopFrame: every
+    // propagation round joins it, and without this each round would
+    // re-execute the full upstream candidate-pair pipeline (measured
+    // 3-4× on q44); labels is eagerly checkpointed per round, so
+    // nothing outlives its release. Pin the pair frame first: the
+    // symmetric union scans it twice, and plan-duplicated subtrees get
+    // no exchange reuse across a union — unpinned, the whole upstream
+    // candidate-pair pipeline (e.g. q92's shared-shingle self-join)
+    // executed twice inside the single edge materialization job (r14
+    // optimization, measured)
     val pairsP = pairs.select("doc_a", "doc_b").localCheckpoint(true)
-    // SIZE-DERIVED loop width (guide §2: derive partitioning from the
-    // input, never a constant): every frame the propagation loop
-    // touches — edges, labels, per-round join/aggregate outputs — is
-    // pair/vertex-grain, and with the session's shuffle.partitions
-    // (one per core) each round materialized 3 near-empty union legs
-    // of 32 partitions apiece: 96 map tasks for 61 KB of output,
-    // ~7 s of pure task scheduling per q77 run (measured). The pinned
-    // pair count is already on hand, so the loop plans at
-    // ceil(edge_bytes / 64 MB) partitions, capped at the session
-    // width: 1 at test scale, growing with the graph — a billion-edge
-    // corpus component graph still gets the session's full width.
-    val sess = pairsP.sparkSession
-    val nPairs = pairsP.count()
-    val spPrev = sess.conf.get("spark.sql.shuffle.partitions")
-    val loopParts = math.max(1L, math.min(spPrev.toLong,
-      2L * nPairs * 48L / (64L << 20) + 1L)).toInt
-    // PER-FRAME width, not a session-conf flip (r15, the r14 verdict's
-    // What's-wrong #3): the r14 cut set spark.sql.shuffle.partitions
-    // for the loop's duration, which a concurrent query on the shared
-    // session would silently inherit. The narrow width only needs to
-    // reach the PINNED frames (the edge cache here, whose partitions
-    // every round's map side scans); the loop's reducer-side exchanges
-    // stay at session width where AQE already coalesces them by size —
-    // A/B'd flat against the conf flip on q44/q77/q92/q143 at sf0.1.
-    val edges = pairsP.select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val symmetric = pairsP.select(col("doc_a").as("src"), col("doc_b").as("dst"))
       .unionAll(pairsP.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-      .repartition(loopParts, col("src")).sortWithinPartitions("src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val (labels, iter) = try {
+    Pins.loopFrame(symmetric, "src", 2L * pairsP.count()) { (edges, sessWidth) =>
       // initialization fuses the first propagation round: label(v) =
       // min(v, min neighbor) straight off the edge aggregation (the
       // identity-label round it replaces cost a full join+agg pass and
@@ -910,16 +878,9 @@ object Dedup {
         labels = next.select("id", "label")
         iter += 1
       }
-      (labels, iter)
-    } finally edges.unpersist(false)
-    // re-spread the result: consumers that join/elect over the label
-    // table (q143's winner election, q151's lineage joins) would
-    // otherwise inherit the loop's narrow width for their own map
-    // stages — measured 1.0-1.1 s regressions before this line. The
-    // exchange is label-grain and only planned when a consumer
-    // actually executes.
-    (labels.repartition(spPrev.toInt, col("id"))
-      .select(col("id").as("doc_id"), col("label").as("canonical_id")), iter)
+      (labels.repartition(sessWidth, col("id"))
+        .select(col("id").as("doc_id"), col("label").as("canonical_id")), iter)
+    }
   }
 
   /** The full MinHash-LSH pipeline on the engine-portable polynomial

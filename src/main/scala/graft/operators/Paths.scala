@@ -37,25 +37,13 @@ object Paths {
     * distance map, which is what lets q214/q215 hash-oracle this
     * loop against DuckDB's unrolled form.
     *
-    * Scale shape: the edge list pins once ([[Centrality]]'s
-    * discipline) — and the pin is `repartition(src)` + sorted +
-    * CACHED (not localCheckpoint'ed): an InMemoryRelation preserves
-    * the cached plan's outputPartitioning/outputOrdering, so every
-    * per-hop join sees the edge side already hash-distributed and
-    * sorted on the join key and exchanges ONLY the layer-sized
-    * frontier. A localCheckpoint does NOT — its LogicalRDD reports
-    * UnknownPartitioning (measured on this Spark), so the bare-pin
-    * version re-exchanged the FULL edge table every hop once it
-    * outgrew the broadcast threshold: the r14 Stress curve caught it
-    * (bfs_w20k_h8 series: 5 MB total shuffle at 640k edges where the
-    * edge side still broadcast, 734 MB ≈ edges × hops at 10.2M
-    * edges — growth on the graph-size axis the frontier claim
-    * forbids; flat after this fix, ARCHITECTURE §4). The cache is
-    * released (async) before returning — every layer is eagerly
-    * checkpointed inside the loop, so the returned distance table
-    * holds no lazy reference to it. Each iteration is that frontier⋈edges
-    * equi-join, one map-side-combining DISTINCT on dst, and one
-    * left-anti against the accumulated distance table keyed on id.
+    * Scale shape: the edge list pins once as the [[Pins.loopFrame]]
+    * (keyed on src), so every per-hop join exchanges ONLY the
+    * layer-sized frontier; every layer is eagerly checkpointed, so the
+    * returned distance table holds no lazy reference to the released
+    * cache. Each iteration is that frontier⋈edges equi-join, one
+    * map-side-combining DISTINCT on dst, and one left-anti against the
+    * accumulated distance table keyed on id.
     * A mega-hub in the frontier replicates its one row across the
     * edge partitions — the AQE skew-join shape, never a crossJoin.
     * The distance table `localCheckpoint`s per layer (lineage cut;
@@ -85,30 +73,9 @@ object Paths {
     require(maxHops >= 1 && maxHops <= 64,
       s"maxHops must be in [1, 64], got $maxHops")
     val e0 = edges.select(col("src"), col("dst"))
-    // SIZE-DERIVED loop width (guide §2; the r14 Dedup.resolve pattern,
-    // ported per the r14 verdict): every per-hop frame is edge/frontier
-    // grain, and pinning the edge cache at the session's
-    // shuffle.partitions made each hop scan 32 near-empty cache
-    // partitions plus 32-wide exchange legs — q214 measured 4.3 s at 32
-    // cores vs 1.6 s at 8 on the r14 driver box (ratio 0.37: pure task
-    // scheduling). The edge count is one cheap action (callers pin the
-    // upstream pair table), and the cache plans at
-    // ceil(edge_bytes / 64 MB) partitions capped at the session width:
-    // 1-2 at test scale, the full session width on a billion-edge
-    // graph. Unlike resolve's session-conf flip this is PER-FRAME
-    // (repartition on the pin), so a concurrent query on the shared
-    // session is never planned narrow; the per-hop distinct/anti-join
-    // exchanges stay at session width where AQE already coalesces them
-    // by size.
-    val sessWidth = e0.sparkSession.conf
-      .get("spark.sql.shuffle.partitions").toInt
-    val nEdges = e0.count()
-    val loopParts = math.max(1L, math.min(sessWidth.toLong,
-      nEdges * 48L / (64L << 20) + 1L)).toInt
-    val e = e0
-      .repartition(loopParts, col("src")).sortWithinPartitions("src")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dist = try {
+    // one cheap count sizes the loop frame (callers pin the upstream
+    // pair table)
+    Pins.loopFrame(e0, "src", e0.count()) { (e, sessWidth) =>
       var dist = seeds.select(col("id")).distinct()
         .withColumn("dist", lit(0L))
         .localCheckpoint(true)
@@ -130,14 +97,7 @@ object Paths {
         }
         h += 1
       }
-      dist
-    } finally e.unpersist(false)
-    // re-spread the distance table: consumers (q215's reach rollup,
-    // q214's projection) would otherwise inherit the loop's narrow
-    // width for their own map stages — the same consumer-width
-    // discipline as Dedup.resolveWithStats' returned label table. The
-    // exchange is (id, dist)-grain and only planned when a consumer
-    // executes.
-    dist.repartition(sessWidth, col("id"))
+      dist.repartition(sessWidth, col("id"))
+    }
   }
 }

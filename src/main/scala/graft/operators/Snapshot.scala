@@ -31,8 +31,7 @@ object SnapshotDiff {
     * mis-class a changed doc as unchanged has P ≈ 10⁻¹⁴ at 10¹²
     * docs). One full-outer hash join co-partitioned on id; both
     * inputs aggregate/scan-prune independently upstream. With both
-    * snapshots stored bucketed by id (`sources/Bucketing`), the join
-    * plans shuffle-free. */
+    * snapshots stored bucketed by id, the join plans shuffle-free. */
   def diff(oldDf: DataFrame, newDf: DataFrame, idCol: String,
       textCol: String): DataFrame = {
     val o = oldDf.select(col(idCol).as("doc_id"), md5(col(textCol)).as("oh"))

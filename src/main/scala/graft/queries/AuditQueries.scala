@@ -911,7 +911,7 @@ object AuditQueries {
     * whose event count exceeds the per-task target (48 rows at test scale — production
     * targets are ~10^6; the threshold is the operator's one knob),
     * with the salt factor `ceil(count / target)` that
-    * [[graft.operators.Salting.saltedJoin]] (and AQE's skew split)
+    * a salted join (or AQE's skew split)
     * would shard it into. The plan a job author reviews BEFORE pinning
     * a salted join — and the broadcast-sized hot-key table the salted
     * join itself consumes. One map-side-combined count, a pure-

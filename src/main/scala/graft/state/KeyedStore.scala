@@ -253,7 +253,7 @@ object KeyedStore {
         // optionally serve the table as `global_temp.<name>` — a LAZY
         // alias over the parquet (re-registered per batch only so the
         // scan picks up the new file listing; nothing materializes),
-        // unlike serveAsView's per-batch snapshot rebuild. Global temp
+        // unlike serveAsView's driver-held local relation. Global temp
         // views are shared across sessions, so registration from the
         // cloned foreachBatch session is visible to the serving session.
         // Caveat: a query that starts mid-overwrite of a bucket it

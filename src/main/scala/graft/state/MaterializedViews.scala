@@ -14,6 +14,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * shuffle on the key, no per-key point-get loops. Streaming form: the
   * same expression in update mode, materialized per micro-batch via
   * `foreachBatch` into a queryable view.
+  *
+  * Serving state has two homes, split by size. The driver-held
+  * global-temp views here are for serving-sized state (at most one row
+  * per key, or per (key, day)); they are what the live endpoints serve
+  * from, e.g. [[serveDailyTotalsAsView]] behind
+  * [[graft.serve.LiveEndpoint.start]], and they are lost on session
+  * exit. [[KeyedStore]] (the [[ViewCatalog]] default) is for durable,
+  * data-table-sized state: bucketed parquet, restart-recoverable.
   */
 object MaterializedViews {
 
@@ -33,18 +41,6 @@ object MaterializedViews {
       .select(keyCols.map(col) ++ others.map(c => col(s"r.$c")): _*)
   }
 
-  /** J6 — as-of view: latest row per key at or before `cutoff`, looking
-    * back at most `lookbackDays` (StateStoresManager.java:212-229 probes
-    * day-by-day; this is one ranked scan). */
-  def asOf(df: DataFrame, keyCols: Seq[String], tsCol: String,
-      cutoff: java.sql.Timestamp, lookbackDays: Int): DataFrame = {
-    val lo = new java.sql.Timestamp(
-      cutoff.getTime - lookbackDays * 86400000L)
-    latestPerKey(
-      df.filter(col(tsCol) <= lit(cutoff) && col(tsCol) >= lit(lo)),
-      keyCols, tsCol)
-  }
-
   /** Register a (streaming) DataFrame as a continuously-maintained
     * queryable view: the latest-per-key aggregation runs INSIDE the
     * streaming engine (update mode, state-store-backed — per-batch cost
@@ -54,15 +50,7 @@ object MaterializedViews {
     * view (`global_temp.<viewName>`; foreachBatch runs in a cloned session,
     * so a plain temp view would be invisible to the serving session) —
     * the Structured-Streaming analog of the reference's interactive-
-    * query state stores (bot StateStoresManager.java).
-    *
-    * TEST CONVENIENCE ONLY. The production path — and the
-    * [[ViewCatalog]] default — is [[KeyedStore.serveToStore]]: same
-    * changed-rows contract, consumed by a partition-pruned
-    * changed-bucket upsert into durable parquet, restart-recoverable.
-    * This leg holds the view in driver memory and loses it on session
-    * exit; it stays because a zero-IO in-memory view is convenient in
-    * specs, not because anything in the engine should route here. */
+    * query state stores (bot StateStoresManager.java). */
   def serveAsView(streaming: DataFrame, keyCols: Seq[String], tsCol: String,
       viewName: String): StreamingQuery =
     upsertStream(latestPerKey(streaming, keyCols, tsCol), "update", keyCols,
@@ -117,9 +105,7 @@ object MaterializedViews {
     * view always holds every key's latest sketch reading, and the
     * reading is BIT-identical to the batch `KmvMins` aggregate over
     * everything fed (the tracker's duality contract). Served live by
-    * [[graft.serve.LiveEndpoint.startDistinct]]. Same test-convenience
-    * caveat as [[serveAsView]]; production routes through
-    * [[KeyedStore.serveToStore]]. */
+    * [[graft.serve.LiveEndpoint.startDistinct]]. */
   def serveKmvAsView(hashes: org.apache.spark.sql.Dataset[graft.streaming.KeyedHash],
       k: Int, viewName: String): StreamingQuery =
     upsertStream(graft.streaming.KmvTracker.track(hashes, k).toDF()

@@ -80,9 +80,9 @@ object ViewCatalog {
     * cardinality), with the global-temp name served as a lazy alias
     * over the table. The store lives at `catalogRoot/<view>` and, when
     * `checkpointed`, the engine state at `catalogRoot/_ckpt/<view>` —
-    * one root recovers the whole catalog. (The per-batch snapshot
-    * rebuild, [[MaterializedViews.serveAsView]], remains only as a
-    * test convenience.) */
+    * one root recovers the whole catalog. (Which state belongs here
+    * and which in a driver-held view is stated on
+    * [[MaterializedViews]].) */
   def serve(spec: ViewSpec, stream: DataFrame, catalogRoot: String,
       checkpointed: Boolean = false): StreamingQuery =
     serveDurable(spec, stream, s"$catalogRoot/${spec.view}",

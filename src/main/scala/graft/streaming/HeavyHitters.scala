@@ -6,11 +6,10 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TTLConfig, TimeMode, TimerValues}
 
-/** Streaming windowed heavy hitters on the Misra-Gries summary — the
-  * bounded-memory companion of [[StreamSketch]]'s HLL: per tumbling
-  * window, the top-k keys by (estimated) frequency, tracked with at
-  * most `capacity` counters per (window, salt) shard regardless of key
-  * cardinality. Exact per-(window, key) counting would need state
+/** Streaming windowed heavy hitters on the Misra-Gries summary: per
+  * tumbling window, the top-k keys by (estimated) frequency, tracked
+  * with at most `capacity` counters per (window, salt) shard regardless
+  * of key cardinality. Exact per-(window, key) counting would need state
   * proportional to the distinct-key count; Misra-Gries guarantees every
   * estimate sits within `decrements ≤ n_shard/capacity` of the true
   * count, which is the classical bound that makes per-window top-k

@@ -94,15 +94,6 @@ object NewsDedup {
     deduped.union(passthrough)
   }
 
-  /** ST3 simple path (SURVEY.md §7.2.5 "implement both behind a flag"):
-    * plain watermark + dropDuplicates — drops repeats within the
-    * watermark but does NOT extend TTL on duplicate arrival. Use
-    * `dedupWithTtl` for exact reference semantics. */
-  def dedupSimple(in: org.apache.spark.sql.DataFrame,
-      idCol: String, watermarkDelay: String): org.apache.spark.sql.DataFrame =
-    in.withWatermark("eventTime", watermarkDelay)
-      .dropDuplicates(idCol)
-
   /** Full pipeline → (state, newsSource) rows, the `news-sources` topic. */
   def newsSources(
       in: Dataset[StampedPatient],

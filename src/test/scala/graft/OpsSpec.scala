@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-import graft.operators.{Dedup, Ranks, Salting}
+import graft.operators.{Dedup, Ranks}
 
 /** Operator-level unit tests for the scale-path rework: partitioned
   * global rank, dedup df-cap skew guard, native winnowing window. */
@@ -173,25 +173,4 @@ class OpsSpec extends SparkSpec {
     assert(n == h)
   }
 
-  test("saltedJoin equals the plain equi-join on a skewed key") {
-    import spark.implicits._
-    // 10k fact rows, 95% on one hot key — the skew shape salting guards
-    val fact = spark.range(10000)
-      .select(col("id"),
-        when(col("id") % 20 =!= 0, "hot").otherwise(concat(lit("k"), col("id") % 7))
-          .as("k"))
-    val dim = Seq(("hot", 1L), ("k0", 2L), ("k3", 3L)).toDF("k", "v")
-    val plain = fact.join(dim, Seq("k"))
-      .select("k", "id", "v").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    val salted = Salting.saltedJoin(fact, dim, Seq("k"), col("id"), nSalts = 8)
-      .select("k", "id", "v").collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).toSet
-    assert(salted == plain)
-    assert(plain.count(_._1 == "hot") == 9500)
-    // the join condition actually includes the salt (skew is split)
-    val p = Salting.saltedJoin(fact, dim, Seq("k"), col("id"), nSalts = 8)
-      .queryExecution.optimizedPlan.toString
-    assert(p.contains("__salt"), p.take(800))
-  }
 }

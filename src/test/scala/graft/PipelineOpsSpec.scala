@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -211,39 +210,6 @@ class PipelineOpsSpec extends SparkSpec {
     val direct = graft.operators.Dedup.polySimhash45(docs, "text", "doc_id")
       .as[(Long, Long)].collect().toMap
     assert(fromQ == direct)
-  }
-
-  test("cleanOf == anti-join on ngramHits in batch, and runs stateless on a stream") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val bench = docs.filter(col("doc_id") % 20 === 0)
-    val corpus = docs.filter(col("doc_id") % 20 =!= 0)
-    // batch equivalence with the audit form
-    val viaClean = Decontaminate.cleanOf(corpus, bench, "text", 4)
-      .select("doc_id").as[Long].collect().toSet
-    val viaHits = corpus.join(
-      Decontaminate.ngramHits(corpus, bench, 4).select("doc_id"),
-      Seq("doc_id"), "left_anti")
-      .select("doc_id").as[Long].collect().toSet
-    assert(viaClean == viaHits && viaClean.nonEmpty)
-    // streaming: same filter, append mode, no state store involved
-    val ms = MemoryStream[(Long, String)]
-    val cleanStream = Decontaminate.cleanOf(
-      ms.toDS().toDF("doc_id", "text"),
-      Seq((0L, "alpha beta gamma delta epsilon")).toDF("doc_id", "text"),
-      "text", 4)
-    val q = cleanStream.writeStream.format("memory")
-      .queryName("decon_stream").outputMode("append").start()
-    try {
-      ms.addData(
-        (1L, "x alpha beta gamma delta y"),   // contaminated
-        (2L, "totally clean words here now"), // clean
-        (3L, "too short"))                    // shorter than n: clean
-      q.processAllAvailable()
-      val out = spark.table("decon_stream").select("doc_id")
-        .as[Long].collect().toSet
-      assert(out == Set(2L, 3L), s"got $out")
-    } finally q.stop()
   }
 
   test("portable minhash-LSH pairs ⊆ exact Jaccard pairs; near-exact dupes recalled") {

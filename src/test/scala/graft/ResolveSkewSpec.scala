@@ -127,7 +127,7 @@ class ResolveSkewSpec extends SparkSpec {
     // giant component's min label concentrates O(|component|) rows in
     // one partition — at 5%+5% giant share and 32 partitions the
     // expected hot/median band is low single digits; >10x would mean
-    // the min-label key needs Salting.saltedJoin even below AQE's
+    // the min-label key needs a salted join even below AQE's
     // skew thresholds
     val reads = taskRecords.synchronized { taskRecords.toSeq.sorted }
     assert(reads.nonEmpty, "listener captured no shuffle-reading tasks")

@@ -364,44 +364,9 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("ST5 streaming: session_window merges within gap, splits across it") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(Long, Timestamp)]
-    val q = graft.streaming.Sessionize.sessions(
-        ms.toDS().toDF("user_id", "ts"), "user_id", "ts",
-        gap = "30 minutes", delay = "1 minute")
-      .writeStream.format("memory").queryName("sessions_t")
-      .outputMode("append").start()
-    try {
-      ms.addData(
-        (1L, ts("2024-01-01 10:00:00")),
-        (1L, ts("2024-01-01 10:10:00")), // same session (gap 10m < 30m)
-        (1L, ts("2024-01-01 12:00:00")), // new session
-        (2L, ts("2024-01-01 10:05:00")))
-      q.processAllAvailable()
-      // flush: advance the watermark far past every session's end+gap
-      ms.addData((9L, ts("2024-01-02 00:00:00")))
-      q.processAllAvailable()
-      ms.addData((9L, ts("2024-01-03 00:00:00")))
-      q.processAllAvailable()
-      val rows = spark.table("sessions_t")
-        .select("user_id", "session_start", "n_events")
-        .collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getLong(2))).toSet
-      assert(rows.contains((1L, ts("2024-01-01 10:00:00"), 2L)),
-        s"merged session missing: $rows")
-      assert(rows.contains((1L, ts("2024-01-01 12:00:00"), 1L)))
-      assert(rows.contains((2L, ts("2024-01-01 10:05:00"), 1L)))
-    } finally q.stop()
-  }
-
   test("stateful topologies run on the RocksDB state store (large-key-space knob)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     val ms = MemoryStream[StampedStats]
     val q = DeltaTracker.statewise(ms.toDS())
       .writeStream.format("memory").queryName("deltas_rocksdb")
@@ -415,65 +380,14 @@ class StreamingSpec extends SparkSpec {
         .collect().sortBy(_.eventTime.getTime)
       assert(rows.length == 2)
       assert(rows(1).delta.deltaConfirmed == 31L) // state persisted in RocksDB
-      // rocksdb-prefixed custom metrics prove the provider actually ran
+      // rocksdb-prefixed custom metrics prove the session default
+      // provider (GraftSession names RocksDB) actually ran
       import scala.jdk.CollectionConverters._
       val metricKeys = q.lastProgress.stateOperators.head
         .customMetrics.keySet.asScala
       assert(metricKeys.exists(_.toLowerCase.contains("rocksdb")),
         s"no rocksdb metrics — provider not active: $metricKeys")
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
-  }
-
-  test("streaming windowed HLL: constant-size state tracks per-window distincts") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ms = MemoryStream[(Timestamp, String, Long)]
-    val q = graft.streaming.StreamSketch.windowedApproxDistinct(
-        ms.toDS().toDF("ts", "etype", "uid"),
-        "ts", "etype", "uid", window = "1 hour", watermarkDelay = "1 hour")
-      .writeStream.format("memory").queryName("sketch_t")
-      .outputMode("update").start()
-    try {
-      // 40 distinct users ×2 duplicate events each in one window — the
-      // estimate must land within the 5% rsd bound and dedupe the
-      // duplicates (raw count is 80)
-      val base = ts("2024-01-01 10:00:00").getTime
-      ms.addData((0 until 80).map(i =>
-        (new Timestamp(base + i * 1000L), "click", (i % 40).toLong)): _*)
-      q.processAllAvailable()
-      val row = spark.table("sketch_t")
-        .filter(col("etype") === "click").collect().last
-      val est = row.getAs[Long]("approx_distinct")
-      assert(est >= 36L && est <= 44L, s"estimate $est outside 40±10%")
-      assert(row.getAs[Long]("n_events") == 80L)
-      // second window for the same key: independent sketch state
-      ms.addData((new Timestamp(base + 2 * 3600000L), "click", 7L))
-      q.processAllAvailable()
-      val windows = spark.table("sketch_t")
-        .filter(col("etype") === "click")
-        .select("window_start").distinct().count()
-      assert(windows == 2)
     } finally q.stop()
-  }
-
-  /** transformWithState (both heavy-hitter stages) requires the
-    * RocksDB state-store provider; restore the session conf after. */
-  private def withRocksDb[A](body: => A): A = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
-    }
   }
 
   test("streaming boilerplate monitor: sentence explode composes into windowed heavy hitters") {
@@ -484,43 +398,41 @@ class StreamingSpec extends SparkSpec {
     // window's top key.
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val ms = MemoryStream[(Timestamp, String)]
-      val sents = ms.toDS().toDF("ts", "text")
-        .select(col("ts"), explode(split(col("text"), "[.!?]+")).as("s0"))
-        .select(col("ts"), trim(col("s0")).as("sent"))
-        .filter(length(col("sent")) > 0)
-        .select(col("ts"), md5(col("sent")).as("d"))
-      val q = graft.streaming.HeavyHitters.windowedTopK(
-          sents, "ts", "d", windowMillis = 3600000L, graceMillis = 3600000L,
-          capacity = 8, k = 2, nSalts = 2)
-        .writeStream.format("memory").queryName("bp_t")
-        .outputMode("append").start()
-      try {
-        val base = ts("2024-01-01 10:00:00").getTime
-        val template = "subscribe to our newsletter"
-        val docs = (0 until 30).map { i =>
-          (new Timestamp(base + i), s"unique sentence number $i. $template! more text $i.")
-        } ++ (0 until 5).map { i =>
-          (new Timestamp(base + 100 + i), s"other doc $i. nothing shared here $i?")
-        }
-        ms.addData(docs: _*)
-        q.processAllAvailable()
-        // close the window so append mode emits
-        ms.addData((new Timestamp(base + 2 * 3600000L + 3600000L), "flush."))
-        q.processAllAvailable()
-        val rows = spark.table("bp_t")
-          .filter(col("windowStart") === new Timestamp(base - base % 3600000L))
-          .collect().map(r => (r.getString(1), r.getLong(2), r.getInt(4)))
-          .sortBy(_._3)
-        assert(rows.nonEmpty, "window never emitted")
-        val md5Template = java.security.MessageDigest.getInstance("MD5")
-          .digest(template.getBytes("UTF-8")).map("%02x".format(_)).mkString
-        assert(rows.head._1 == md5Template,
-          s"top boilerplate key wrong: ${rows.toSeq} (want $md5Template)")
-        assert(rows.head._2 >= 25, s"template count underestimated: ${rows.head}")
-      } finally q.stop()
-    }
+    val ms = MemoryStream[(Timestamp, String)]
+    val sents = ms.toDS().toDF("ts", "text")
+      .select(col("ts"), explode(split(col("text"), "[.!?]+")).as("s0"))
+      .select(col("ts"), trim(col("s0")).as("sent"))
+      .filter(length(col("sent")) > 0)
+      .select(col("ts"), md5(col("sent")).as("d"))
+    val q = graft.streaming.HeavyHitters.windowedTopK(
+        sents, "ts", "d", windowMillis = 3600000L, graceMillis = 3600000L,
+        capacity = 8, k = 2, nSalts = 2)
+      .writeStream.format("memory").queryName("bp_t")
+      .outputMode("append").start()
+    try {
+      val base = ts("2024-01-01 10:00:00").getTime
+      val template = "subscribe to our newsletter"
+      val docs = (0 until 30).map { i =>
+        (new Timestamp(base + i), s"unique sentence number $i. $template! more text $i.")
+      } ++ (0 until 5).map { i =>
+        (new Timestamp(base + 100 + i), s"other doc $i. nothing shared here $i?")
+      }
+      ms.addData(docs: _*)
+      q.processAllAvailable()
+      // close the window so append mode emits
+      ms.addData((new Timestamp(base + 2 * 3600000L + 3600000L), "flush."))
+      q.processAllAvailable()
+      val rows = spark.table("bp_t")
+        .filter(col("windowStart") === new Timestamp(base - base % 3600000L))
+        .collect().map(r => (r.getString(1), r.getLong(2), r.getInt(4)))
+        .sortBy(_._3)
+      assert(rows.nonEmpty, "window never emitted")
+      val md5Template = java.security.MessageDigest.getInstance("MD5")
+        .digest(template.getBytes("UTF-8")).map("%02x".format(_)).mkString
+      assert(rows.head._1 == md5Template,
+        s"top boilerplate key wrong: ${rows.toSeq} (want $md5Template)")
+      assert(rows.head._2 >= 25, s"template count underestimated: ${rows.head}")
+    } finally q.stop()
   }
 
   test("windowedTopK fails fast (plan time, clear fix) without the RocksDB provider") {
@@ -547,225 +459,105 @@ class StreamingSpec extends SparkSpec {
   test("streaming windowed heavy hitters: bounded counters, true top-k, eviction") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val ms = MemoryStream[(Timestamp, String)]
-      val q = graft.streaming.HeavyHitters.windowedTopK(
-          ms.toDS().toDF("ts", "etype"),
-          "ts", "etype", windowMillis = 3600000L, graceMillis = 3600000L,
-          capacity = 4, k = 2, nSalts = 2)
-        .writeStream.format("memory").queryName("hh_t")
-        .outputMode("append").start()
-      try {
-        val base = ts("2024-01-01 10:00:00").getTime
-        // skewed stream: a×50, b×30, 20 singleton keys — ~11 distinct
-        // keys per salt shard against 4 counters forces MG decrements
-        val data = (0 until 50).map(i => (new Timestamp(base + i), "a")) ++
-          (0 until 30).map(i => (new Timestamp(base + 1000 + i), "b")) ++
-          (0 until 20).map(i => (new Timestamp(base + 2000 + i), s"z$i"))
-        ms.addData(data: _*)
-        q.processAllAvailable()
-        val rows = spark.table("hh_t").collect()
-          .map(r => (r.getInt(4), r.getString(1), r.getLong(2), r.getLong(3)))
-          .sortBy(_._1)
-        assert(rows.map(_._2).toSeq == Seq("a", "b"), s"top-2 wrong: ${rows.toSeq}")
-        // MG bound: est ≤ true ≤ est + the key's own shard decrements
-        val byKey = rows.map(r => r._2 -> (r._3, r._4)).toMap
-        assert(byKey("a")._1 <= 50 && byKey("a")._1 + byKey("a")._2 >= 50)
-        assert(byKey("b")._1 <= 30 && byKey("b")._1 + byKey("b")._2 >= 30)
-        // two-level plan: salted summaries feed a merge stage — two
-        // stateful operators, and the raw event volume never groups on
-        // the bare window key (stage 1's key carries the salt)
-        assert(q.lastProgress.stateOperators.length == 2,
-          "expected salted-summary + merge state operators")
-        val plan = {
-          val out = new java.io.ByteArrayOutputStream()
-          Console.withOut(new java.io.PrintStream(out))(q.explain())
-          out.toString
-        }
-        assert("TransformWithState".r.findAllIn(plan).size >= 2, plan)
-        assert(plan.contains("salt"), "stage-1 grouping key lost its salt")
-        // state stays bounded: ≤ nSalts summary shards + 1 merge row
-        val totalState = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-        assert(totalState <= 4, s"state rows $totalState exceed shard bound")
-        // a rank whose holder falls out of the summary is tombstoned,
-        // not left stale: the batch always emits exactly k rows per
-        // touched window (null key past the live counter set)
-        val win2 = new Timestamp(base + 2 * 3600000L)
-        ms.addData((win2, "p"))
-        q.processAllAvailable()
-        val w2rows = spark.table("hh_t")
-          .filter(col("windowStart") === win2).collect()
-          .map(r => r.getInt(4) -> (if (r.isNullAt(1)) null else r.getString(1)))
-          .toMap
-        assert(w2rows == Map(1 -> "p", 2 -> null), s"tombstone missing: $w2rows")
-        // advance the watermark beyond window end + grace → eviction
-        ms.addData((new Timestamp(base + 4 * 3600000L), "late"))
-        q.processAllAvailable()
-        ms.addData((new Timestamp(base + 6 * 3600000L), "later"))
-        q.processAllAvailable()
-        assert(spark.table("hh_t").select("windowStart").distinct().count() >= 2)
-        val totals = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
-        assert(totals <= 6, s"evicted windows still in state: $totals rows")
-      } finally q.stop()
-    }
+    val ms = MemoryStream[(Timestamp, String)]
+    val q = graft.streaming.HeavyHitters.windowedTopK(
+        ms.toDS().toDF("ts", "etype"),
+        "ts", "etype", windowMillis = 3600000L, graceMillis = 3600000L,
+        capacity = 4, k = 2, nSalts = 2)
+      .writeStream.format("memory").queryName("hh_t")
+      .outputMode("append").start()
+    try {
+      val base = ts("2024-01-01 10:00:00").getTime
+      // skewed stream: a×50, b×30, 20 singleton keys — ~11 distinct
+      // keys per salt shard against 4 counters forces MG decrements
+      val data = (0 until 50).map(i => (new Timestamp(base + i), "a")) ++
+        (0 until 30).map(i => (new Timestamp(base + 1000 + i), "b")) ++
+        (0 until 20).map(i => (new Timestamp(base + 2000 + i), s"z$i"))
+      ms.addData(data: _*)
+      q.processAllAvailable()
+      val rows = spark.table("hh_t").collect()
+        .map(r => (r.getInt(4), r.getString(1), r.getLong(2), r.getLong(3)))
+        .sortBy(_._1)
+      assert(rows.map(_._2).toSeq == Seq("a", "b"), s"top-2 wrong: ${rows.toSeq}")
+      // MG bound: est ≤ true ≤ est + the key's own shard decrements
+      val byKey = rows.map(r => r._2 -> (r._3, r._4)).toMap
+      assert(byKey("a")._1 <= 50 && byKey("a")._1 + byKey("a")._2 >= 50)
+      assert(byKey("b")._1 <= 30 && byKey("b")._1 + byKey("b")._2 >= 30)
+      // two-level plan: salted summaries feed a merge stage — two
+      // stateful operators, and the raw event volume never groups on
+      // the bare window key (stage 1's key carries the salt)
+      assert(q.lastProgress.stateOperators.length == 2,
+        "expected salted-summary + merge state operators")
+      val plan = {
+        val out = new java.io.ByteArrayOutputStream()
+        Console.withOut(new java.io.PrintStream(out))(q.explain())
+        out.toString
+      }
+      assert("TransformWithState".r.findAllIn(plan).size >= 2, plan)
+      assert(plan.contains("salt"), "stage-1 grouping key lost its salt")
+      // state stays bounded: ≤ nSalts summary shards + 1 merge row
+      val totalState = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      assert(totalState <= 4, s"state rows $totalState exceed shard bound")
+      // a rank whose holder falls out of the summary is tombstoned,
+      // not left stale: the batch always emits exactly k rows per
+      // touched window (null key past the live counter set)
+      val win2 = new Timestamp(base + 2 * 3600000L)
+      ms.addData((win2, "p"))
+      q.processAllAvailable()
+      val w2rows = spark.table("hh_t")
+        .filter(col("windowStart") === win2).collect()
+        .map(r => r.getInt(4) -> (if (r.isNullAt(1)) null else r.getString(1)))
+        .toMap
+      assert(w2rows == Map(1 -> "p", 2 -> null), s"tombstone missing: $w2rows")
+      // advance the watermark beyond window end + grace → eviction
+      ms.addData((new Timestamp(base + 4 * 3600000L), "late"))
+      q.processAllAvailable()
+      ms.addData((new Timestamp(base + 6 * 3600000L), "later"))
+      q.processAllAvailable()
+      assert(spark.table("hh_t").select("windowStart").distinct().count() >= 2)
+      val totals = q.lastProgress.stateOperators.map(_.numRowsTotal).sum
+      assert(totals <= 6, s"evicted windows still in state: $totals rows")
+    } finally q.stop()
   }
 
   test("heavy hitters: merged error bound ≤ Σ per-salt n/capacity") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
-    withRocksDb {
-      val nSalts = 2
-      val capacity = 4
-      val ms = MemoryStream[(Timestamp, String)]
-      val q = graft.streaming.HeavyHitters.windowedTopK(
-          ms.toDS().toDF("ts", "etype"),
-          "ts", "etype", windowMillis = 3600000L, graceMillis = 3600000L,
-          capacity = capacity, k = 6, nSalts = nSalts)
-        .writeStream.format("memory").queryName("hh_bound_t")
-        .outputMode("append").start()
-      try {
-        val base = ts("2024-02-01 08:00:00").getTime
-        // hot key + 40 singletons: decrements are certain in both shards
-        val data = (0 until 60).map(i => (new Timestamp(base + i), "hot")) ++
-          (0 until 40).map(i => (new Timestamp(base + 1000 + i), s"s$i"))
-        ms.addData(data: _*)
-        q.processAllAvailable()
-        // the bound, computed from the data with the SAME salt function
-        // the operator uses (Murmur3 hash pmod nSalts)
-        val perSaltN = data.map(_._2).toDF("k")
-          .select(pmod(hash(col("k")), lit(nSalts)).as("salt"))
-          .groupBy("salt").count().collect()
-          .map(r => r.getLong(1)).toSeq
-        val bound = perSaltN.map(_ / capacity).sum
-        val rows = spark.table("hh_bound_t").collect()
-          .map(r => (if (r.isNullAt(1)) null else r.getString(1),
-            r.getLong(2), r.getLong(3)))
-        assert(rows.nonEmpty)
-        // every emitted maxErr respects the summed per-shard bound
-        rows.foreach { case (k, _, maxErr) =>
-          assert(maxErr <= bound, s"key $k maxErr $maxErr > bound $bound")
-        }
-        // and the estimate brackets the true count for the hot key
-        val hot = rows.find(_._1 == "hot").get
-        assert(hot._2 <= 60 && hot._2 + hot._3 >= 60,
-          s"hot estimate ${hot._2} + err ${hot._3} misses true 60")
-      } finally q.stop()
-    }
-  }
-
-  test("stream-stream interval join: conversions within the bound, state evicted by watermark") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp)]
-    val q = graft.streaming.StreamJoin.within(
-        views.toDS().toDF("user_id", "ts"),
-        buys.toDS().toDF("user_id", "ts"),
-        "user_id", "ts", withinMillis = 3600000L, delay = "10 minutes")
-      .writeStream.format("memory").queryName("conv_t")
+    val nSalts = 2
+    val capacity = 4
+    val ms = MemoryStream[(Timestamp, String)]
+    val q = graft.streaming.HeavyHitters.windowedTopK(
+        ms.toDS().toDF("ts", "etype"),
+        "ts", "etype", windowMillis = 3600000L, graceMillis = 3600000L,
+        capacity = capacity, k = 6, nSalts = nSalts)
+      .writeStream.format("memory").queryName("hh_bound_t")
       .outputMode("append").start()
     try {
-      val base = ts("2024-03-01 09:00:00").getTime
-      views.addData((1L, new Timestamp(base)), (2L, new Timestamp(base)))
-      buys.addData(
-        (1L, new Timestamp(base + 30 * 60000L)),  // in bound (30m)
-        (2L, new Timestamp(base + 2 * 3600000L)), // out of bound (2h)
-        (3L, new Timestamp(base + 60000L)))       // no matching view
+      val base = ts("2024-02-01 08:00:00").getTime
+      // hot key + 40 singletons: decrements are certain in both shards
+      val data = (0 until 60).map(i => (new Timestamp(base + i), "hot")) ++
+        (0 until 40).map(i => (new Timestamp(base + 1000 + i), s"s$i"))
+      ms.addData(data: _*)
       q.processAllAvailable()
-      val rows = spark.table("conv_t").collect()
-        .map(r => (r.getLong(0), r.getLong(3)))
-      assert(rows.toSeq == Seq((1L, 30 * 60000L)), s"got ${rows.toSeq}")
-      // both sides hold bounded state: advance watermarks far past the
-      // interval; the expired buffers shrink instead of accumulating
-      views.addData((9L, new Timestamp(base + 10 * 3600000L)))
-      buys.addData((9L, new Timestamp(base + 10 * 3600000L + 1000L)))
-      q.processAllAvailable()
-      views.addData((8L, new Timestamp(base + 20 * 3600000L)))
-      buys.addData((8L, new Timestamp(base + 20 * 3600000L + 1000L)))
-      q.processAllAvailable()
-      val conv9 = spark.table("conv_t").filter(col("user_id") === 9L).count()
-      assert(conv9 == 1L, "second-wave conversion missed")
-      val state = q.lastProgress.stateOperators.head
-      assert(state.numRowsTotal <= 6,
-        s"interval-join state not evicted: ${state.numRowsTotal} rows")
-    } finally q.stop()
-  }
-
-  test("left-outer interval join emits expired non-conversions with null right side") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val views = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp)]
-    val q = graft.streaming.StreamJoin.withinOrExpired(
-        views.toDS().toDF("user_id", "ts"),
-        buys.toDS().toDF("user_id", "ts"),
-        "user_id", "ts", withinMillis = 3600000L, delay = "10 minutes")
-      .writeStream.format("memory").queryName("conv_outer_t")
-      .outputMode("append").start()
-    try {
-      val base = ts("2024-03-02 09:00:00").getTime
-      views.addData((1L, new Timestamp(base)), (2L, new Timestamp(base)))
-      buys.addData((1L, new Timestamp(base + 60000L))) // only user 1 converts
-      q.processAllAvailable()
-      // advance both watermarks far past base + interval + delay so the
-      // engine can PROVE user 2 never converted
-      views.addData((9L, new Timestamp(base + 5 * 3600000L)))
-      buys.addData((9L, new Timestamp(base + 5 * 3600000L)))
-      q.processAllAvailable()
-      views.addData((8L, new Timestamp(base + 9 * 3600000L)))
-      buys.addData((8L, new Timestamp(base + 9 * 3600000L)))
-      q.processAllAvailable()
-      val rows = spark.table("conv_outer_t")
-        .filter(col("user_id").isin(1L, 2L)).collect()
-        .map(r => r.getLong(0) -> (if (r.isNullAt(2)) None else Some(r.getLong(3))))
-        .toMap
-      assert(rows.get(1L).flatten.contains(60000L), s"conversion lost: $rows")
-      assert(rows.get(2L).contains(None),
-        s"expired non-conversion not emitted with nulls: $rows")
-    } finally q.stop()
-  }
-
-  test("funnel duality: streaming interval join reproduces the batch q81 conversions") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // real table data through the STREAM: replay sf events as one batch
-    val ev = graft.sources.Tables.load(spark, sf, "events")
-      .select(col("user_id"), col("event_type"),
-        expr("timestamp_millis(ts_ns div 1000000)").as("ts"))
-    val viewRows = ev.filter(col("event_type") === "view")
-      .select("user_id", "ts").as[(Long, Timestamp)].collect()
-    val buyRows = ev.filter(col("event_type") === "purchase")
-      .select("user_id", "ts").as[(Long, Timestamp)].collect()
-    val views = MemoryStream[(Long, Timestamp)]
-    val buys = MemoryStream[(Long, Timestamp)]
-    val q = graft.streaming.StreamJoin.within(
-        views.toDS().toDF("user_id", "ts"),
-        buys.toDS().toDF("user_id", "ts"),
-        "user_id", "ts", withinMillis = 3600000L, delay = "1 minute")
-      .writeStream.format("memory").queryName("funnel_dual_t")
-      .outputMode("append").start()
-    try {
-      views.addData(viewRows.toIndexedSeq: _*)
-      buys.addData(buyRows.toIndexedSeq: _*)
-      q.processAllAvailable()
-      val streamed = spark.table("funnel_dual_t")
-        .select("user_id", "l_ts", "r_ts").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime, r.getTimestamp(2).getTime))
-        .toSet
-      // batch reference: every (view, purchase-in-bound) pair — the
-      // unrestricted form of q81's first-touch aggregation
-      val batch = ev.filter(col("event_type") === "view").as("v")
-        .join(ev.filter(col("event_type") === "purchase").as("p"),
-          col("v.user_id") === col("p.user_id") &&
-            col("p.ts") > col("v.ts") &&
-            col("p.ts") <= col("v.ts") + expr("INTERVAL 1 HOUR"))
-        .select(col("v.user_id"), unix_millis(col("v.ts")).as("l"),
-          unix_millis(col("p.ts")).as("r")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(batch.nonEmpty, "no conversions in the corpus at all")
-      assert(streamed == batch,
-        s"duality broken: stream-only ${streamed.diff(batch).take(3)}, " +
-          s"batch-only ${batch.diff(streamed).take(3)}")
+      // the bound, computed from the data with the SAME salt function
+      // the operator uses (Murmur3 hash pmod nSalts)
+      val perSaltN = data.map(_._2).toDF("k")
+        .select(pmod(hash(col("k")), lit(nSalts)).as("salt"))
+        .groupBy("salt").count().collect()
+        .map(r => r.getLong(1)).toSeq
+      val bound = perSaltN.map(_ / capacity).sum
+      val rows = spark.table("hh_bound_t").collect()
+        .map(r => (if (r.isNullAt(1)) null else r.getString(1),
+          r.getLong(2), r.getLong(3)))
+      assert(rows.nonEmpty)
+      // every emitted maxErr respects the summed per-shard bound
+      rows.foreach { case (k, _, maxErr) =>
+        assert(maxErr <= bound, s"key $k maxErr $maxErr > bound $bound")
+      }
+      // and the estimate brackets the true count for the hot key
+      val hot = rows.find(_._1 == "hot").get
+      assert(hot._2 <= 60 && hot._2 + hot._3 >= 60,
+        s"hot estimate ${hot._2} + err ${hot._3} misses true 60")
     } finally q.stop()
   }
 
