@@ -77,15 +77,13 @@ object GraftSession {
   /** Release every block the last query pinned: several query fns use
     * eager `localCheckpoint(true)` to cut iterative lineage (resolve,
     * PageRank) or pin reused frames, and those checkpoint RDD blocks
-    * stay in the block manager until unpersisted. A long multi-query
-    * run (Bench's 211 queries in one JVM) that never releases them
-    * accumulates block-manager pressure whose eviction cost lands on
-    * whichever queries run LATE — the r9 driver record measured q91 at
-    * 15.29s in-process vs 0.98s isolated for exactly this reason.
-    * Called between Bench queries so each measurement sees a clean
-    * block manager. Safe anywhere, running streams included: graft
-    * queries never rely on cross-query persisted state, and the
-    * `global_temp` serving views hold their rows on the driver
+    * stay in the block manager until unpersisted. Invariant: after
+    * this call no query's pinned blocks remain, so in a multi-query
+    * run each query starts on a clean block manager and pays no
+    * eviction cost for the ones before it. Safe anywhere, running
+    * streams included: graft queries never rely on cross-query
+    * persisted state, and the `global_temp` serving views hold their
+    * rows on the driver
     * ([[graft.state.MaterializedViews.upsertIntoGlobalView]]), not in
     * pinned blocks. */
   def releaseCaches(spark: SparkSession): Unit = {

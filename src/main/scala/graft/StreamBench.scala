@@ -3,11 +3,12 @@ package graft
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core._
-import graft.streaming.DeltaTracker
+import graft.streaming.{DeltaTracker, Streams}
 
 /** Streaming throughput micro-bench (the r8 verdict's task 4): rows/sec
   * through the engine's two hottest stateful streaming paths —
@@ -70,31 +71,45 @@ object StreamBench {
     val ms = MemoryStream[StampedStats]
     val store = s"$outDir/store"
     val warmupRows = math.min(batchRows, 1000)
-    val q = DeltaTracker.statewise(ms.toDS())
-      .writeStream
-      .option("checkpointLocation", s"$outDir/ck")
-      .outputMode("append")
-      .foreachBatch { (b: Dataset[StampedDelta], _: Long) =>
-        b.write.mode("append").parquet(store): Unit
-      }
-      .start()
+    val q = Streams.foreachBatch(DeltaTracker.statewise(ms.toDS()).toDF(),
+      "append", Some(s"$outDir/ck")) { (b, _) =>
+      b.write.mode("append").parquet(store)
+    }
+    val (_, _, sec) = drive(q, ms, batch(0, warmupRows, keys), batches, Nil)(
+      batch(_, batchRows, keys))(())
+    val total = batchRows.toLong * batches
+    val stored = spark.read.parquet(store).count() - warmupRows
+    Result(batchRows, batches, keys, total, stored, sec, total / sec)
+  }
+
+  /** The loop every harness shares: feed `warmup` outside the clock
+    * (state-store init + codegen JIT dominate a cold first
+    * micro-batch), read the sink's post-warmup baseline with `settle`,
+    * pre-build the `batches` feeds (driver-side row construction must
+    * not charge data-generation cost to the engine's rows/sec), then
+    * time `addData` + `processAllAvailable` per feed and, last, per
+    * non-empty `flush`. `q` stops on every path. Returns the baseline,
+    * the feeds and the timed seconds. */
+  private def drive[A, B](q: StreamingQuery, ms: MemoryStream[A],
+      warmup: Seq[A], batches: Int, flush: Seq[A])(
+      feed: Int => Seq[A])(settle: => B): (B, Seq[Seq[A]], Double) =
     try {
-      ms.addData(batch(0, warmupRows, keys))
+      ms.addData(warmup)
       q.processAllAvailable()
-      // pre-materialize the feeds: driver-side row construction must
-      // not charge data-generation cost to the engine's rows/sec
-      val feeds = (1 to batches).map(i => batch(i, batchRows, keys))
+      val base = settle
+      val feeds = (1 to batches).map(feed)
       val t0 = System.nanoTime()
-      feeds.foreach { f =>
+      (feeds :+ flush).filter(_.nonEmpty).foreach { f =>
         ms.addData(f)
         q.processAllAvailable()
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      val stored = spark.read.parquet(store).count() - warmupRows
-      Result(batchRows, batches, keys, total, stored, sec, total / sec)
+      (base, feeds, (System.nanoTime() - t0) / 1e9)
     } finally q.stop()
-  }
+
+  /** Warmup size for the decade-structured document feeds: whole
+    * decades, at most one 1,000-row batch. */
+  private def decadeWarmup(batchRows: Int): Int =
+    math.max(10, math.min(batchRows, 1000) / 10 * 10)
 
   /** One micro-batch of document events with a known duplicate
     * structure: global row index g takes the TEXT of row (g − g%10 + 3)
@@ -130,26 +145,19 @@ object StreamBench {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(Long, String, Long)]
     val novelDir = s"$outDir/novel"
-    val q = graft.streaming.IncrementalDedup.run(
-      ms.toDF().toDF("doc_id", "text", "ts_us"),
-      "doc_id", "text", "ts_us", s"$outDir/store",
-      checkpointLocation = Some(s"$outDir/ck"),
-      bloomExpectedItems = Some(batchRows.toLong * (batches + 1))) {
-      (novel, _) => novel.write.mode("append").parquet(novelDir): Unit
+    val q = Streams.foreachBatch(ms.toDF().toDF("doc_id", "text", "ts_us"),
+      "append", Some(s"$outDir/ck")) { (b, _) =>
+      graft.streaming.IncrementalDedup.dedupBatch(b, "doc_id", "text",
+        "ts_us", s"$outDir/store",
+        bloomExpectedItems = Some(batchRows.toLong * (batches + 1)))
+        .write.mode("append").parquet(novelDir)
     }
-    try {
-      val warmupRows = math.max(10, math.min(batchRows, 1000) / 10 * 10)
-      ms.addData(dedupBatch(0, warmupRows))
-      q.processAllAvailable()
-      val warmupNovel = spark.read.parquet(novelDir).count()
-      val feeds = (1 to batches).map(i => dedupBatch(i, batchRows))
-      val t0 = System.nanoTime()
-      feeds.foreach { f => ms.addData(f); q.processAllAvailable() }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      val stored = spark.read.parquet(novelDir).count() - warmupNovel
-      Result(batchRows, batches, 0, total, stored, sec, total / sec)
-    } finally q.stop()
+    val (warmupNovel, _, sec) =
+      drive(q, ms, dedupBatch(0, decadeWarmup(batchRows)), batches, Nil)(
+        dedupBatch(_, batchRows))(spark.read.parquet(novelDir).count())
+    val total = batchRows.toLong * batches
+    val stored = spark.read.parquet(novelDir).count() - warmupNovel
+    Result(batchRows, batches, 0, total, stored, sec, total / sec)
   }
 
   /** One micro-batch for the NEAR-dedup harness: [[dedupBatch]]'s
@@ -199,25 +207,17 @@ object StreamBench {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(Long, String, Long)]
     val novelDir = s"$outDir/novel"
-    val q = graft.streaming.IncrementalNearDedup.run(
-      ms.toDF().toDF("doc_id", "text", "ts_us"),
-      "doc_id", "text", "ts_us", s"$outDir/store",
-      checkpointLocation = Some(s"$outDir/ck")) {
-      (novel, _) => novel.write.mode("append").parquet(novelDir): Unit
+    val q = Streams.foreachBatch(ms.toDF().toDF("doc_id", "text", "ts_us"),
+      "append", Some(s"$outDir/ck")) { (b, _) =>
+      graft.streaming.IncrementalNearDedup.dedupBatch(b, "doc_id", "text",
+        "ts_us", s"$outDir/store").write.mode("append").parquet(novelDir)
     }
-    try {
-      val warmupRows = math.max(10, math.min(batchRows, 1000) / 10 * 10)
-      ms.addData(nearDedupBatch(0, warmupRows))
-      q.processAllAvailable()
-      val warmupNovel = spark.read.parquet(novelDir).count()
-      val feeds = (1 to batches).map(i => nearDedupBatch(i, batchRows))
-      val t0 = System.nanoTime()
-      feeds.foreach { f => ms.addData(f); q.processAllAvailable() }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      val stored = spark.read.parquet(novelDir).count() - warmupNovel
-      Result(batchRows, batches, 0, total, stored, sec, total / sec)
-    } finally q.stop()
+    val (warmupNovel, _, sec) =
+      drive(q, ms, nearDedupBatch(0, decadeWarmup(batchRows)), batches, Nil)(
+        nearDedupBatch(_, batchRows))(spark.read.parquet(novelDir).count())
+    val total = batchRows.toLong * batches
+    val stored = spark.read.parquet(novelDir).count() - warmupNovel
+    Result(batchRows, batches, 0, total, stored, sec, total / sec)
   }
 
   /** One micro-batch for the CHUNK-dedup harness: 5 chunks of exactly
@@ -262,44 +262,38 @@ object StreamBench {
     val ms = MemoryStream[(Long, String, Long)]
     val outParquet = s"$outDir/deduped"
     val store = s"$outDir/store"
-    val q = graft.streaming.IncrementalChunkDedup.run(
-      ms.toDF().toDF("doc_id", "text", "ts_us"),
-      "doc_id", "text", "ts_us", store, chunkWords = 8,
-      checkpointLocation = Some(s"$outDir/ck"),
-      bloomExpectedItems = Some(5L * batchRows * (batches + 1))) {
-      (deduped, _) =>
-        deduped.select("doc_id", "total_chunks", "kept_chunks")
-          .write.mode("append").parquet(outParquet): Unit
+    val q = Streams.foreachBatch(ms.toDF().toDF("doc_id", "text", "ts_us"),
+      "append", Some(s"$outDir/ck")) { (b, _) =>
+      graft.streaming.IncrementalChunkDedup.dedupBatch(b, "doc_id", "text",
+        "ts_us", store, chunkWords = 8,
+        bloomExpectedItems = Some(5L * batchRows * (batches + 1)))
+        .select("doc_id", "total_chunks", "kept_chunks")
+        .write.mode("append").parquet(outParquet)
     }
-    try {
-      val warmupRows = math.max(10, math.min(batchRows, 1000) / 10 * 10)
-      ms.addData(chunkBatch(0, warmupRows))
-      q.processAllAvailable()
-      val warmupKept = spark.read.parquet(outParquet)
-        .agg(org.apache.spark.sql.functions.sum("kept_chunks"))
-        .collect().head.getLong(0)
-      val feeds = (1 to batches).map(i => chunkBatch(i, batchRows))
-      val t0 = System.nanoTime()
-      feeds.foreach { f => ms.addData(f); q.processAllAvailable() }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      val fedChunks = 5L * (warmupRows + total)
-      val out = spark.read.parquet(outParquet)
-        .agg(org.apache.spark.sql.functions.sum("total_chunks"),
-          org.apache.spark.sql.functions.sum("kept_chunks"))
-        .collect().head
-      val (sumTotal, sumKept) = (out.getLong(0), out.getLong(1))
-      val storedDigests = graft.state.KeyedStore.read(spark, store).count()
-      require(storedDigests * 10 == fedChunks * 7,
-        s"chunk accounting: $storedDigests stored digests != " +
-          s"0.7 x $fedChunks fed chunks")
-      require(sumKept == storedDigests,
-        s"chunk accounting: kept $sumKept != stored $storedDigests")
-      require(sumTotal == fedChunks,
-        s"chunk accounting: total_chunks $sumTotal != fed $fedChunks")
-      Result(batchRows, batches, 0, total, sumKept - warmupKept, sec,
-        total / sec)
-    } finally q.stop()
+    val warmupRows = decadeWarmup(batchRows)
+    val (warmupKept, _, sec) =
+      drive(q, ms, chunkBatch(0, warmupRows), batches, Nil)(
+        chunkBatch(_, batchRows))(
+        spark.read.parquet(outParquet)
+          .agg(org.apache.spark.sql.functions.sum("kept_chunks"))
+          .collect().head.getLong(0))
+    val total = batchRows.toLong * batches
+    val fedChunks = 5L * (warmupRows + total)
+    val out = spark.read.parquet(outParquet)
+      .agg(org.apache.spark.sql.functions.sum("total_chunks"),
+        org.apache.spark.sql.functions.sum("kept_chunks"))
+      .collect().head
+    val (sumTotal, sumKept) = (out.getLong(0), out.getLong(1))
+    val storedDigests = graft.state.KeyedStore.read(spark, store).count()
+    require(storedDigests * 10 == fedChunks * 7,
+      s"chunk accounting: $storedDigests stored digests != " +
+        s"0.7 x $fedChunks fed chunks")
+    require(sumKept == storedDigests,
+      s"chunk accounting: kept $sumKept != stored $storedDigests")
+    require(sumTotal == fedChunks,
+      s"chunk accounting: total_chunks $sumTotal != fed $fedChunks")
+    Result(batchRows, batches, 0, total, sumKept - warmupKept, sec,
+      total / sec)
   }
 
   /** One micro-batch for the SCD2 harness: `keys` entity keys ×
@@ -337,46 +331,40 @@ object StreamBench {
     val ms = MemoryStream[(Long, String, Long, Long)]
     val closedDir = s"$outDir/closed"
     val store = s"$outDir/store"
-    val q = graft.streaming.IncrementalScd.run(
-      ms.toDF().toDF("user_id", "state", "ts_us", "event_id"),
-      "user_id", "state", "ts_us", "event_id", store,
-      checkpointLocation = Some(s"$outDir/ck")) {
-      (closed, _) => closed.write.mode("append").parquet(closedDir): Unit
+    val q = Streams.foreachBatch(
+      ms.toDF().toDF("user_id", "state", "ts_us", "event_id"), "append",
+      Some(s"$outDir/ck")) { (b, id) =>
+      graft.streaming.IncrementalScd.scdBatch(b, "user_id", "state", "ts_us",
+        "event_id", store, id).write.mode("append").parquet(closedDir)
     }
-    try {
-      // warmup: one change per key — initializes every key's open run
-      val warmup = scdChangeBatch(0, keys, 1)
-      ms.addData(warmup)
-      q.processAllAvailable()
-      val feeds = (1 to batches).map(i => scdChangeBatch(i, keys, changes))
-      val t0 = System.nanoTime()
-      feeds.foreach { f => ms.addData(f); q.processAllAvailable() }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      val fedEvents = warmup.size + total
-      val closed = spark.read.parquet(closedDir)
-        .select("user_id", "state", "version", "valid_from", "valid_to")
-      val closedN = closed.count()
-      require(closedN == fedEvents - keys,
-        s"scd accounting: $closedN closed intervals != " +
-          s"fed $fedEvents - $keys keys")
-      // duality at bench scale: stream closed+open == batch rebuild
-      val rebuild = graft.operators.Scd.buildHistory(
-        (warmup ++ feeds.flatten).toDF("user_id", "state", "ts_us", "event_id"),
-        "user_id", "state", "ts_us", "event_id").localCheckpoint(true)
-      val rbClosed = rebuild.filter(!org.apache.spark.sql.functions.col("is_current"))
-        .select("user_id", "state", "version", "valid_from", "valid_to")
-      require(closed.except(rbClosed).isEmpty && rbClosed.except(closed).isEmpty,
-        "scd duality: streamed closed intervals != batch rebuild")
-      val open = graft.streaming.IncrementalScd
-        .openRuns(spark, store, "user_id", "state")
-        .select("user_id", "state", "version", "valid_from")
-      val rbOpen = rebuild.filter(org.apache.spark.sql.functions.col("is_current"))
-        .select("user_id", "state", "version", "valid_from")
-      require(open.except(rbOpen).isEmpty && rbOpen.except(open).isEmpty,
-        "scd duality: store open runs != batch rebuild current rows")
-      Result(batchRows, batches, keys, total, closedN, sec, total / sec)
-    } finally q.stop()
+    // warmup: one change per key — initializes every key's open run
+    val warmup = scdChangeBatch(0, keys, 1)
+    val (_, feeds, sec) = drive(q, ms, warmup, batches, Nil)(
+      scdChangeBatch(_, keys, changes))(())
+    val total = batchRows.toLong * batches
+    val fedEvents = warmup.size + total
+    val closed = spark.read.parquet(closedDir)
+      .select("user_id", "state", "version", "valid_from", "valid_to")
+    val closedN = closed.count()
+    require(closedN == fedEvents - keys,
+      s"scd accounting: $closedN closed intervals != " +
+        s"fed $fedEvents - $keys keys")
+    // duality at bench scale: stream closed+open == batch rebuild
+    val rebuild = graft.operators.Scd.buildHistory(
+      (warmup ++ feeds.flatten).toDF("user_id", "state", "ts_us", "event_id"),
+      "user_id", "state", "ts_us", "event_id").localCheckpoint(true)
+    val rbClosed = rebuild.filter(!org.apache.spark.sql.functions.col("is_current"))
+      .select("user_id", "state", "version", "valid_from", "valid_to")
+    require(closed.except(rbClosed).isEmpty && rbClosed.except(closed).isEmpty,
+      "scd duality: streamed closed intervals != batch rebuild")
+    val open = graft.streaming.IncrementalScd
+      .openRuns(spark, store, "user_id", "state")
+      .select("user_id", "state", "version", "valid_from")
+    val rbOpen = rebuild.filter(org.apache.spark.sql.functions.col("is_current"))
+      .select("user_id", "state", "version", "valid_from")
+    require(open.except(rbOpen).isEmpty && rbOpen.except(open).isEmpty,
+      "scd duality: store open runs != batch rebuild current rows")
+    Result(batchRows, batches, keys, total, closedN, sec, total / sec)
   }
 
   /** splitmix64 finalizer — deterministic pseudo-random 64-bit mix for
@@ -447,26 +435,18 @@ object StreamBench {
     implicit val sqlCtx = spark.sqlContext
     val ms = MemoryStream[(Long, Array[Float], Long)]
     val novelDir = s"$outDir/novel"
-    val q = graft.streaming.IncrementalEmbeddingNearDedup.run(
-      ms.toDF().toDF("doc_id", "vec", "ts_us"),
-      "doc_id", "vec", "ts_us", s"$outDir/store",
-      checkpointLocation = Some(s"$outDir/ck"),
-      nBands = 8, bandBits = 16) {
-      (novel, _) => novel.write.mode("append").parquet(novelDir): Unit
+    val q = Streams.foreachBatch(ms.toDF().toDF("doc_id", "vec", "ts_us"),
+      "append", Some(s"$outDir/ck")) { (b, _) =>
+      graft.streaming.IncrementalEmbeddingNearDedup.dedupBatch(b, "doc_id",
+        "vec", "ts_us", s"$outDir/store", nBands = 8, bandBits = 16)
+        .write.mode("append").parquet(novelDir)
     }
-    try {
-      val warmupRows = math.max(10, math.min(batchRows, 1000) / 10 * 10)
-      ms.addData(embeddingBatch(0, warmupRows))
-      q.processAllAvailable()
-      val warmupNovel = spark.read.parquet(novelDir).count()
-      val feeds = (1 to batches).map(i => embeddingBatch(i, batchRows))
-      val t0 = System.nanoTime()
-      feeds.foreach { f => ms.addData(f); q.processAllAvailable() }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      val stored = spark.read.parquet(novelDir).count() - warmupNovel
-      Result(batchRows, batches, 0, total, stored, sec, total / sec)
-    } finally q.stop()
+    val (warmupNovel, _, sec) =
+      drive(q, ms, embeddingBatch(0, decadeWarmup(batchRows)), batches, Nil)(
+        embeddingBatch(_, batchRows))(spark.read.parquet(novelDir).count())
+    val total = batchRows.toLong * batches
+    val stored = spark.read.parquet(novelDir).count() - warmupNovel
+    Result(batchRows, batches, 0, total, stored, sec, total / sec)
   }
 
   /** Deterministic (day, type, Δcount) delta rows: 365 day keys × 37
@@ -495,23 +475,17 @@ object StreamBench {
     val q = graft.streaming.EntropyTracker.track(ms.toDS())
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
-    try {
-      val warmupRows = math.max(10, math.min(batchRows, 1000))
-      ms.addData(entropyBatch(0, warmupRows))
-      q.processAllAvailable()
-      val feeds = (1 to batches).map(i => entropyBatch(i, batchRows))
-      val t0 = System.nanoTime()
-      feeds.foreach { f => ms.addData(f); q.processAllAvailable() }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      val fedC = (entropyBatch(0, warmupRows) ++ feeds.flatten).map(_.c).sum
-      val finalN = spark.table(name)
-        .groupBy("day").agg(org.apache.spark.sql.functions.max("n").as("n"))
-        .agg(org.apache.spark.sql.functions.sum("n")).collect().head.getLong(0)
-      require(finalN == fedC,
-        s"entropy accounting: final per-day counts $finalN != fed $fedC")
-      Result(batchRows, batches, 365, total, finalN, sec, total / sec)
-    } finally q.stop()
+    val warmup = entropyBatch(0, math.max(10, math.min(batchRows, 1000)))
+    val (_, feeds, sec) =
+      drive(q, ms, warmup, batches, Nil)(entropyBatch(_, batchRows))(())
+    val total = batchRows.toLong * batches
+    val fedC = (warmup ++ feeds.flatten).map(_.c).sum
+    val finalN = spark.table(name)
+      .groupBy("day").agg(org.apache.spark.sql.functions.max("n").as("n"))
+      .agg(org.apache.spark.sql.functions.sum("n")).collect().head.getLong(0)
+    require(finalN == fedC,
+      s"entropy accounting: final per-day counts $finalN != fed $fedC")
+    Result(batchRows, batches, 365, total, finalN, sec, total / sec)
   }
 
   /** Deterministic splitmix64 — distinct g ⇒ distinct 48-bit hash with
@@ -545,39 +519,32 @@ object StreamBench {
     val q = graft.streaming.KmvTracker.track(ms.toDS(), 256)
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
-    try {
-      val warmupRows = math.max(10, math.min(batchRows, 1000))
-      val warmup = kmvBatch(0, warmupRows, keys)
-      ms.addData(warmup)
-      q.processAllAvailable()
-      val feeds = (1 to batches).map(i => kmvBatch(i, batchRows, keys))
-      val t0 = System.nanoTime()
-      feeds.foreach { f => ms.addData(f); q.processAllAvailable() }
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      // duality accounting: last emission per key == batch aggregate
-      val E = graft.functions.expressions.GraftExpressions
-      val batch = (warmup ++ feeds.flatten).toDF("key", "h")
-        .groupBy("key").agg(E.kmvMins(org.apache.spark.sql.functions.col("h"),
-          256).as("sk"))
-        .selectExpr("key", "size(sk) AS n_sk",
-          "CASE WHEN size(sk) < 256 THEN 0L ELSE element_at(sk, 256) END AS hk")
-        .collect().map(r => r.getString(0) -> (r.getInt(1), r.getLong(2))).toMap
-      val emissions = spark.table(name)
-        .as[graft.streaming.KmvPoint].collect()
-      // latest per key by the tracker's monotone `ver`, not by row
-      // position in the memory sink (non-contractual order — ADVICE r11)
-      val last = emissions.groupBy(_.key)
-        .map { case (_, xs) => xs.maxBy(_.ver) }
-      require(last.size == keys, s"kmv: ${last.size} keys emitted, want $keys")
-      last.foreach { p =>
-        val (nSk, hk) = batch(p.key)
-        require(p.nSk == nSk && p.hK == hk,
-          s"kmv duality broke for ${p.key}: stream (${p.nSk},${p.hK}) " +
-            s"!= batch ($nSk,$hk)")
-      }
-      Result(batchRows, batches, keys, total, total, sec, total / sec)
-    } finally q.stop()
+    val warmup = kmvBatch(0, math.max(10, math.min(batchRows, 1000)), keys)
+    val (_, feeds, sec) =
+      drive(q, ms, warmup, batches, Nil)(kmvBatch(_, batchRows, keys))(())
+    val total = batchRows.toLong * batches
+    // duality accounting: last emission per key == batch aggregate
+    val E = graft.functions.expressions.GraftExpressions
+    val batch = (warmup ++ feeds.flatten).toDF("key", "h")
+      .groupBy("key").agg(E.kmvMins(org.apache.spark.sql.functions.col("h"),
+        256).as("sk"))
+      .selectExpr("key", "size(sk) AS n_sk",
+        "CASE WHEN size(sk) < 256 THEN 0L ELSE element_at(sk, 256) END AS hk")
+      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getLong(2))).toMap
+    val emissions = spark.table(name)
+      .as[graft.streaming.KmvPoint].collect()
+    // latest per key by the tracker's monotone `ver`, not by row
+    // position in the memory sink (non-contractual order — ADVICE r11)
+    val last = emissions.groupBy(_.key)
+      .map { case (_, xs) => xs.maxBy(_.ver) }
+    require(last.size == keys, s"kmv: ${last.size} keys emitted, want $keys")
+    last.foreach { p =>
+      val (nSk, hk) = batch(p.key)
+      require(p.nSk == nSk && p.hK == hk,
+        s"kmv duality broke for ${p.key}: stream (${p.nSk},${p.hK}) " +
+          s"!= batch ($nSk,$hk)")
+    }
+    Result(batchRows, batches, keys, total, total, sec, total / sec)
   }
 
   /** One micro-batch of skewed windowed events: each batch is one
@@ -611,49 +578,41 @@ object StreamBench {
       windowMillis = 1000L, graceMillis = 0L, capacity = 64, k = 10)
       .writeStream.format("memory").queryName(name)
       .outputMode("append").start()
-    try {
-      // warmup occupies window 0 — it must sit BELOW the measured
-      // windows: a warmup past them would advance the event-time
-      // watermark and turn every measured row into dropped late data
-      val warmupRows = math.max(10, math.min(batchRows, 1000))
-      ms.addData(hhBatch(0, warmupRows))
-      q.processAllAvailable()
-      val feeds = (1 to batches).map(i => hhBatch(i, batchRows))
-      val t0 = System.nanoTime()
-      feeds.foreach { f => ms.addData(f); q.processAllAvailable() }
-      // the flush closes every fed window (event time past all ends)
-      ms.addData(Seq((new java.sql.Timestamp(
-        (batches + 10).toLong * 1000L), "flush")))
-      q.processAllAvailable()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val total = batchRows.toLong * batches
-      val truth: Map[(Long, String), Long] = feeds.flatten
-        .groupBy(r => (r._1.getTime / 1000L * 1000L, r._2))
-        .map { case (k, xs) => k -> xs.size.toLong }
-      val emitted: Array[(Long, String, Long, Long)] = spark.table(name)
-        .filter(org.apache.spark.sql.functions.col("key").isNotNull)
-        .select("windowStart", "key", "estCount", "maxErr")
-        .collect()
-        .map(r => (r.getTimestamp(0).getTime, r.getString(1),
-          r.getLong(2), r.getLong(3)))
-        .filter(t => t._1 / 1000L >= 1 && t._1 / 1000L <= batches)
-      require(emitted.nonEmpty, "heavy hitters: no windows emitted")
-      emitted.foreach { case (ws, k, est, err) =>
-        val tru = truth.getOrElse((ws, k), 0L)
-        require(est <= tru && tru <= est + err,
-          s"MG bound broke for window $ws key $k: est=$est err=$err true=$tru")
-      }
-      val byWindow = emitted.groupBy(_._1).view.mapValues(_.map(_._2).toSet)
-      (1 to batches).foreach { i =>
-        val ws = i.toLong * 1000L
-        val top3 = truth.collect { case ((w, k), c) if w == ws => k -> c }
-          .toSeq.sortBy(-_._2).take(3).map(_._1)
-        val got = byWindow.getOrElse(ws, Set.empty)
-        top3.foreach(k => require(got.contains(k),
-          s"window $ws lost true heavy hitter $k (got $got)"))
-      }
-      Result(batchRows, batches, 1007, total, total, sec, total / sec)
-    } finally q.stop()
+    // warmup occupies window 0 — it must sit BELOW the measured
+    // windows: a warmup past them would advance the event-time
+    // watermark and turn every measured row into dropped late data.
+    // The timed flush closes every fed window (event time past all ends).
+    val (_, feeds, sec) = drive(q, ms,
+      hhBatch(0, math.max(10, math.min(batchRows, 1000))), batches,
+      Seq((new java.sql.Timestamp((batches + 10).toLong * 1000L),
+        "flush")))(hhBatch(_, batchRows))(())
+    val total = batchRows.toLong * batches
+    val truth: Map[(Long, String), Long] = feeds.flatten
+      .groupBy(r => (r._1.getTime / 1000L * 1000L, r._2))
+      .map { case (k, xs) => k -> xs.size.toLong }
+    val emitted: Array[(Long, String, Long, Long)] = spark.table(name)
+      .filter(org.apache.spark.sql.functions.col("key").isNotNull)
+      .select("windowStart", "key", "estCount", "maxErr")
+      .collect()
+      .map(r => (r.getTimestamp(0).getTime, r.getString(1),
+        r.getLong(2), r.getLong(3)))
+      .filter(t => t._1 / 1000L >= 1 && t._1 / 1000L <= batches)
+    require(emitted.nonEmpty, "heavy hitters: no windows emitted")
+    emitted.foreach { case (ws, k, est, err) =>
+      val tru = truth.getOrElse((ws, k), 0L)
+      require(est <= tru && tru <= est + err,
+        s"MG bound broke for window $ws key $k: est=$est err=$err true=$tru")
+    }
+    val byWindow = emitted.groupBy(_._1).view.mapValues(_.map(_._2).toSet)
+    (1 to batches).foreach { i =>
+      val ws = i.toLong * 1000L
+      val top3 = truth.collect { case ((w, k), c) if w == ws => k -> c }
+        .toSeq.sortBy(-_._2).take(3).map(_._1)
+      val got = byWindow.getOrElse(ws, Set.empty)
+      top3.foreach(k => require(got.contains(k),
+        s"window $ws lost true heavy hitter $k (got $got)"))
+    }
+    Result(batchRows, batches, 1007, total, total, sec, total / sec)
   }
 
   private def runsJson(results: Seq[Result]): String = results.map { r =>
@@ -678,93 +637,52 @@ object StreamBench {
     if (only.isDefined)
       System.err.println("[streambench] WARNING: SPARK_STREAMBENCH_ONLY " +
         s"is set — running only ${only.get.mkString(",")}")
-    val sizes = Seq((10000, 10), (100000, 5))
-    val results = if (!want("delta")) Seq.empty else sizes.map { case (rows, n) =>
-      val dir = Files.createTempDirectory("streambench").toFile.getAbsolutePath
-      System.err.println(s"[streambench] delta batchRows=$rows batches=$n")
-      run(spark, rows, n, 40, dir)
-    }
-    if (results.nonEmpty)
-      println(s"""{"metric":"stream_rows_per_sec","runs":${runsJson(results)}}""")
-    val dedupSizes = Seq((10000, 10), (100000, 3))
-    val dedupResults = if (!want("incdedup")) Seq.empty else dedupSizes.map { case (rows, n) =>
-      val dir = Files.createTempDirectory("streambench-dd").toFile.getAbsolutePath
-      System.err.println(s"[streambench] incdedup batchRows=$rows batches=$n")
-      runDedup(spark, rows, n, dir)
-    }
-    if (dedupResults.nonEmpty)
-      println(s"""{"metric":"incdedup_rows_per_sec","runs":${runsJson(dedupResults)}}""")
-    // chunk dedup pays 5 chunk-digest rows per doc where exact dedup
-    // pays one fingerprint — near-dedup's batch sizing applies
-    val chunkSizes = Seq((10000, 5), (100000, 2))
-    val chunkResults = if (!want("incchunkdedup")) Seq.empty else chunkSizes.map { case (rows, n) =>
-      val dir = Files.createTempDirectory("streambench-cd").toFile.getAbsolutePath
-      System.err.println(s"[streambench] incchunkdedup batchRows=$rows batches=$n")
-      runChunkDedup(spark, rows, n, dir)
-    }
-    if (chunkResults.nonEmpty)
-      println(s"""{"metric":"incchunkdedup_rows_per_sec","runs":${runsJson(chunkResults)}}""")
-    // SCD2: per-batch cost is the batch window + a keys-sized store
-    // round-trip, so it sustains the exact-dedup batch counts
-    val scdSizes = Seq((10000, 10), (100000, 3))
-    val scdResults = if (!want("incscd")) Seq.empty else scdSizes.map { case (rows, n) =>
-      val dir = Files.createTempDirectory("streambench-scd").toFile.getAbsolutePath
-      System.err.println(s"[streambench] incscd batchRows=$rows batches=$n")
-      runScd(spark, rows, n, dir)
-    }
-    if (scdResults.nonEmpty)
-      println(s"""{"metric":"incscd_rows_per_sec","runs":${runsJson(scdResults)}}""")
-    // near-dedup pays ~16 band rows + a payload row per doc where exact
-    // dedup pays one fingerprint — fewer batches at the large size keep
-    // the harness bounded while still measuring a store 3 batches deep
-    val nearSizes = Seq((10000, 5), (100000, 2))
-    val nearResults = if (!want("incneardedup")) Seq.empty else nearSizes.map { case (rows, n) =>
-      val dir = Files.createTempDirectory("streambench-nd").toFile.getAbsolutePath
-      System.err.println(s"[streambench] incneardedup batchRows=$rows batches=$n")
-      runNearDedup(spark, rows, n, dir)
-    }
-    if (nearResults.nonEmpty)
-      println(s"""{"metric":"incneardedup_rows_per_sec","runs":${runsJson(nearResults)}}""")
-    // embedding near-dedup: 8 band rows + one quantized-vector payload
-    // row per admitted doc, 64 float components quantized per row —
-    // the heaviest per-row Incremental* member, so the large size runs
-    // 2 batches like the text near-dup harness; band bits sized to the
-    // batch (see runEmbeddingNearDedup's scaladoc)
-    val embSizes = Seq((10000, 5), (100000, 2))
-    val embResults = if (!want("incembdedup")) Seq.empty else embSizes.map { case (rows, n) =>
-      val dir = Files.createTempDirectory("streambench-emb").toFile.getAbsolutePath
-      System.err.println(s"[streambench] incembdedup batchRows=$rows batches=$n")
-      runEmbeddingNearDedup(spark, rows, n, dir)
-    }
-    if (embResults.nonEmpty)
-      println(s"""{"metric":"incembdedup_rows_per_sec","runs":${runsJson(embResults)}}""")
-    val entropySizes = Seq((10000, 10), (100000, 5))
-    if (want("entropy")) {
-      val entropyResults = entropySizes.map { case (rows, n) =>
-        System.err.println(s"[streambench] entropy batchRows=$rows batches=$n")
-        runEntropy(spark, rows, n)
-      }
-      println(s"""{"metric":"entropy_rows_per_sec","runs":${runsJson(entropyResults)}}""")
-    }
-    val kmvSizes = Seq((10000, 10), (100000, 5))
-    if (want("kmv")) {
-      val kmvResults = kmvSizes.map { case (rows, n) =>
-        System.err.println(s"[streambench] kmv batchRows=$rows batches=$n")
-        runKmv(spark, rows, n)
-      }
-      println(s"""{"metric":"kmv_rows_per_sec","runs":${runsJson(kmvResults)}}""")
-    }
-    val hhSizes = Seq((10000, 10), (100000, 5))
-    if (want("heavyhitters")) {
-      val hhResults = hhSizes.map { case (rows, n) =>
-        System.err.println(s"[streambench] heavyhitters batchRows=$rows batches=$n")
-        runHeavyHitters(spark, rows, n)
-      }
-      println(s"""{"metric":"heavyhitters_rows_per_sec","runs":${runsJson(hhResults)}}""")
-    }
+    def tmp(prefix: String) =
+      Files.createTempDirectory(prefix).toFile.getAbsolutePath
+    // (name, printed metric, (batchRows, batches) sizes, harness)
+    val harnesses = Seq[(String, String, Seq[(Int, Int)], (Int, Int) => Result)](
+      ("delta", "stream", Seq((10000, 10), (100000, 5)),
+        run(spark, _, _, 40, tmp("streambench"))),
+      ("incdedup", "incdedup", Seq((10000, 10), (100000, 3)),
+        runDedup(spark, _, _, tmp("streambench-dd"))),
+      // chunk dedup pays 5 chunk-digest rows per doc where exact dedup
+      // pays one fingerprint — near-dedup's batch sizing applies
+      ("incchunkdedup", "incchunkdedup", Seq((10000, 5), (100000, 2)),
+        runChunkDedup(spark, _, _, tmp("streambench-cd"))),
+      // SCD2: per-batch cost is the batch window + a keys-sized store
+      // round-trip, so it sustains the exact-dedup batch counts
+      ("incscd", "incscd", Seq((10000, 10), (100000, 3)),
+        runScd(spark, _, _, tmp("streambench-scd"))),
+      // near-dedup pays ~16 band rows + a payload row per doc where exact
+      // dedup pays one fingerprint — fewer batches at the large size keep
+      // the harness bounded while still measuring a store 3 batches deep
+      ("incneardedup", "incneardedup", Seq((10000, 5), (100000, 2)),
+        runNearDedup(spark, _, _, tmp("streambench-nd"))),
+      // embedding near-dedup: 8 band rows + one quantized-vector payload
+      // row per admitted doc, 64 float components quantized per row —
+      // the heaviest per-row Incremental* member, so the large size runs
+      // 2 batches like the text near-dup harness; band bits sized to the
+      // batch (see runEmbeddingNearDedup's scaladoc)
+      ("incembdedup", "incembdedup", Seq((10000, 5), (100000, 2)),
+        runEmbeddingNearDedup(spark, _, _, tmp("streambench-emb"))),
+      ("entropy", "entropy", Seq((10000, 10), (100000, 5)),
+        runEntropy(spark, _, _)),
+      ("kmv", "kmv", Seq((10000, 10), (100000, 5)), runKmv(spark, _, _)),
+      ("heavyhitters", "heavyhitters", Seq((10000, 10), (100000, 5)),
+        runHeavyHitters(spark, _, _)))
+    val results = harnesses.filter(h => want(h._1)).map {
+      case (name, metric, sizes, harness) =>
+        val runs = sizes.map { case (rows, n) =>
+          System.err.println(s"[streambench] $name batchRows=$rows batches=$n")
+          harness(rows, n)
+        }
+        println(s"""{"metric":"${metric}_rows_per_sec","runs":${runsJson(runs)}}""")
+        name -> runs
+    }.toMap
+    def of(names: String*) = names.flatMap(results.getOrElse(_, Nil))
     spark.stop()
-    if (results.exists(r => r.storedRows != r.totalRows) ||
-      (dedupResults ++ nearResults ++ embResults)
+    if (of("delta").exists(r => r.storedRows != r.totalRows) ||
+      of("incdedup", "incneardedup", "incembdedup")
         .exists(r => r.storedRows * 10 != r.totalRows * 7)) {
       System.err.println("[streambench] row accounting mismatch")
       sys.exit(1)

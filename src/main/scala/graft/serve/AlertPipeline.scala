@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.core.UserPrefs
 import graft.render.AlertFormat
+import graft.streaming.Streams
 
 /** The bot's alert fanout (S5/P6/P12/J2 — StatsAlertConsumerConfig.java:
   * 89-189, bot KafkaStreamsConfig.java:164-188): for each delta, find
@@ -59,7 +60,8 @@ object AlertPipeline {
       send: (String, String) => Unit,
       onMetrics: (Long, Map[String, Any]) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    runBatches(deltaStream, send, onMetrics, None)(_ => prefs)
+    Streams.foreachBatch(deltaStream, "append", None)(
+      sendBatch(_, _, prefs, send, onMetrics))
 
   /** The composite serving form: [[run]] with the user prefs read per
     * micro-batch from a durable [[graft.state.KeyedStore]] (the
@@ -85,12 +87,14 @@ object AlertPipeline {
     require(sentMarkerDir.isEmpty || checkpointLocation.isDefined,
       "sentMarkerDir requires a checkpointLocation: batchIds reset " +
         "without one and stale markers would swallow new batches")
-    runBatches(deltaStream, send, onMetrics, checkpointLocation,
-      sentMarkerDir) { spark =>
-      import spark.implicits._
-      graft.state.KeyedStore.read(spark, prefsStorePath)
-        .select(col("userId"), col("myStates"), col("subscribed"))
-        .as[UserPrefs]
+    Streams.foreachBatch(deltaStream, "append", checkpointLocation) {
+      (batch, batchId) =>
+        val spark = batch.sparkSession
+        import spark.implicits._
+        val prefs = graft.state.KeyedStore.read(spark, prefsStorePath)
+          .select(col("userId"), col("myStates"), col("subscribed"))
+          .as[UserPrefs]
+        sendBatch(batch, batchId, prefs, send, onMetrics, sentMarkerDir)
     }
   }
 
@@ -133,21 +137,5 @@ object AlertPipeline {
       f.mkdirs(m.getParent)
       f.create(m, true).close()
     }
-  }
-
-  private def runBatches(deltaStream: DataFrame,
-      send: (String, String) => Unit,
-      onMetrics: (Long, Map[String, Any]) => Unit,
-      checkpointLocation: Option[String],
-      sentMarkerDir: Option[String] = None)(
-      prefsOf: org.apache.spark.sql.SparkSession => Dataset[UserPrefs])
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val w = deltaStream.writeStream.outputMode("append")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sendBatch(batch, batchId, prefsOf(batch.sparkSession), send,
-          onMetrics, sentMarkerDir)
-      }
-      .start()
   }
 }

@@ -246,9 +246,8 @@ object KeyedStore {
       numBuckets: Int = DefaultBuckets,
       viewName: Option[String] = None): StreamingQuery = {
     val latest = MaterializedViews.latestPerKey(streaming, keyCols, tsCol)
-    val w = latest.writeStream.outputMode("update")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (changed: DataFrame, _: Long) =>
+    graft.streaming.Streams.foreachBatch(latest, "update",
+      checkpointLocation) { (changed, _) =>
         upsert(changed, keyCols, basePath, numBuckets)
         // optionally serve the table as `global_temp.<name>` — a LAZY
         // alias over the parquet (re-registered per batch only so the
@@ -263,8 +262,6 @@ object KeyedStore {
         // view is refreshed right after every batch.
         viewName.foreach(v =>
           read(changed.sparkSession, basePath).createOrReplaceGlobalTempView(v))
-        ()
-      }
-      .start()
+    }
   }
 }

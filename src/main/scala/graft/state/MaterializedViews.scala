@@ -6,6 +6,8 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.streaming.Streams
+
 /** S1 / §1.1 — the "KTable" layer: latest-value-per-key views of a
   * record stream, the load-bearing piece that lets interactive queries
   * run over materialized state (SURVEY.md §7.4.3).
@@ -53,21 +55,8 @@ object MaterializedViews {
     * query state stores (bot StateStoresManager.java). */
   def serveAsView(streaming: DataFrame, keyCols: Seq[String], tsCol: String,
       viewName: String): StreamingQuery =
-    upsertStream(latestPerKey(streaming, keyCols, tsCol), "update", keyCols,
-      viewName)
-
-  /** Start the stream that keeps `global_temp.<viewName>` current:
-    * every micro-batch of `changed` rows (one per key) is upserted by
-    * [[upsertIntoGlobalView]]. */
-  private def upsertStream(changed: DataFrame, outputMode: String,
-      keyCols: Seq[String], viewName: String,
-      checkpointLocation: Option[String] = None): StreamingQuery = {
-    val w = changed.writeStream.outputMode(outputMode)
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, _: Long) =>
-      upsertIntoGlobalView(batch, keyCols, viewName)
-    }.start()
-  }
+    Streams.foreachBatch(latestPerKey(streaming, keyCols, tsCol), "update",
+      None)((b, _) => upsertIntoGlobalView(b, keyCols, viewName))
 
   /** The foreachBatch body shared by the view-maintaining streams:
     * upsert `changed` (at most one row per key) into
@@ -108,8 +97,9 @@ object MaterializedViews {
     * [[graft.serve.LiveEndpoint.startDistinct]]. */
   def serveKmvAsView(hashes: org.apache.spark.sql.Dataset[graft.streaming.KeyedHash],
       k: Int, viewName: String): StreamingQuery =
-    upsertStream(graft.streaming.KmvTracker.track(hashes, k).toDF()
-      .select("key", "nSk", "hK", "est"), "append", Seq("key"), viewName)
+    Streams.foreachBatch(graft.streaming.KmvTracker.track(hashes, k).toDF()
+      .select("key", "nSk", "hK", "est"), "append", None)(
+      (b, _) => upsertIntoGlobalView(b, Seq("key"), viewName))
 
   /** Continuously-maintained DAILY TOTALS view — the reference bot's
     * per-day stats KTables (StateStoresManager.java:121-186 keeps
@@ -136,8 +126,8 @@ object MaterializedViews {
       .groupBy(window(col(tsCol), "1 day").as("w"), col(keyCol))
       .agg(sum(col(valueCol)).as("total"))
       .select(col(keyCol), to_date(col("w.start")).as("day"), col("total"))
-    upsertStream(daily, "update", Seq(keyCol, "day"), viewName,
-      checkpointLocation)
+    Streams.foreachBatch(daily, "update", checkpointLocation)(
+      (b, _) => upsertIntoGlobalView(b, Seq(keyCol, "day"), viewName))
   }
 
   /** Continuously-maintained COMPOSITE-KEY daily counts view — the
@@ -160,7 +150,7 @@ object MaterializedViews {
       .agg(count(lit(1)).as("n"))
       .select(keyCols.map(col) ++
         Seq(to_date(col("w.start")).as("day"), col("n")): _*)
-    upsertStream(daily, "update", keyCols :+ "day", viewName,
-      checkpointLocation)
+    Streams.foreachBatch(daily, "update", checkpointLocation)(
+      (b, _) => upsertIntoGlobalView(b, keyCols :+ "day", viewName))
   }
 }

@@ -37,7 +37,7 @@ object DailyAgg {
         col("currentConfirmed"), col("currentRecovered"), col("currentDeaths"),
         col("lastUpdatedTime"))
 
-  /** Streaming form (ST2/ST4): same aggregate behind a watermark. The
+  /** Streaming form (ST2/ST4): the batch aggregate behind a watermark. The
     * reference retains windows 365 days and accepts late data up to
     * retention (Covid19Stats.java:123,147); the watermark delay is the
     * explicit knob here — late rows beyond it are dropped and their
@@ -45,17 +45,7 @@ object DailyAgg {
     * caching-disabled emit-per-update cadence at trigger granularity
     * (SURVEY.md §7.4.2). */
   def statewiseDailyStreaming(in: Dataset[StampedDelta], watermark: String): DataFrame =
-    in.toDF()
-      .withWatermark("eventTime", watermark)
-      .groupBy(window(col("eventTime"), "1 day").as("w"), col("delta.state").as("state"))
-      .agg(
-        sum(col("delta.deltaConfirmed")).as("deltaConfirmed"),
-        sum(col("delta.deltaRecovered")).as("deltaRecovered"),
-        sum(col("delta.deltaDeaths")).as("deltaDeaths"),
-        max_by(col("delta.currentConfirmed"), col("eventTime")).as("currentConfirmed"))
-      .select(col("state"), date_format(col("w.start"), "dd/MM/yyyy").as("date"),
-        col("deltaConfirmed"), col("deltaRecovered"), col("deltaDeaths"),
-        col("currentConfirmed"))
+    statewiseDaily(in.withWatermark("eventTime", watermark))
 
   /** A4 — districtwise daily: the same 1-day tumbling window over the
     * COMPOSITE (state, district) key (Covid19Stats.java:114-123,
@@ -87,26 +77,11 @@ object DailyAgg {
         col("confirmed"), col("recovered"), col("deceased"))
 
   /** Streaming districtwise daily (ST2/ST4 composite-key form), update
-    * mode behind a watermark — the missing streaming analog of the
-    * batch q04/q08 composite-key aggregates. */
+    * mode: the batch aggregate behind a watermark — the streaming
+    * analog of the batch q04/q08 composite-key aggregates. */
   def districtwiseDailyStreaming(in: Dataset[StampedDistrict],
       watermark: String): DataFrame =
-    in.toDF()
-      .withWatermark("eventTime", watermark)
-      .groupBy(window(col("eventTime"), "1 day").as("w"),
-        col("data.state").as("state"), col("data.district").as("district"))
-      .agg(
-        coalesce(sum(col("data.deltaConfirmed").cast("long")), lit(0L))
-          .as("deltaConfirmed"),
-        coalesce(sum(col("data.deltaRecovered").cast("long")), lit(0L))
-          .as("deltaRecovered"),
-        coalesce(sum(col("data.deltaDeceased").cast("long")), lit(0L))
-          .as("deltaDeceased"),
-        max_by(col("data.confirmed"), col("eventTime")).as("confirmed"))
-      .select(date_format(col("w.start"), "dd/MM/yyyy").as("date"),
-        col("state"), col("district"),
-        col("deltaConfirmed"), col("deltaRecovered"), col("deltaDeceased"),
-        col("confirmed"))
+    districtwiseDaily(in.withWatermark("eventTime", watermark))
 
   /** P4 — doubling-rate projection (Covid19Stats.java:196-203):
     * "0" when delta or current is 0, else

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
 import graft.state.KeyedStore
@@ -112,29 +111,5 @@ object IncrementalChunkDedup {
               when(col("is_kept"), struct(col("chunk_idx"), col("chunk"))))),
             x => x.getField("chunk")),
           " ").as("dedup_text"))
-  }
-
-  /** Continuous form: chunk-dedup a document stream against the
-    * durable store, handing each batch's reassembled documents to
-    * `onDeduped`. With a checkpoint the pipeline resumes after
-    * restart AND the store already rejects every chunk admitted
-    * before it. */
-  def run(stream: DataFrame, idCol: String, textCol: String, tsCol: String,
-      storePath: String, chunkWords: Int = 8,
-      checkpointLocation: Option[String] = None,
-      numBuckets: Int = KeyedStore.DefaultBuckets,
-      splitParagraphs: Boolean = false,
-      splitSentences: Boolean = false,
-      bloomExpectedItems: Option[Long] = None)(
-      onDeduped: (DataFrame, Long) => Unit): StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        onDeduped(dedupBatch(batch, idCol, textCol, tsCol, storePath,
-          chunkWords, numBuckets, splitParagraphs, splitSentences,
-          bloomExpectedItems), id)
-        ()
-      }
-      .start()
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{TextFunctions => T}
 import graft.state.KeyedStore
@@ -32,15 +31,11 @@ import graft.state.KeyedStore
   * first_ts) equals the batch's own first-wins pick — i.e. THIS batch
   * admitted it in the failed attempt — so a replayed batch re-emits
   * exactly its original novel rows (never silently drops them), the
-  * re-upsert converges to the identical table, and `onNovel(novel,
-  * batchId)` can commit transactionally by batch id.
+  * re-upsert converges to the identical table, and the caller's sink
+  * can commit the novel rows transactionally by batch id.
   */
 object IncrementalDedup {
 
-  /** One batch step (the foreachBatch body, callable in batch jobs
-    * too): returns the novel rows of `batch` and upserts their
-    * fingerprints. `batch`: (id, text, ts, …) with `idCol`/`tsCol`
-    * naming the identity and arrival order. */
   /** Bloom-superset sketch location (see [[graft.state.StoreBloom]]
     * for the invariant and crash-ordering contract). Gated, a
     * bloom-negative fingerprint is provably absent from the store and
@@ -50,6 +45,10 @@ object IncrementalDedup {
   def bloomPath(storePath: String): String =
     graft.state.StoreBloom.path(storePath)
 
+  /** One batch step (the foreachBatch body, callable in batch jobs
+    * too): returns the novel rows of `batch` and upserts their
+    * fingerprints. `batch`: (id, text, ts, …) with `idCol`/`tsCol`
+    * naming the identity and arrival order. */
   def dedupBatch(batch: DataFrame, idCol: String, textCol: String,
       tsCol: String, storePath: String,
       numBuckets: Int = KeyedStore.DefaultBuckets,
@@ -103,25 +102,4 @@ object IncrementalDedup {
       storePath: String, expectedItems: Long,
       numBuckets: Int = KeyedStore.DefaultBuckets): Unit =
     graft.state.StoreBloom.rebuild(spark, storePath, "fp", expectedItems)
-
-  /** Continuous form: maintain the store from a stream, handing each
-    * batch's novel rows to `onNovel` (write to the corpus table, queue
-    * for embedding, …). With a checkpoint the pipeline resumes after
-    * restart AND the store already rejects everything admitted before
-    * the restart — no replay needed. */
-  def run(stream: DataFrame, idCol: String, textCol: String, tsCol: String,
-      storePath: String, checkpointLocation: Option[String] = None,
-      numBuckets: Int = KeyedStore.DefaultBuckets,
-      bloomExpectedItems: Option[Long] = None)(
-      onNovel: (DataFrame, Long) => Unit): StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        onNovel(
-          dedupBatch(batch, idCol, textCol, tsCol, storePath, numBuckets,
-            bloomExpectedItems), id)
-        ()
-      }
-      .start()
-  }
 }

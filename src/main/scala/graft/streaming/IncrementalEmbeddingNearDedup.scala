@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{VectorFunctions => V}
 import graft.functions.expressions.GraftExpressions.dotQFast
@@ -175,25 +174,5 @@ object IncrementalEmbeddingNearDedup {
       quant.join(admittedIds, Seq("doc_id"), "left_semi"),
       bandHits, storePath, maxBucket, numBuckets)
     novel
-  }
-
-  /** Continuous form: maintain the band + vector stores from a stream,
-    * handing each batch's novel rows to `onNovel`. With a checkpoint
-    * the pipeline resumes after restart AND the store already rejects
-    * near-copies of every embedding admitted before the restart. */
-  def run(stream: DataFrame, idCol: String, vecCol: String, tsCol: String,
-      storePath: String, checkpointLocation: Option[String] = None,
-      threshold: Double = 0.95, nBands: Int = 8, bandBits: Int = 4,
-      dims: Int = 64, maxBucket: Int = 64,
-      numBuckets: Int = KeyedStore.DefaultBuckets)(
-      onNovel: (DataFrame, Long) => Unit): StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        onNovel(dedupBatch(batch, idCol, vecCol, tsCol, storePath,
-          threshold, nBands, bandBits, dims, maxBucket, numBuckets), id)
-        ()
-      }
-      .start()
   }
 }

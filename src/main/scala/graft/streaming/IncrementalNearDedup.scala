@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.functions.{TextFunctions => T}
 import graft.functions.expressions.GraftExpressions.{minhashSig, shingleHashes}
@@ -151,25 +150,5 @@ object IncrementalNearDedup {
       shingled.join(admittedIds, Seq("doc_id"), "left_semi"),
       bandHits, storePath, maxBucket, numBuckets)
     novel
-  }
-
-  /** Continuous form: maintain the band store from a stream, handing
-    * each batch's novel rows to `onNovel`. With a checkpoint the
-    * pipeline resumes after restart AND the store already rejects
-    * near-copies of everything admitted before the restart. */
-  def run(stream: DataFrame, idCol: String, textCol: String, tsCol: String,
-      storePath: String, checkpointLocation: Option[String] = None,
-      threshold: Double = 0.5, k: Int = 64, bandRows: Int = 4,
-      maxBucket: Int = 64,
-      numBuckets: Int = KeyedStore.DefaultBuckets)(
-      onNovel: (DataFrame, Long) => Unit): StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        onNovel(dedupBatch(batch, idCol, textCol, tsCol, storePath,
-          threshold, k, bandRows, maxBucket, numBuckets), id)
-        ()
-      }
-      .start()
   }
 }

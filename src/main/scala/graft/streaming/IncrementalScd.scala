@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Scd
 import graft.state.KeyedStore
@@ -41,7 +40,7 @@ import graft.state.KeyedStore
   * recomputes byte-identical closed intervals and an identical store
   * row — so a crash anywhere between the store upsert and the
   * downstream commit re-emits exactly the original rows, and a
-  * batchId-keyed idempotent sink (`onClosed`) commits exactly once.
+  * batchId-keyed idempotent sink commits the closed intervals exactly once.
   */
 object IncrementalScd {
 
@@ -140,23 +139,4 @@ object IncrementalScd {
     KeyedStore.read(spark, storePath)
       .select(col(keyCol), col("open_state").as(stateCol),
         col("open_version").as("version"), col("open_from").as("valid_from"))
-
-  /** Continuous form: maintain the history from a stream, handing each
-    * batch's CLOSED intervals to `onClosed(closed, batchId)` (append to
-    * the history table keyed by batchId for exactly-once). */
-  def run(stream: DataFrame, keyCol: String, stateCol: String,
-      tsCol: String, tieCol: String, storePath: String,
-      checkpointLocation: Option[String] = None,
-      numBuckets: Int = KeyedStore.DefaultBuckets)(
-      onClosed: (DataFrame, Long) => Unit): StreamingQuery = {
-    val w = stream.writeStream.outputMode("append")
-    checkpointLocation.foreach(c => w.option("checkpointLocation", c))
-    w.foreachBatch { (batch: DataFrame, id: Long) =>
-        onClosed(
-          scdBatch(batch, keyCol, stateCol, tsCol, tieCol, storePath, id,
-            numBuckets), id)
-        ()
-      }
-      .start()
-  }
 }

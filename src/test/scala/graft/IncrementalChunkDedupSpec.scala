@@ -6,7 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-import graft.streaming.IncrementalChunkDedup
+import graft.streaming.{IncrementalChunkDedup, Streams}
 
 /** Incremental chunk-level dedup: in-batch cross-doc chunk removal,
   * "seen EVER" rejection across batches AND restarts via the durable
@@ -150,9 +150,10 @@ class IncrementalChunkDedupSpec extends SparkSpec {
     val byBatch = scala.collection.mutable.Map[Long, Map[Long, String]]()
 
     val ms = MemoryStream[(Long, String, Timestamp)]
-    def start() = IncrementalChunkDedup.run(
-      ms.toDS().toDF("doc_id", "text", "ts"),
-      "doc_id", "text", "ts", store, chunkWords = 2, Some(ckpt)) { (out, bid) =>
+    def start() = Streams.foreachBatch(ms.toDS().toDF("doc_id", "text", "ts"),
+      "append", Some(ckpt)) { (batch, bid) =>
+      val out = IncrementalChunkDedup.dedupBatch(batch, "doc_id", "text", "ts",
+        store, chunkWords = 2)
       byBatch(bid) = out.select("doc_id", "dedup_text").collect()
         .map(r => r.getLong(0) -> r.getString(1)).toMap
     }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.state.KeyedStore
-import graft.streaming.IncrementalDedup
+import graft.streaming.{IncrementalDedup, Streams}
 
 /** Incremental corpus ingestion: in-batch first-wins, dedup against
   * ALL history via pruned store probes, restart recovery without
@@ -30,9 +30,9 @@ class IncrementalDedupSpec extends SparkSpec {
     val novelByBatch = scala.collection.mutable.Map[Long, Seq[Long]]()
 
     val ms = MemoryStream[(Long, String, Timestamp)]
-    def start() = IncrementalDedup.run(
-      ms.toDS().toDF("doc_id", "text", "ts"),
-      "doc_id", "text", "ts", store, Some(ckpt)) { (novel, bid) =>
+    def start() = Streams.foreachBatch(ms.toDS().toDF("doc_id", "text", "ts"),
+      "append", Some(ckpt)) { (batch, bid) =>
+      val novel = IncrementalDedup.dedupBatch(batch, "doc_id", "text", "ts", store)
       novelByBatch(bid) = novel.select("doc_id").as[Long](
         novel.sparkSession.implicits.newLongEncoder).collect().toSeq.sorted
     }

@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.state.KeyedStore
-import graft.streaming.IncrementalEmbeddingNearDedup
+import graft.streaming.{IncrementalEmbeddingNearDedup, Streams}
 
 /** Incremental EMBEDDING near-dup dedup: batch N+1 detects near-copies
   * of every vector admitted in batches ≤ N through bucket-pruned
@@ -167,9 +167,10 @@ class IncrementalEmbeddingNearDedupSpec extends SparkSpec {
     val novel = scala.collection.mutable.ArrayBuffer[Long]()
 
     val ms = MemoryStream[(Long, Seq[Float], Timestamp)]
-    def start() = IncrementalEmbeddingNearDedup.run(
-      ms.toDS().toDF("doc_id", "vec", "ts"),
-      "doc_id", "vec", "ts", store, Some(ckpt)) { (n, _) =>
+    def start() = Streams.foreachBatch(ms.toDS().toDF("doc_id", "vec", "ts"),
+      "append", Some(ckpt)) { (batch, _) =>
+      val n = IncrementalEmbeddingNearDedup.dedupBatch(batch, "doc_id", "vec",
+        "ts", store)
       novel ++= n.select("doc_id").collect().map(_.getLong(0))
     }
 
@@ -203,9 +204,10 @@ class IncrementalEmbeddingNearDedupSpec extends SparkSpec {
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
 
     val ms = MemoryStream[(Long, Seq[Float], Timestamp)]
-    def start(crash: Boolean) = IncrementalEmbeddingNearDedup.run(
-      ms.toDS().toDF("doc_id", "vec", "ts"),
-      "doc_id", "vec", "ts", store, Some(ckpt)) { (n, _) =>
+    def start(crash: Boolean) = Streams.foreachBatch(
+      ms.toDS().toDF("doc_id", "vec", "ts"), "append", Some(ckpt)) { (batch, _) =>
+      val n = IncrementalEmbeddingNearDedup.dedupBatch(batch, "doc_id", "vec",
+        "ts", store)
       val idsNow = n.select("doc_id").collect().map(_.getLong(0))
       if (crash && failOnce.compareAndSet(true, false))
         sys.error("injected crash after store upsert")

@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.state.KeyedStore
-import graft.streaming.IncrementalNearDedup
+import graft.streaming.{IncrementalNearDedup, Streams}
 
 /** Incremental NEAR-dup dedup: batch N+1 detects near-duplicates of
   * everything admitted in batches ≤ N through bucket-pruned probes of
@@ -128,9 +128,9 @@ class IncrementalNearDedupSpec extends SparkSpec {
     val novel = scala.collection.mutable.ArrayBuffer[Long]()
 
     val ms = MemoryStream[(Long, String, Timestamp)]
-    def start() = IncrementalNearDedup.run(
-      ms.toDS().toDF("doc_id", "text", "ts"),
-      "doc_id", "text", "ts", store, Some(ckpt)) { (n, _) =>
+    def start() = Streams.foreachBatch(ms.toDS().toDF("doc_id", "text", "ts"),
+      "append", Some(ckpt)) { (batch, _) =>
+      val n = IncrementalNearDedup.dedupBatch(batch, "doc_id", "text", "ts", store)
       novel ++= n.select("doc_id").collect().map(_.getLong(0))
     }
 
@@ -164,10 +164,11 @@ class IncrementalNearDedupSpec extends SparkSpec {
     val schema = "doc_id LONG, text STRING, epoch LONG"
     val emitted = scala.collection.mutable.ArrayBuffer[Long]()
     val failOnce = new java.util.concurrent.atomic.AtomicBoolean(true)
-    def start(crash: Boolean) = IncrementalNearDedup.run(
+    def start(crash: Boolean) = Streams.foreachBatch(
       spark.readStream.schema(schema).json(inDir)
         .withColumn("ts", timestamp_seconds(col("epoch"))),
-      "doc_id", "text", "ts", store, Some(ckpt)) { (n, _) =>
+      "append", Some(ckpt)) { (batch, _) =>
+      val n = IncrementalNearDedup.dedupBatch(batch, "doc_id", "text", "ts", store)
       // dedupBatch has ALREADY upserted the band + doc stores when this
       // callback runs — throwing here is the torn state: store mutated,
       // batch offset never committed

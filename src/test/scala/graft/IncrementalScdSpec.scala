@@ -7,7 +7,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Scd
-import graft.streaming.IncrementalScd
+import graft.streaming.{IncrementalScd, Streams}
 
 /** Incremental SCD2 maintenance: batch-split equivalence against the
   * batch rebuild, replay idempotency through the prev_* snapshot, and
@@ -188,10 +188,12 @@ class IncrementalScdSpec extends SparkSpec {
     val ckpt = tmp("incscd-stream-ckpt")
     val byBatch = scala.collection.mutable.Map[Long, Set[Run]]()
     val ms = MemoryStream[(Long, String, Long, Long)]
-    def start() = IncrementalScd.run(
-      ms.toDS().toDF("user_id", "state", "ts_us", "event_id"),
-      "user_id", "state", "ts_us", "event_id", store, Some(ckpt)) {
-      (closed, bid) => byBatch(bid) = closed.collect().map(runKey).toSet
+    def start() = Streams.foreachBatch(
+      ms.toDS().toDF("user_id", "state", "ts_us", "event_id"), "append",
+      Some(ckpt)) { (batch, bid) =>
+      val closed = IncrementalScd.scdBatch(batch, "user_id", "state", "ts_us",
+        "event_id", store, bid)
+      byBatch(bid) = closed.collect().map(runKey).toSet
     }
     val q1 = start()
     try {

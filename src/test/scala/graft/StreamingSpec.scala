@@ -160,6 +160,9 @@ class StreamingSpec extends SparkSpec {
         .map(r => (r.getLong(0), r.getString(1))).toSet
       assert(mum.contains((130L, "130")), s"window sum wrong: $mum")
       assert(!mum.exists(_._1 > 130L), s"late row leaked: $mum")
+      // the streamed rows carry the batch form's full daily record
+      assert(spark.table("district_daily_wm").columns.toSeq ==
+        DailyAgg.districtwiseDaily(Seq.empty[StampedDistrict].toDS()).columns.toSeq)
     } finally q.stop()
   }
 
@@ -361,6 +364,9 @@ class StreamingSpec extends SparkSpec {
         .filter(col("date") === "01/04/2020")
         .select("deltaConfirmed").as[Long].collect().toSet
       assert(day1 == Set(5L), s"late row leaked into day-1 state: $day1")
+      // the streamed rows carry the batch form's full daily record
+      assert(spark.table("daily_wm").columns.toSeq ==
+        DailyAgg.statewiseDaily(Seq.empty[StampedDelta].toDS()).columns.toSeq)
     } finally q.stop()
   }
 
