@@ -477,7 +477,7 @@ object Dedup {
     * fixed fetch-back stages dominate; as the corpus grows the ratio
     * inverts, which is exactly why AllPairs/PPJoin exists. */
   def prefixFilterJaccardPairs(shingled: DataFrame, threshold: Double,
-      maxDf: Int = 0, restrictVerify: Boolean = true): DataFrame = {
+      maxDf: Int = 0): DataFrame = {
     require(threshold > 0.0 && threshold <= 1.0,
       s"prefix filtering needs 0 < t <= 1, got $threshold")
     val capped = cappedShingles(shingled, maxDf)
@@ -498,7 +498,7 @@ object Dedup {
       .repartition(shingled.sparkSession.sparkContext.defaultParallelism,
         col("doc_a"), col("doc_b"))
       .localCheckpoint(true)
-    val arrays = if (restrictVerify) candidateArrays(capped, candIds) else capped
+    val arrays = candidateArrays(capped, candIds)
     candIds
       .join(arrays.select(col("doc_id").as("doc_a"), col("shs").as("sha")), "doc_a")
       .join(arrays.select(col("doc_id").as("doc_b"), col("shs").as("shb")), "doc_b")
@@ -591,8 +591,7 @@ object Dedup {
     * carrying only (doc_id, band, key), exact Jaccard on survivors.
     * Sized so P[miss | j≥0.5] = (1−j⁴)¹⁶ ≤ 1.2% per pair. */
   def minhashLshPairs(shingled: DataFrame, threshold: Double,
-      k: Int = 64, bandRows: Int = 4,
-      restrictVerify: Boolean = true): DataFrame = {
+      k: Int = 64, bandRows: Int = 4): DataFrame = {
     val nBands = k / bandRows
     // the projection feeds signature generation AND both verify joins;
     // ShingleHashes is one cheap native pass, so recomputing it thrice
@@ -623,7 +622,7 @@ object Dedup {
       // core-width exchange measured a LOSS here (q28 1.14→1.35 s)
       // where q168's 4.6 s-CPU verify measured a 1.5× WIN
       .localCheckpoint(true)
-    val arrays = if (restrictVerify) candidateArrays(docs, candIds) else docs
+    val arrays = candidateArrays(docs, candIds)
     candIds
       .join(arrays.select(col("doc_id").as("doc_a"), col("shs").as("sha")), "doc_a")
       .join(arrays.select(col("doc_id").as("doc_b"), col("shs").as("shb")), "doc_b")
@@ -648,10 +647,8 @@ object Dedup {
     * Trade (measured, round-8 stress corpus): when candidate density
     * is EXTREME (75% of docs paired — 4-doc dup families everywhere),
     * the restriction prunes little and its semi-join adds ~30% to the
-    * stage; `restrictVerify = false` opts a dup-saturated deployment
-    * back into the two full array shuffles. At ordinary near-dup
-    * rates (≲10%) the restriction removes the stage's dominant
-    * exchanges. */
+    * stage. At ordinary near-dup rates (≲10%) it removes the stage's
+    * dominant exchanges. */
   private def candidateArrays(docs: DataFrame, candIds: DataFrame): DataFrame = {
     val semi = docs.join(
       candIds.select(col("doc_a").as("doc_id"))
@@ -896,7 +893,7 @@ object Dedup {
     * this is its checkable twin, same plan shape: bucket equi-join,
     * never all-pairs. */
   def portableMinhashLshPairs(docs: DataFrame, textCol: String, idCol: String,
-      threshold: Double = 0.5, restrictVerify: Boolean = true): DataFrame = {
+      threshold: Double = 0.5): DataFrame = {
     val P = graft.functions.expressions.ShingleHashes.PolyMod
     // shingle sets feed three consumers (minhash agg, both verify
     // joins): pin once, like q27's survivor projection
@@ -928,9 +925,7 @@ object Dedup {
       .localCheckpoint(true)
     // verify arrays restricted to candidate docs (see candidateArrays)
     val hsCand =
-      if (restrictVerify)
-        candidateArrays(hs.select(col("doc_id"), col("hs").as("shs")), cand)
-      else hs.select(col("doc_id"), col("hs").as("shs"))
+      candidateArrays(hs.select(col("doc_id"), col("hs").as("shs")), cand)
     cand
       .join(hsCand.select(col("doc_id").as("doc_a"), col("shs").as("hs_a")), "doc_a")
       .join(hsCand.select(col("doc_id").as("doc_b"), col("shs").as("hs_b")), "doc_b")

@@ -64,8 +64,8 @@ object Ranks {
     * the rank is computed as a native running sum of 1 (LongType) and
     * the final downcast fails loudly past 2^31−1 rows under the
     * session's ANSI casting rather than wrapping. */
-  def globalRowNumber(df: DataFrame, order: Seq[Column], out: String,
-      numPartitions: Int = 0): DataFrame = {
+  def globalRowNumber(df: DataFrame, order: Seq[Column],
+      out: String): DataFrame = {
     val tmp = s"__grn_${out}_long"
     runningSumPlan(df, order, Seq(lit(1L).as(tmp) -> tmp))
       .withColumn(out, col(tmp).cast(IntegerType))
@@ -77,11 +77,11 @@ object Ranks {
     * Output column `out` is LongType; sums must stay within Long
     * (`Math.addExact` fails loudly). Simple attribute references in
     * `order`/`value` (incl. `.asc`/`.desc` and `lit`s) resolve against
-    * `df`'s analyzed output; `numPartitions` is accepted for API
-    * compatibility but the planner chooses the exchange's partitioning
-    * (correctness is partition-count-independent by construction). */
+    * `df`'s analyzed output; the planner chooses the exchange's
+    * partitioning (correctness is partition-count-independent by
+    * construction). */
   def globalRunningSum(df: DataFrame, order: Seq[Column], value: Column,
-      out: String, numPartitions: Int = 0): DataFrame =
+      out: String): DataFrame =
     runningSumPlan(df, order, Seq(value -> out))
 
   /** N running sums in ONE two-phase pass — a caller needing several
@@ -92,7 +92,7 @@ object Ranks {
     * determinism contract as the single-column form. Non-Long value
     * columns are cast to LongType (the RDD-era contract). */
   def globalRunningSums(df: DataFrame, order: Seq[Column],
-      values: Seq[(Column, String)], numPartitions: Int = 0): DataFrame = {
+      values: Seq[(Column, String)]): DataFrame = {
     require(values.nonEmpty, "need at least one value column")
     runningSumPlan(df, order, values)
   }

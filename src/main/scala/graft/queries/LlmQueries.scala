@@ -821,7 +821,7 @@ object LlmQueries {
     val terms = Seq("join", "filter", "agg", "query", "group", "sort")
     val k1 = "1.2"
     val b = "0.75"
-    def sqlTermScore(i: Int, t: String): String =
+    def sqlTermScore(i: Int): String =
       s"""ln((CAST(n_docs AS DOUBLE) - df_$i + 0.5) / (df_$i + 0.5) + 1.0)
          |  * (tf_$i * ($k1 + 1.0))
          |  / (tf_$i + $k1 * (1.0 - $b + $b * dl / avgdl))""".stripMargin
@@ -844,8 +844,8 @@ object LlmQueries {
          |  FROM tf)
          |SELECT doc_id, dl,
          |       ${terms.indices.map(i => s"tf_$i").mkString(", ")},
-         |       CAST(round((${sqlTermScore(0, terms(0))}
-         |       ${terms.indices.drop(1).map(i => s"+ ${sqlTermScore(i, terms(i))}")
+         |       CAST(round((${sqlTermScore(0)}
+         |       ${terms.indices.drop(1).map(i => s"+ ${sqlTermScore(i)}")
                     .mkString("\n         |       ")}) * 10000.0) AS BIGINT) AS bm25_q4
          |FROM tf CROSS JOIN stats""".stripMargin
     ) { (s, dir) =>

@@ -29,9 +29,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * buckets|) — independent of the batch index and of the cardinality
   * of unchanged keys, which is what lets this run at data-table
   * cardinality where a full-snapshot rewrite (the global-temp-view leg)
-  * cannot. At 100 TB, size `numBuckets` so a bucket is a few hundred MB
-  * (one overwrite task's comfortable unit); the shuffle in step 3 moves
-  * only touched-bucket rows.
+  * cannot. The shuffle in step 3 moves only touched-bucket rows.
+  *
+  * The bucket count B is chosen once, when [[upsert]] CREATES the table
+  * (its `numBuckets`; size it so a bucket is a few hundred MB at
+  * 100 TB — one overwrite task's comfortable unit), and recorded in the
+  * table's `_graft_buckets` marker. Every later read, probe and upsert
+  * takes B from that marker ([[bucketCountOf]]), never from a caller.
   *
   * Restart story: the table IS the durable state — a fresh session
   * reads it back with [[read]] (no replay needed), and a restarted
@@ -82,15 +86,12 @@ object KeyedStore {
 
   /** The table's bucket count as written — the layout is a property of
     * the TABLE, not of the caller: every reader/writer derives it from
-    * this marker, so a caller passing a stale count cannot silently
-    * probe (or upsert against) the wrong bucket. Falls back to the
-    * passed default only when the marker is absent (pre-existing
-    * tables). */
-  def bucketCountOf(spark: SparkSession, basePath: String,
-      fallback: Int = DefaultBuckets): Int = {
+    * this marker, so no caller can probe (or upsert against) the wrong
+    * bucket. [[DefaultBuckets]] when the marker is absent or garbled. */
+  def bucketCountOf(spark: SparkSession, basePath: String): Int = {
     val p = new Path(basePath, MetaFile)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) fallback
+    if (!fs.exists(p)) DefaultBuckets
     else {
       val in = fs.open(p)
       try {
@@ -103,7 +104,7 @@ object KeyedStore {
         val s = new String(acc.toByteArray, "UTF-8").trim
         // an empty/garbled marker (crash between create and write of a
         // pre-rename-era table) must not brick the store — fall back
-        scala.util.Try(s.toInt).filter(_ > 0).getOrElse(fallback)
+        scala.util.Try(s.toInt).filter(_ > 0).getOrElse(DefaultBuckets)
       } finally in.close()
     }
   }
@@ -134,7 +135,7 @@ object KeyedStore {
         .write.partitionBy(BucketCol).mode("overwrite").parquet(basePath)
       writeBucketMeta(spark, basePath, numBuckets)
     } else {
-      val b = bucketCountOf(spark, basePath, numBuckets)
+      val b = bucketCountOf(spark, basePath)
       // hash() is type-sensitive (hash(7: Int) != hash(7L)): align the
       // batch's key columns to the TABLE's key types before bucketing,
       // or a caller handing an Int batch to a Long-keyed store would
@@ -147,7 +148,7 @@ object KeyedStore {
       // latest value changed this trigger); pin it once — it feeds the
       // bucket list, the anti-join and the union.
       val ch = bucketed(aligned, keyCols, b).localCheckpoint(eager = true)
-      // driver-side list of touched buckets: ≤ numBuckets ints, model-sized
+      // driver-side list of touched buckets: ≤ B ints, model-sized
       val touched = ch.select(BucketCol).distinct().collect().map(_.getInt(0))
       val prev = spark.read.parquet(basePath)
         .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
@@ -166,19 +167,6 @@ object KeyedStore {
     }
   }
 
-  /** Re-bucket a store into `destPath` with a new bucket count — the
-    * one-pass migration for when key cardinality outgrows the layout
-    * (buckets are fixed at write time, like any bucketed table; size
-    * them so a bucket stays a few hundred MB). */
-  def rebucket(spark: SparkSession, basePath: String, keyCols: Seq[String],
-      destPath: String, newBuckets: Int): Unit = {
-    require(destPath != basePath, "rebucket writes to a NEW path")
-    bucketed(read(spark, basePath), keyCols, newBuckets)
-      .repartition(col(BucketCol))
-      .write.partitionBy(BucketCol).mode("overwrite").parquet(destPath)
-    writeBucketMeta(spark, destPath, newBuckets)
-  }
-
   /** Current store contents (bucket column dropped). Partition pruning
     * applies to key-bucket point lookups via [[lookup]]. */
   def read(spark: SparkSession, basePath: String): DataFrame =
@@ -186,11 +174,9 @@ object KeyedStore {
 
   /** Point lookup: prunes to the single bucket directory holding the
     * key before filtering — the store-scan analog of the reference
-    * bot's `store.get(key)`. The bucket count comes from the table's
-    * own marker; `numBuckets` is only the fallback for tables without
-    * one. */
+    * bot's `store.get(key)`. */
   def lookup(spark: SparkSession, basePath: String, keyCols: Seq[String],
-      keyVals: Seq[Any], numBuckets: Int = DefaultBuckets): DataFrame = {
+      keyVals: Seq[Any]): DataFrame = {
     val table = spark.read.parquet(basePath)
     // hash() is type-sensitive: cast each probe literal to the stored
     // key column's type, else an Int probe against a Long key computes
@@ -199,7 +185,7 @@ object KeyedStore {
     val keyLits = keyCols.zip(keyVals).map { case (k, v) =>
       lit(v).cast(table.schema(k).dataType)
     }
-    val b = pmod(hash(keyLits: _*), lit(bucketCountOf(spark, basePath, numBuckets)))
+    val b = pmod(hash(keyLits: _*), lit(bucketCountOf(spark, basePath)))
     table
       .filter(col(BucketCol) === b)
       .filter(keyCols.zip(keyLits).map { case (k, v) => col(k) <=> v }
@@ -214,15 +200,14 @@ object KeyedStore {
     * the scan to O(touched buckets) exactly like [[upsert]] does, so
     * probing a micro-batch against a 100 TB store reads a few bucket
     * directories, not the table. `keys` must be batch-small (its
-    * distinct bucket list is collected — ≤ numBuckets ints). The store
+    * distinct bucket list is collected — ≤ B ints). The store
     * must exist ([[isInitialized]]) — an uninitialized store has no
     * schema to shape an empty result with. */
-  def probe(keys: DataFrame, keyCols: Seq[String], basePath: String,
-      numBuckets: Int = DefaultBuckets): DataFrame = {
+  def probe(keys: DataFrame, keyCols: Seq[String], basePath: String): DataFrame = {
     val spark = keys.sparkSession
     require(exists(spark, basePath),
       s"probe against uninitialized store $basePath (check isInitialized first)")
-    val b = bucketCountOf(spark, basePath, numBuckets)
+    val b = bucketCountOf(spark, basePath)
     val tableSchema = spark.read.parquet(basePath).schema
     val aligned = keyCols.foldLeft(keys.select(keyCols.map(col): _*)) {
       (df, k) => df.withColumn(k, col(k).cast(tableSchema(k).dataType))
@@ -243,12 +228,11 @@ object KeyedStore {
     * engine state from RocksDB, serving state from the table itself. */
   def serveToStore(streaming: DataFrame, keyCols: Seq[String], tsCol: String,
       basePath: String, checkpointLocation: Option[String] = None,
-      numBuckets: Int = DefaultBuckets,
       viewName: Option[String] = None): StreamingQuery = {
     val latest = MaterializedViews.latestPerKey(streaming, keyCols, tsCol)
     graft.streaming.Streams.foreachBatch(latest, "update",
       checkpointLocation) { (changed, _) =>
-        upsert(changed, keyCols, basePath, numBuckets)
+        upsert(changed, keyCols, basePath)
         // optionally serve the table as `global_temp.<name>` — a LAZY
         // alias over the parquet (re-registered per batch only so the
         // scan picks up the new file listing; nothing materializes),

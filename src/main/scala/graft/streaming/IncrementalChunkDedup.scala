@@ -44,7 +44,6 @@ object IncrementalChunkDedup {
     * join and write duplicate digest rows into the durable store. */
   def dedupBatch(batch: DataFrame, idCol: String, textCol: String,
       tsCol: String, storePath: String, chunkWords: Int = 8,
-      numBuckets: Int = KeyedStore.DefaultBuckets,
       splitParagraphs: Boolean = false,
       splitSentences: Boolean = false,
       bloomExpectedItems: Option[Long] = None): DataFrame = {
@@ -80,7 +79,7 @@ object IncrementalChunkDedup {
         val probeKeys = withWin.select("ch").distinct()
         val seen = KeyedStore
           .probe(sb.fold(probeKeys)(_.prune(probeKeys, "ch")),
-            Seq("ch"), storePath, numBuckets)
+            Seq("ch"), storePath)
           .select("ch", "first_id", "first_ts", "first_idx")
         withWin.join(seen, Seq("ch"), "left")
           .withColumn("is_kept",
@@ -99,7 +98,7 @@ object IncrementalChunkDedup {
       admitted
         .select(col("ch"), col("doc_id").as("first_id"),
           col("ts").as("first_ts"), col("chunk_idx").as("first_idx")),
-      Seq("ch"), storePath, numBuckets)
+      Seq("ch"), storePath)
     sb.foreach(_.recordAfter(admitted, "ch"))
     pinned.groupBy("doc_id", "ts")
       .agg(

@@ -36,22 +36,12 @@ import graft.state.KeyedStore
   */
 object IncrementalDedup {
 
-  /** Bloom-superset sketch location (see [[graft.state.StoreBloom]]
-    * for the invariant and crash-ordering contract). Gated, a
-    * bloom-negative fingerprint is provably absent from the store and
-    * skips the bucket probe entirely; per-batch probe cost shrinks
-    * from "buckets touched by the whole batch" to "buckets touched by
-    * actual re-sights + the fpp share". */
-  def bloomPath(storePath: String): String =
-    graft.state.StoreBloom.path(storePath)
-
   /** One batch step (the foreachBatch body, callable in batch jobs
     * too): returns the novel rows of `batch` and upserts their
     * fingerprints. `batch`: (id, text, ts, …) with `idCol`/`tsCol`
     * naming the identity and arrival order. */
   def dedupBatch(batch: DataFrame, idCol: String, textCol: String,
       tsCol: String, storePath: String,
-      numBuckets: Int = KeyedStore.DefaultBuckets,
       bloomExpectedItems: Option[Long] = None): DataFrame = {
     val spark = batch.sparkSession
     val fp = batch.withColumn("fp", T.fingerprint(col(textCol)))
@@ -69,7 +59,7 @@ object IncrementalDedup {
     // note above)
     def probed(candidates: DataFrame): DataFrame = {
       val seen = KeyedStore
-        .probe(candidates.select("fp"), Seq("fp"), storePath, numBuckets)
+        .probe(candidates.select("fp"), Seq("fp"), storePath)
         .select("fp", "first_id", "first_ts")
       candidates.join(seen, Seq("fp"), "left")
         .filter(col("first_id").isNull ||
@@ -90,16 +80,8 @@ object IncrementalDedup {
     sb.foreach(_.recordBefore(pinned, "fp"))
     KeyedStore.upsert(
       pinned.select(col("fp"), col(idCol).as("first_id"), col(tsCol).as("first_ts")),
-      Seq("fp"), storePath, numBuckets)
+      Seq("fp"), storePath)
     sb.foreach(_.recordAfter(pinned, "fp"))
     pinned.drop("fp")
   }
-
-  /** Backfill the bloom sketch for a store created before gating
-    * existed (or whose sketch file was lost) —
-    * [[graft.state.StoreBloom.rebuild]] on the fingerprint column. */
-  def rebuildBloom(spark: org.apache.spark.sql.SparkSession,
-      storePath: String, expectedItems: Long,
-      numBuckets: Int = KeyedStore.DefaultBuckets): Unit =
-    graft.state.StoreBloom.rebuild(spark, storePath, "fp", expectedItems)
 }

@@ -49,8 +49,8 @@ object IncrementalScd {
     * closed intervals (key, state, version, valid_from, valid_to) and
     * upserts the advanced open runs. */
   def scdBatch(batch: DataFrame, keyCol: String, stateCol: String,
-      tsCol: String, tieCol: String, storePath: String, batchId: Long,
-      numBuckets: Int = KeyedStore.DefaultBuckets): DataFrame = {
+      tsCol: String, tieCol: String, storePath: String,
+      batchId: Long): DataFrame = {
     val spark = batch.sparkSession
     val ev = batch.select(col(keyCol), col(stateCol), col(tsCol), col(tieCol))
     // pre-batch open run per key: the store row, except on replay
@@ -66,7 +66,7 @@ object IncrementalScd {
             org.apache.spark.sql.types.StructField("eff_version",
               org.apache.spark.sql.types.LongType))))
       else KeyedStore
-        .probe(ev.select(keyCol).distinct(), Seq(keyCol), storePath, numBuckets)
+        .probe(ev.select(keyCol).distinct(), Seq(keyCol), storePath)
         .select(col(keyCol),
           when(col("batch_id") === batchId, col("prev_state"))
             .otherwise(col("open_state")).as("eff_state"),
@@ -125,7 +125,7 @@ object IncrementalScd {
         col("version").as("open_version"), lit(batchId).as("batch_id"),
         col("eff_state").as("prev_state"), col("eff_from").as("prev_from"),
         col("eff_version").as("prev_version"))
-    KeyedStore.upsert(open, Seq(keyCol), storePath, numBuckets)
+    KeyedStore.upsert(open, Seq(keyCol), storePath)
     runs.filter(!col("is_current"))
       .select(col(keyCol), col(stateCol), col("version"),
         col("valid_from"), col("valid_to"))

@@ -1,33 +1,62 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.state.KeyedStore
 
-/** Shared durable-store layout for the incremental near-dup family
-  * ([[IncrementalNearDedup]] for text, [[IncrementalEmbeddingNearDedup]]
-  * for vectors): TWO bucket-pruned [[KeyedStore]]s under one root,
+/** The incremental near-dup family's durable store and its ONE batch
+  * step ([[dedupBatch]]), shared by [[IncrementalNearDedup]] (text) and
+  * [[IncrementalEmbeddingNearDedup]] (vectors). A tracker supplies only
+  * its payload rows, its (doc_id, band, key) rows and its similarity
+  * predicate; everything below is the same for every payload type.
+  *
+  * Layout: TWO bucket-pruned [[KeyedStore]]s under one root,
   *
   *   - `<root>/bands` — keyed (band, key): the LSH bucket identity,
   *     whose row carries ONLY the bucket's member doc ids (capped at
   *     `maxBucket`, lowest ids kept). No payloads ride the postings.
   *   - `<root>/docs`  — keyed doc_id: each admitted document's verify
-  *     payload (shingle set / quantized vector), stored exactly ONCE.
+  *     payload, stored exactly ONCE.
   *
-  * Why the side table: the earlier single-store form carried each
-  * admitted doc's payload inside every band row it occupied — nBands
-  * copies (16× at 16 bands) of the admitted corpus, a real storage
-  * bill at 100 TB. Splitting postings from payloads makes store bytes
-  * scale ~1× the admitted data; the price is one extra bucket-pruned
-  * probe per batch (fetch the collided members' payloads by id) —
-  * O(|collided ids|), never a store scan.
+  * Splitting postings from payloads makes store bytes scale ~1× the
+  * admitted data (a payload on every band row would be nBands copies);
+  * the price is one extra bucket-pruned probe per batch (fetch the
+  * collided members' payloads by id) — O(|collided ids|), never a
+  * store scan. Per-batch cost is O(|batch| × bands + collided members)
+  * against a store of any size.
   *
-  * Both stores share the replay story: member-id merge dedups by id,
-  * doc upsert replaces by key, so at-least-once batch replay converges
-  * to the identical store.
+  * A bucket's member list is capped at `maxBucket` (kept = the lowest
+  * doc_ids). A saturated bucket still verifies candidates against its
+  * kept members; what it gives up is detecting dups of members it
+  * evicted — the same recall-for-boundedness trade as `maxDf` in
+  * [[graft.operators.Dedup.jaccardPairs]], and a pair missing in one
+  * saturated bucket still collides in any other shared band. (An
+  * evicted member's doc row lingers in `docs/` unreferenced —
+  * storage-idempotent, never probed.)
+  *
+  * The shared contract:
+  *
+  *   - Replay idempotency (at-least-once foreachBatch): a stored member
+  *     with the batch doc's own id is skipped as a self-match, so a
+  *     replayed batch re-emits exactly its original novel rows; the
+  *     member merge dedups by id and the doc upsert replaces by key, so
+  *     the re-upsert converges to the identical store. Duplicate ids
+  *     within a batch collapse to the minimum (ts, id) row first, so
+  *     duplicated delivery upstream cannot double-admit.
+  *   - In-batch first-wins: a doc similar to ANY earlier (ts, id) doc of
+  *     its batch is dropped, even if that earlier doc was itself dropped
+  *     (transitive chains over-drop, like every keep-min resolution).
+  *   - Docs without payload rows (too short to shingle, null or
+  *     wrong-width vectors) cannot near-dup: they pass through
+  *     unexamined and never enter the store.
+  *   - Write order is `docs/` before `bands/`; see [[isInitialized]].
   */
 private[streaming] object NearDupStore {
+
+  /** One side of a candidate pair: payload column name → that side's
+    * column, for the tracker's similarity predicate. */
+  type Side = String => Column
 
   def bandsPath(root: String): String = root + "/bands"
   def docsPath(root: String): String = root + "/docs"
@@ -44,40 +73,112 @@ private[streaming] object NearDupStore {
   def isInitialized(spark: SparkSession, root: String): Boolean =
     KeyedStore.isInitialized(spark, bandsPath(root))
 
-  /** One bucket-pruned probe of the band store with the batch's own
-    * band keys — (band, key, members) for every stored bucket the
-    * batch touches. Probed ONCE per batch and shared by
-    * [[collisionsFrom]] (history detection) and [[admit]] (member
-    * merge); cost is O(|batch| × bands + touched buckets) against a
-    * store of any size. Caller must guard with [[isInitialized]]. */
-  def probeBands(bk: DataFrame, root: String, numBuckets: Int): DataFrame =
-    KeyedStore.probe(bk.select("band", "key").distinct(), Seq("band", "key"),
-      bandsPath(root), numBuckets)
+  /** (doc_id, band, key) rows: band `b`'s key is `keys(b)`, evaluated
+    * over `rows`. */
+  def bandRows(rows: DataFrame, keys: Seq[Column]): DataFrame = {
+    val bands = keys.zipWithIndex.map { case (k, b) =>
+      struct(lit(b).as("band"), k.as("key"))
+    }
+    rows.select(col("doc_id"), explode(array(bands: _*)).as("bk"))
+      .select(col("doc_id"), col("bk.band").as("band"), col("bk.key").as("key"))
+  }
 
-  /** Distinct (doc_id, old_id) collision pairs of the batch's band
-    * rows against the probed buckets. Self-pairs are dropped here: a
-    * stored member with the batch doc's own id is the replayed-batch
-    * case, not a duplicate. */
-  def collisionsFrom(bk: DataFrame, bandHits: DataFrame): DataFrame =
-    bk.join(bandHits, Seq("band", "key"))
-      .select(col("doc_id"), explode(col("members")).as("old_id"))
-      .filter(col("old_id") =!= col("doc_id"))
-      .dropDuplicates("doc_id", "old_id")
+  /** One batch step (the foreachBatch body, callable in batch jobs
+    * too): returns the novel rows of `batch` and admits them to the
+    * store at `root`. `prepare` maps the batch's first-wins rows to the
+    * tracker's PINNED payload rows (doc_id, payload…) and its band rows
+    * (doc_id, band, key); `similar` is the exact keep/drop predicate
+    * over two payload sides. */
+  def dedupBatch(batch: DataFrame, idCol: String, tsCol: String,
+      root: String, maxBucket: Int)(
+      prepare: DataFrame => (DataFrame, DataFrame))(
+      similar: (Side, Side) => Column): DataFrame = {
+    val spark = batch.sparkSession
+    // at-least-once upstream can duplicate ids WITHIN a batch: exact
+    // first-wins per id before any similarity work
+    val docs = batch
+      .groupBy(col(idCol))
+      .agg(min_by(struct(batch.columns.map(col): _*),
+        struct(col(tsCol), col(idCol))).as("r"))
+      .select(col("r.*"))
+      .localCheckpoint(eager = true)
+    val (payload, unpinnedBands) = prepare(docs)
+    // band rows feed the probe, both candidate joins and the admit: pin
+    val bands = unpinnedBands.localCheckpoint(eager = true)
 
-  /** Stored payload rows for the given ids — a bucket-pruned point
-    * probe of the doc table, O(|ids|) not O(corpus). */
-  def payloads(ids: DataFrame, root: String, numBuckets: Int): DataFrame =
-    KeyedStore.probe(ids.select(col("old_id").as("doc_id")), Seq("doc_id"),
-      docsPath(root), numBuckets)
+    // ONE bucket-pruned probe of the band store per batch, shared by
+    // history detection and the admit member-merge
+    val hasStore = isInitialized(spark, root)
+    val bandHits =
+      if (!hasStore)
+        bands.select("band", "key").limit(0)
+          .withColumn("members", array().cast("array<long>"))
+      else KeyedStore.probe(bands.select("band", "key").distinct(),
+          Seq("band", "key"), bandsPath(root))
+        .localCheckpoint(eager = true)
+
+    // near-dups of history: collide on a stored bucket (self-pairs are
+    // the replayed-batch case), fetch ONLY the collided members'
+    // payloads by id, then the exact predicate
+    val histDups =
+      if (!hasStore) bands.select(col("doc_id").as("x")).limit(0)
+      else {
+        val cand = bands.join(bandHits, Seq("band", "key"))
+          .select(col("doc_id").as("x"), explode(col("members")).as("y"))
+          .filter(col("y") =!= col("x"))
+          .dropDuplicates("x", "y")
+          .localCheckpoint(eager = true)
+        val stored = KeyedStore.probe(cand.select(col("y").as("doc_id")).distinct(),
+          Seq("doc_id"), docsPath(root))
+        verifiedLosers(cand, payload, stored, similar)
+      }
+
+    // in-batch near-dups: X drops iff it shares a band with, and is
+    // similar to, an earlier (ts, id) doc Y
+    val ranked = bands.join(
+      docs.select(col(idCol).as("doc_id"), struct(col(tsCol), col(idCol)).as("o")),
+      Seq("doc_id"))
+    val later = ranked.as("a")
+      .join(ranked.as("b"),
+        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
+          col("b.o") < col("a.o"))
+      .select(col("a.doc_id").as("x"), col("b.doc_id").as("y"))
+      .dropDuplicates("x", "y")
+    val losers = verifiedLosers(later, payload, payload, similar)
+
+    val dropIds = histDups.unionAll(losers).distinct()
+      .withColumnRenamed("x", idCol)
+    val novel = docs.join(dropIds, Seq(idCol), "left_anti")
+      .localCheckpoint(eager = true)
+
+    val admittedIds = novel.select(col(idCol).as("doc_id"))
+    admit(bands.join(admittedIds, Seq("doc_id"), "left_semi"),
+      payload.join(admittedIds, Seq("doc_id"), "left_semi"),
+      bandHits, root, maxBucket)
+    novel
+  }
+
+  /** Distinct `x` of the candidate pairs (x, y) whose payloads — `x`'s
+    * from `xs`, `y`'s from `ys` — satisfy `similar`. Payloads join only
+    * on these verify-sized id sets. */
+  private def verifiedLosers(pairs: DataFrame, xs: DataFrame, ys: DataFrame,
+      similar: (Side, Side) => Column): DataFrame = {
+    def side(payload: DataFrame, s: String): DataFrame =
+      payload.select(payload.columns.map(c =>
+        col(c).as(if (c == "doc_id") s else s"${s}_$c")): _*)
+    pairs.join(side(xs, "x"), Seq("x")).join(side(ys, "y"), Seq("y"))
+      .filter(similar(c => col(s"x_$c"), c => col(s"y_$c")))
+      .select("x").distinct()
+  }
 
   /** Admit a batch's novel docs: upsert their payload rows into the
     * doc store (one row per doc), then merge their band rows (ids
     * only) into the band store — union with the PRE-PROBED existing
-    * members (`bandHits`, from [[probeBands]] — no second store read),
-    * dedup by id (replay), keep the lowest `maxBucket` ids. Write
-    * order is docs-then-bands on purpose: see [[isInitialized]]. */
-  def admit(bandRows: DataFrame, docRows: DataFrame, bandHits: DataFrame,
-      root: String, maxBucket: Int, numBuckets: Int): Unit = {
+    * members (`bandHits` — no second store read), dedup by id (replay),
+    * keep the lowest `maxBucket` ids. Write order is docs-then-bands on
+    * purpose: see [[isInitialized]]. */
+  private def admit(bandRows: DataFrame, docRows: DataFrame,
+      bandHits: DataFrame, root: String, maxBucket: Int): Unit = {
     val newRows = bandRows.select("band", "key", "doc_id")
     // only buckets an admitted doc actually touches get rewritten
     val existingRows = bandHits
@@ -90,8 +191,8 @@ private[streaming] object NearDupStore {
       .agg(slice(array_sort(collect_list(col("doc_id"))), 1, maxBucket)
         .as("members"))
     if (!docRows.isEmpty)
-      KeyedStore.upsert(docRows, Seq("doc_id"), docsPath(root), numBuckets)
+      KeyedStore.upsert(docRows, Seq("doc_id"), docsPath(root))
     if (!merged.isEmpty)
-      KeyedStore.upsert(merged, Seq("band", "key"), bandsPath(root), numBuckets)
+      KeyedStore.upsert(merged, Seq("band", "key"), bandsPath(root))
   }
 }

@@ -104,7 +104,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // bloom-positive — a miss here is exactly the false negative that
     // would let a duplicate through
     val bloom = graft.operators.BloomGate
-      .readFile(spark, IncrementalDedup.bloomPath(gated))
+      .readFile(spark, graft.state.StoreBloom.path(gated))
     assert(bloom.isDefined, "gated run never wrote its sketch")
     val misses = KeyedStore.read(spark, gated)
       .filter(!graft.operators.BloomGate.mightContain(bloom.get, col("fp")))
@@ -128,17 +128,17 @@ class IncrementalDedupSpec extends SparkSpec {
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(got == Seq(4L))
     assert(graft.operators.BloomGate
-      .readFile(spark, IncrementalDedup.bloomPath(store)).isEmpty,
+      .readFile(spark, graft.state.StoreBloom.path(store)).isEmpty,
       "partial sketch written against a pre-gating store")
     // backfill from the store, then gating engages and stays correct
-    IncrementalDedup.rebuildBloom(spark, store, expectedItems = 1000L)
+    graft.state.StoreBloom.rebuild(spark, store, "fp", expectedItems = 1000L)
     val got2 = IncrementalDedup.dedupBatch(
       Seq((5L, "new three", t3), (6L, "new four", t3)).toDF("doc_id", "text", "ts"),
       "doc_id", "text", "ts", store, bloomExpectedItems = Some(1000L))
       .select("doc_id").as[Long].collect().toSeq.sorted
     assert(got2 == Seq(6L))
     val bloom = graft.operators.BloomGate
-      .readFile(spark, IncrementalDedup.bloomPath(store))
+      .readFile(spark, graft.state.StoreBloom.path(store))
     val misses = KeyedStore.read(spark, store)
       .filter(!graft.operators.BloomGate.mightContain(bloom.get, col("fp")))
       .count()

@@ -103,6 +103,37 @@ class IncrementalNearDedupSpec extends SparkSpec {
       .select(explode(col("members")).as("id"))
       .distinct().collect().map(_.getLong(0)).toSet
     assert(memberIds == Set(11L))
+
+    // parity at batch scale: ~200 docs from near-dup families drop
+    // exactly the losers that Dedup.minhashLshPairs implies on the same
+    // shingle sets under (ts, id) first-wins
+    val rnd = new scala.util.Random(7)
+    val vocab = (0 until 400).map(i => s"w$i")
+    val fam = (0 until 40).flatMap { f =>
+      val base = Vector.fill(20)(vocab(rnd.nextInt(vocab.size)))
+      (0 until 5).map { v =>
+        val edited = (0 until v).foldLeft(base)((ws, _) =>
+          ws.updated(rnd.nextInt(ws.size), vocab(rnd.nextInt(vocab.size))))
+        (1000L + f * 5 + v, edited.mkString(" "),
+          new Timestamp(t1.getTime + rnd.nextInt(3) * 3600000L))
+      }
+    }
+    val big = fam.toDF("doc_id", "text", "ts")
+    val kept = ids(IncrementalNearDedup.dedupBatch(big, "doc_id", "text", "ts",
+      tmp("neardedup-parity"))).toSet
+    val shingled = big.select(col("doc_id"),
+      graft.functions.expressions.GraftExpressions
+        .shingleHashes(graft.functions.TextFunctions.words(col("text")), 3)
+        .as("shs"))
+      .filter(size(col("shs")) > 0)
+    val order = fam.map { case (id, _, ts) => id -> (ts.getTime, id) }.toMap
+    val pairs = graft.operators.Dedup.minhashLshPairs(shingled, 0.5)
+      .select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1)))
+    assert(pairs.length > 20, s"families too far apart: ${pairs.length} pairs")
+    val losers = pairs.map { case (a, b) =>
+      if (Ordering[(Long, Long)].lt(order(a), order(b))) b else a }.toSet
+    assert(fam.map(_._1).toSet -- kept == losers,
+      s"dropped ${fam.map(_._1).toSet -- kept} vs LSH losers $losers")
   }
 
   test("duplicated ids within one batch collapse to the min-(ts,id) row") {

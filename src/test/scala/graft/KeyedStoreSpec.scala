@@ -58,7 +58,7 @@ class KeyedStoreSpec extends SparkSpec {
     assert(got.filter($"v" === "v1").count() == 499)
   }
 
-  test("upsert is idempotent under batch replay; rebucket preserves contents") {
+  test("upsert is idempotent under batch replay; the marker's bucket count wins") {
     import spark.implicits._
     val base = tmp("kstore-idem")
     val seed = (0 until 100).map(i => (s"key$i", i.toLong)).toDF("k", "n")
@@ -81,16 +81,15 @@ class KeyedStoreSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(afterStale.size == 100 && afterStale("key9") == 900L,
       s"stale-count upsert duplicated or lost keys: ${afterStale.size}")
-    // migrate to a wider layout: contents identical; lookup discovers
-    // the new count from the table's own marker (no parameter)
-    val dest = tmp("kstore-wide")
-    KeyedStore.rebucket(spark, base, Seq("k"), dest, newBuckets = 32)
-    assert(KeyedStore.bucketCountOf(spark, dest) == 32)
-    val wide = KeyedStore.read(spark, dest).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(wide == afterStale)
-    assert(KeyedStore.lookup(spark, dest, Seq("k"), Seq("key7"))
-      .select("n").as[Long].head() == 700L)
+    // a store created with a non-default count records it; lookup and
+    // probe discover it from the table's own marker (no parameter)
+    val wide = tmp("kstore-wide")
+    KeyedStore.upsert(seed, Seq("k"), wide, numBuckets = 32)
+    assert(KeyedStore.bucketCountOf(spark, wide) == 32)
+    assert(KeyedStore.lookup(spark, wide, Seq("k"), Seq("key7"))
+      .select("n").as[Long].head() == 7L)
+    assert(KeyedStore.probe(Seq("key7").toDF("k"), Seq("k"), wide)
+      .select("n").as[Long].collect().toSeq == Seq(7L))
   }
 
   test("probe/batch key types are aligned to the table's key type before hashing") {
