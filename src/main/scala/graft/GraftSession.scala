@@ -7,7 +7,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Scale posture: shuffle partitions default to the local core count here,
   * but on a real cluster these settings are safe — AQE coalesces and
-  * re-plans skewed joins at runtime.
+  * re-plans skewed joins at runtime. For streams this width and the
+  * RocksDB provider below are the data-sized default: a serving-sized
+  * stream runs on one in-memory state partition instead
+  * ([[graft.streaming.Streams]]).
   *
   * Invariant: no Hadoop `file:` operation forks a process. Without the
   * native-hadoop library the stock local file system runs `chmod` on
@@ -52,8 +55,9 @@ object GraftSession {
       // nothing measurable (batch setup amortizes over 1024 rows;
       // full-suite bench rate was flat under A/B).
       .config("spark.sql.parquet.columnarReaderBatchSize", "1024")
-      // production streaming state backend (spillable, incremental
-      // checkpoints) — the analog of the reference's RocksDB stores
+      // data-sized streaming state backend (spillable, incremental
+      // checkpoints) — the analog of the reference's RocksDB stores;
+      // serving-sized streams swap in the in-memory provider at start
       .config("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
       // file: I/O without a forked chmod/readlink (see the invariant above)

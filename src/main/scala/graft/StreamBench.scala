@@ -9,6 +9,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.core._
 import graft.streaming.{DeltaTracker, Streams}
+import graft.streaming.Streams.DataSized
 
 /** Streaming throughput micro-bench (the r8 verdict's task 4): rows/sec
   * through the engine's two hottest stateful streaming paths —
@@ -72,7 +73,7 @@ object StreamBench {
     val store = s"$outDir/store"
     val warmupRows = math.min(batchRows, 1000)
     val q = Streams.foreachBatch(DeltaTracker.statewise(ms.toDS()).toDF(),
-      "append", Some(s"$outDir/ck")) { (b, _) =>
+      DataSized, "append", Some(s"$outDir/ck")) { (b, _) =>
       b.write.mode("append").parquet(store)
     }
     val (_, _, sec) = drive(q, ms, batch(0, warmupRows, keys), batches, Nil)(
@@ -146,7 +147,7 @@ object StreamBench {
     val ms = MemoryStream[(Long, String, Long)]
     val novelDir = s"$outDir/novel"
     val q = Streams.foreachBatch(ms.toDF().toDF("doc_id", "text", "ts_us"),
-      "append", Some(s"$outDir/ck")) { (b, _) =>
+      DataSized, "append", Some(s"$outDir/ck")) { (b, _) =>
       graft.streaming.IncrementalDedup.dedupBatch(b, "doc_id", "text",
         "ts_us", s"$outDir/store",
         bloomExpectedItems = Some(batchRows.toLong * (batches + 1)))
@@ -208,7 +209,7 @@ object StreamBench {
     val ms = MemoryStream[(Long, String, Long)]
     val novelDir = s"$outDir/novel"
     val q = Streams.foreachBatch(ms.toDF().toDF("doc_id", "text", "ts_us"),
-      "append", Some(s"$outDir/ck")) { (b, _) =>
+      DataSized, "append", Some(s"$outDir/ck")) { (b, _) =>
       graft.streaming.IncrementalNearDedup.dedupBatch(b, "doc_id", "text",
         "ts_us", s"$outDir/store").write.mode("append").parquet(novelDir)
     }
@@ -263,7 +264,7 @@ object StreamBench {
     val outParquet = s"$outDir/deduped"
     val store = s"$outDir/store"
     val q = Streams.foreachBatch(ms.toDF().toDF("doc_id", "text", "ts_us"),
-      "append", Some(s"$outDir/ck")) { (b, _) =>
+      DataSized, "append", Some(s"$outDir/ck")) { (b, _) =>
       graft.streaming.IncrementalChunkDedup.dedupBatch(b, "doc_id", "text",
         "ts_us", store, chunkWords = 8,
         bloomExpectedItems = Some(5L * batchRows * (batches + 1)))
@@ -332,8 +333,8 @@ object StreamBench {
     val closedDir = s"$outDir/closed"
     val store = s"$outDir/store"
     val q = Streams.foreachBatch(
-      ms.toDF().toDF("user_id", "state", "ts_us", "event_id"), "append",
-      Some(s"$outDir/ck")) { (b, id) =>
+      ms.toDF().toDF("user_id", "state", "ts_us", "event_id"), DataSized,
+      "append", Some(s"$outDir/ck")) { (b, id) =>
       graft.streaming.IncrementalScd.scdBatch(b, "user_id", "state", "ts_us",
         "event_id", store, id).write.mode("append").parquet(closedDir)
     }
@@ -436,7 +437,7 @@ object StreamBench {
     val ms = MemoryStream[(Long, Array[Float], Long)]
     val novelDir = s"$outDir/novel"
     val q = Streams.foreachBatch(ms.toDF().toDF("doc_id", "vec", "ts_us"),
-      "append", Some(s"$outDir/ck")) { (b, _) =>
+      DataSized, "append", Some(s"$outDir/ck")) { (b, _) =>
       graft.streaming.IncrementalEmbeddingNearDedup.dedupBatch(b, "doc_id",
         "vec", "ts_us", s"$outDir/store", nBands = 8, bandBits = 16)
         .write.mode("append").parquet(novelDir)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import graft.core.UserPrefs
 import graft.render.AlertFormat
 import graft.streaming.Streams
+import graft.streaming.Streams.ServingSized
 
 /** The bot's alert fanout (S5/P6/P12/J2 — StatsAlertConsumerConfig.java:
   * 89-189, bot KafkaStreamsConfig.java:164-188): for each delta, find
@@ -46,10 +47,14 @@ object AlertPipeline {
     * out of engine scope, injected for testability).
     *
     * The send runs in `foreachPartition` ON THE EXECUTORS — no
-    * driver-side collect funnel, so fanout volume scales with the
-    * cluster; any rate limiting belongs in the sink adapter (`send`),
-    * next to the external service it protects. `send` must therefore be
-    * serializable and executor-safe.
+    * driver-side collect funnel; any rate limiting belongs in the sink
+    * adapter (`send`), next to the external service it protects. `send`
+    * must therefore be serializable and executor-safe. The stream is
+    * serving-sized ([[Streams.ServingSized]]): each micro-batch is one
+    * partition, so one task sends a batch's alerts, and any stateful
+    * operator in `deltaStream` (the `DeltaTracker` upstream) keeps its
+    * state in one in-memory partition. `deltaStream` must therefore be
+    * keyed by a serving key space (states, districts), not by users.
     *
     * P8 observability (the reference's peek at
     * Covid19PatientAnalyzer.java:88 and the bot's logging peeks at
@@ -60,7 +65,7 @@ object AlertPipeline {
       send: (String, String) => Unit,
       onMetrics: (Long, Map[String, Any]) => Unit = (_, _) => ())
       : org.apache.spark.sql.streaming.StreamingQuery =
-    Streams.foreachBatch(deltaStream, "append", None)(
+    Streams.foreachBatch(deltaStream, ServingSized, "append", None)(
       sendBatch(_, _, prefs, send, onMetrics))
 
   /** The composite serving form: [[run]] with the user prefs read per
@@ -87,7 +92,8 @@ object AlertPipeline {
     require(sentMarkerDir.isEmpty || checkpointLocation.isDefined,
       "sentMarkerDir requires a checkpointLocation: batchIds reset " +
         "without one and stale markers would swallow new batches")
-    Streams.foreachBatch(deltaStream, "append", checkpointLocation) {
+    Streams.foreachBatch(deltaStream, ServingSized, "append",
+      checkpointLocation) {
       (batch, batchId) =>
         val spark = batch.sparkSession
         import spark.implicits._

@@ -7,6 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.streaming.Streams
+import graft.streaming.Streams.ServingSized
 
 /** S1 / §1.1 — the "KTable" layer: latest-value-per-key views of a
   * record stream, the load-bearing piece that lets interactive queries
@@ -55,8 +56,9 @@ object MaterializedViews {
     * query state stores (bot StateStoresManager.java). */
   def serveAsView(streaming: DataFrame, keyCols: Seq[String], tsCol: String,
       viewName: String): StreamingQuery =
-    Streams.foreachBatch(latestPerKey(streaming, keyCols, tsCol), "update",
-      None)((b, _) => upsertIntoGlobalView(b, keyCols, viewName))
+    Streams.foreachBatch(latestPerKey(streaming, keyCols, tsCol),
+      ServingSized, "update", None)(
+      (b, _) => upsertIntoGlobalView(b, keyCols, viewName))
 
   /** The foreachBatch body shared by the view-maintaining streams:
     * upsert `changed` (at most one row per key) into
@@ -98,7 +100,7 @@ object MaterializedViews {
   def serveKmvAsView(hashes: org.apache.spark.sql.Dataset[graft.streaming.KeyedHash],
       k: Int, viewName: String): StreamingQuery =
     Streams.foreachBatch(graft.streaming.KmvTracker.track(hashes, k).toDF()
-      .select("key", "nSk", "hK", "est"), "append", None)(
+      .select("key", "nSk", "hK", "est"), ServingSized, "append", None)(
       (b, _) => upsertIntoGlobalView(b, Seq("key"), viewName))
 
   /** Continuously-maintained DAILY TOTALS view — the reference bot's
@@ -126,7 +128,7 @@ object MaterializedViews {
       .groupBy(window(col(tsCol), "1 day").as("w"), col(keyCol))
       .agg(sum(col(valueCol)).as("total"))
       .select(col(keyCol), to_date(col("w.start")).as("day"), col("total"))
-    Streams.foreachBatch(daily, "update", checkpointLocation)(
+    Streams.foreachBatch(daily, ServingSized, "update", checkpointLocation)(
       (b, _) => upsertIntoGlobalView(b, Seq(keyCol, "day"), viewName))
   }
 
@@ -150,7 +152,7 @@ object MaterializedViews {
       .agg(count(lit(1)).as("n"))
       .select(keyCols.map(col) ++
         Seq(to_date(col("w.start")).as("day"), col("n")): _*)
-    Streams.foreachBatch(daily, "update", checkpointLocation)(
+    Streams.foreachBatch(daily, ServingSized, "update", checkpointLocation)(
       (b, _) => upsertIntoGlobalView(b, keyCols :+ "day", viewName))
   }
 }

@@ -160,7 +160,8 @@ object HeavyHitters {
     * `nSalts` Misra-Gries summaries of `capacity` counters each;
     * windows are evicted once the watermark passes their end +
     * `graceMillis`. Requires the RocksDB state-store provider
-    * (`transformWithState`'s backend). */
+    * (`transformWithState`'s backend): its callers start it outside
+    * [[Streams]], on the session's RocksDB provider. */
   def windowedTopK(events: DataFrame, tsCol: String, keyCol: String,
       windowMillis: Long, graceMillis: Long, capacity: Int,
       k: Int, nSalts: Int = 8): Dataset[HitRow] = {

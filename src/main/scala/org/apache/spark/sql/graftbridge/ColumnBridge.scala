@@ -30,4 +30,12 @@ object ColumnBridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** A private copy of `spark`'s session state (conf, temp views,
+    * functions, query-execution listeners) over the same SparkContext;
+    * a conf set on it never reaches `spark` (`cloneSession` is
+    * private[sql] in Spark 4). Its `streams` manager starts empty. */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession)
+      : org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

@@ -151,7 +151,7 @@ class IncrementalChunkDedupSpec extends SparkSpec {
 
     val ms = MemoryStream[(Long, String, Timestamp)]
     def start() = Streams.foreachBatch(ms.toDS().toDF("doc_id", "text", "ts"),
-      "append", Some(ckpt)) { (batch, bid) =>
+      Streams.DataSized, "append", Some(ckpt)) { (batch, bid) =>
       val out = IncrementalChunkDedup.dedupBatch(batch, "doc_id", "text", "ts",
         store, chunkWords = 2)
       byBatch(bid) = out.select("doc_id", "dedup_text").collect()

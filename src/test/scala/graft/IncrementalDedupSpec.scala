@@ -31,7 +31,7 @@ class IncrementalDedupSpec extends SparkSpec {
 
     val ms = MemoryStream[(Long, String, Timestamp)]
     def start() = Streams.foreachBatch(ms.toDS().toDF("doc_id", "text", "ts"),
-      "append", Some(ckpt)) { (batch, bid) =>
+      Streams.DataSized, "append", Some(ckpt)) { (batch, bid) =>
       val novel = IncrementalDedup.dedupBatch(batch, "doc_id", "text", "ts", store)
       novelByBatch(bid) = novel.select("doc_id").as[Long](
         novel.sparkSession.implicits.newLongEncoder).collect().toSeq.sorted

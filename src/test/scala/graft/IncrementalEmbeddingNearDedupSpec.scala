@@ -168,7 +168,7 @@ class IncrementalEmbeddingNearDedupSpec extends SparkSpec {
 
     val ms = MemoryStream[(Long, Seq[Float], Timestamp)]
     def start() = Streams.foreachBatch(ms.toDS().toDF("doc_id", "vec", "ts"),
-      "append", Some(ckpt)) { (batch, _) =>
+      Streams.DataSized, "append", Some(ckpt)) { (batch, _) =>
       val n = IncrementalEmbeddingNearDedup.dedupBatch(batch, "doc_id", "vec",
         "ts", store)
       novel ++= n.select("doc_id").collect().map(_.getLong(0))
@@ -205,7 +205,8 @@ class IncrementalEmbeddingNearDedupSpec extends SparkSpec {
 
     val ms = MemoryStream[(Long, Seq[Float], Timestamp)]
     def start(crash: Boolean) = Streams.foreachBatch(
-      ms.toDS().toDF("doc_id", "vec", "ts"), "append", Some(ckpt)) { (batch, _) =>
+      ms.toDS().toDF("doc_id", "vec", "ts"), Streams.DataSized, "append",
+      Some(ckpt)) { (batch, _) =>
       val n = IncrementalEmbeddingNearDedup.dedupBatch(batch, "doc_id", "vec",
         "ts", store)
       val idsNow = n.select("doc_id").collect().map(_.getLong(0))

@@ -160,7 +160,7 @@ class IncrementalNearDedupSpec extends SparkSpec {
 
     val ms = MemoryStream[(Long, String, Timestamp)]
     def start() = Streams.foreachBatch(ms.toDS().toDF("doc_id", "text", "ts"),
-      "append", Some(ckpt)) { (batch, _) =>
+      Streams.DataSized, "append", Some(ckpt)) { (batch, _) =>
       val n = IncrementalNearDedup.dedupBatch(batch, "doc_id", "text", "ts", store)
       novel ++= n.select("doc_id").collect().map(_.getLong(0))
     }
@@ -198,7 +198,7 @@ class IncrementalNearDedupSpec extends SparkSpec {
     def start(crash: Boolean) = Streams.foreachBatch(
       spark.readStream.schema(schema).json(inDir)
         .withColumn("ts", timestamp_seconds(col("epoch"))),
-      "append", Some(ckpt)) { (batch, _) =>
+      Streams.DataSized, "append", Some(ckpt)) { (batch, _) =>
       val n = IncrementalNearDedup.dedupBatch(batch, "doc_id", "text", "ts", store)
       // dedupBatch has ALREADY upserted the band + doc stores when this
       // callback runs — throwing here is the torn state: store mutated,

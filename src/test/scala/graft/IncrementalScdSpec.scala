@@ -189,8 +189,8 @@ class IncrementalScdSpec extends SparkSpec {
     val byBatch = scala.collection.mutable.Map[Long, Set[Run]]()
     val ms = MemoryStream[(Long, String, Long, Long)]
     def start() = Streams.foreachBatch(
-      ms.toDS().toDF("user_id", "state", "ts_us", "event_id"), "append",
-      Some(ckpt)) { (batch, bid) =>
+      ms.toDS().toDF("user_id", "state", "ts_us", "event_id"),
+      Streams.DataSized, "append", Some(ckpt)) { (batch, bid) =>
       val closed = IncrementalScd.scdBatch(batch, "user_id", "state", "ts_us",
         "event_id", store, bid)
       byBatch(bid) = closed.collect().map(runKey).toSet

@@ -2,6 +2,10 @@
 """Per-stream breakdown of one traced perfbench run.
 
     python3 tools/stream_breakdown.py .perfbench/runs/live-loop-s101-t1/raw.json
+    python3 tools/stream_breakdown.py .perfbench/records/live-loop-s101-t1.json
+
+A run's record (`.perfbench/records/<run>.json`) resolves to that run's
+`.perfbench/runs/<run>/raw.json`, which holds the progress and trace.
 
 `perfbench/metrics.py` averages every stream of a run together (on
 live-loop, the view and the alert stream). This splits the measured
@@ -21,6 +25,8 @@ span, as in `metrics.py`. Reads the record only; stdlib only.
 """
 import argparse
 import json
+import os
+import sys
 from collections import defaultdict
 
 
@@ -109,12 +115,29 @@ def breakdown(raw):
                        f"{mean([so['custom'].get(k, 0) for so in sos]):.0f}")
 
 
+def raw_path(path):
+    """`path` itself, or the raw.json of the run a record names."""
+    with open(path) as f:
+        doc = json.load(f)
+    if "ops" in doc:
+        return path, doc
+    run = os.path.splitext(os.path.basename(path))[0]
+    raw = os.path.normpath(os.path.join(os.path.dirname(os.path.abspath(path)),
+                                        os.pardir, "runs", run, "raw.json"))
+    if not os.path.exists(raw):
+        sys.exit(f"{path} is a run record, and its run's raw.json "
+                 f"({raw}) does not exist")
+    with open(raw) as f:
+        return raw, json.load(f)
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
-    ap.add_argument("raw", help="a traced run's raw.json")
+    ap.add_argument("raw", help="a traced run's raw.json, or its record")
     args = ap.parse_args()
-    with open(args.raw) as f:
-        raw = json.load(f)
+    path, raw = raw_path(args.raw)
+    if not raw.get("trace"):
+        sys.exit(f"{path} is an untraced run; rerun it with --trace 1")
     for line in breakdown(raw):
         print(line)
 
