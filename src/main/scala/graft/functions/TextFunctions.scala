@@ -13,20 +13,6 @@ object TextFunctions {
   /** Whitespace tokenization (documents are single-space separated). */
   def words(text: Column): Column = split(text, " ")
 
-  /** Distinct word n-gram shingles (n=3), the unit for Jaccard/MinHash
-    * dedup. Guarded for texts shorter than n tokens. Spark SQL array
-    * indexing is 0-based (DuckDB's is 1-based — oracles adjust).
-    */
-  def shingles3(wordsCol: Column): Column =
-    when(size(wordsCol) >= 3,
-      array_distinct(transform(
-        sequence(lit(0), size(wordsCol) - 3),
-        i => concat_ws(" ",
-          get(wordsCol, i),
-          get(wordsCol, i + 1),
-          get(wordsCol, i + 2)))))
-      .otherwise(array().cast("array<string>"))
-
   /** Occurrences of tokens from a fixed marker list (language-ID /
     * stopword score). Native expression: the declarative
     * `size(filter(ws, w -> w.isin(...)))` is an interpreted HOF costing

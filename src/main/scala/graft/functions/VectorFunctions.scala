@@ -26,9 +26,6 @@ object VectorFunctions {
   def dotQ(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x * y), lit(0L), (acc, x) => acc + x)
 
-  /** Exact integer squared norm. */
-  def normSqQ(a: Column): Column = dotQ(a, a)
-
   /** Cosine similarity from precomputed integer dot + squared norms. */
   def cosineFrom(dot: Column, normSqA: Column, normSqB: Column): Column =
     dot.cast("double") / (sqrt(normSqA) * sqrt(normSqB))

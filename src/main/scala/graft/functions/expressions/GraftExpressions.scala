@@ -174,22 +174,20 @@ object ShingleHashes {
   }
 }
 
-/** MinHash signature of an `array<string>` shingle set: k independent
-  * hash functions derived from one XXH64 base hash per shingle +
-  * splitmix64 finalizers — k×n hashing in one eval call per row instead
-  * of k interpreted `transform`s (the q28 hot path). */
+/** MinHash signature of an `array<bigint>` shingle-hash set (the
+  * `shingleHashes` output): k independent hash functions derived from
+  * each shingle hash by splitmix64 finalizers — k×n hashing in one eval
+  * call per row instead of k interpreted `transform`s (the q28 hot
+  * path). Any other input type is rejected at analysis. */
 case class MinHashSig(child: Expression, k: Int)
-    extends UnaryExpression with CodegenFallback {
+    extends UnaryExpression with ExpectsInputTypes with CodegenFallback {
 
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
+  override def inputTypes: Seq[DataType] = Seq(ArrayType(LongType))
+
   private lazy val seeds: Array[Long] =
     Array.tabulate(k)(j => MinHashSig.mix(j.toLong * 0x9e3779b97f4a7c15L + 1L))
-
-  private lazy val elementsAreHashes: Boolean = child.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
-  }
 
   override def nullSafeEval(v: Any): Any = {
     val arr = v.asInstanceOf[ArrayData]
@@ -197,12 +195,7 @@ case class MinHashSig(child: Expression, k: Int)
     val sig = Array.fill(k)(Long.MaxValue)
     var i = 0
     while (i < n) {
-      val base =
-        if (elementsAreHashes) arr.getLong(i)
-        else {
-          val s = arr.getUTF8String(i)
-          XXH64.hashUnsafeBytes(s.getBaseObject, s.getBaseOffset, s.numBytes, 42L)
-        }
+      val base = arr.getLong(i)
       var j = 0
       while (j < k) {
         val h = MinHashSig.mix(base ^ seeds(j))

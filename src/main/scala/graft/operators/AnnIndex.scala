@@ -99,19 +99,11 @@ object AnnIndex {
   /** The marker's generation token; None if absent/unreadable (not
     * built, or an append holds it down). Legacy empty markers read as
     * "" — still a stable token across the two bracket reads. */
-  private def markerGen(spark: SparkSession, root: String): Option[String] = {
-    val mp = new Path(root, Marker)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    try {
-      val in = fs.open(mp)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        Some(new String(buf, 0, math.max(n, 0),
-          java.nio.charset.StandardCharsets.UTF_8))
-      } finally in.close()
-    } catch { case _: java.io.IOException => None }
-  }
+  private def markerGen(spark: SparkSession, root: String): Option[String] =
+    // read to EOF: a single read() may return a prefix of the token
+    try BloomGate.readFile(spark, new Path(root, Marker).toString)
+      .map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
+    catch { case _: java.io.IOException => None }
 
   def load(spark: SparkSession, root: String): Handle = {
     require(isBuilt(spark, root), s"no ANN index at $root (run build first)")

@@ -87,8 +87,9 @@ object BloomGate {
     bos.toByteArray
   }
 
-  /** Read a persisted sketch; None when absent (callers fall back to
-    * the ungated path — absence is always safe). */
+  /** Read a small file to EOF (a sketch, a store marker); None when
+    * absent. For a sketch, absence means the ungated path, which is
+    * always safe. */
   def readFile(spark: org.apache.spark.sql.SparkSession,
       path: String): Option[Array[Byte]] = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -106,10 +107,11 @@ object BloomGate {
     }
   }
 
-  /** Persist a sketch via write-temp + rename. The delete→rename gap
-    * can leave the path briefly absent on a non-atomic FS — readers
-    * treat absence as "no gate", so the worst case is one ungated
-    * batch, never a wrong one. */
+  /** Write a small file (a sketch, a store marker) via write-temp +
+    * rename; a failed rename throws. The delete→rename gap can leave
+    * the path briefly absent on a non-atomic FS — sketch readers treat
+    * absence as "no gate", so the worst case is one ungated batch,
+    * never a wrong one. */
   def writeFile(spark: org.apache.spark.sql.SparkSession, path: String,
       bytes: Array[Byte]): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -122,7 +124,7 @@ object BloomGate {
     if (fs.exists(p)) fs.delete(p, false)
     if (!fs.rename(tmp, p)) {
       fs.delete(tmp, false)
-      throw new java.io.IOException(s"bloom sketch rename failed: $path")
+      throw new java.io.IOException(s"rename failed: $tmp -> $path")
     }
   }
 }

@@ -38,9 +38,7 @@ final case class MediaMeta(
   * (exact dimensions + exact channel means) and hash-oracled against
   * DuckDB in q34 (dimensions are a pure function of `md5(text)`, which
   * both engines compute identically). Video (MP4/H.264) has no JDK
-  * codec, so frame-level video decode stays out of scope; frame
-  * SAMPLING (`sampleFrames`) operates on container-declared frame
-  * counts, the metadata a real ingest would carry alongside the bytes.
+  * codec, so frame-level video decode stays out of scope.
   *
   * Scale posture: payloads never shuffle through any of these
   * operators — each is a narrow mapPartitions over (id, bytes); joins
@@ -254,14 +252,6 @@ object Multimodal {
         }
       }
   }
-
-  /** Frame-sampling plan over container-DECLARED frame counts (the
-    * metadata a video ingest carries; MP4 frame decode has no JDK codec
-    * and stays out of scope): every `stride`-th frame index, computed
-    * declaratively so Catalyst prunes/pushes around it. */
-  def sampleFrames(meta: DataFrame, stride: Int): DataFrame =
-    meta.withColumn("sampled_frames",
-      sequence(lit(0), col("n_frames") - 1, lit(stride)))
 
   /** Partition-wise REAL resize: ImageIO decode → aspect-preserving
     * Graphics2D rescale to `targetWidth` → PNG re-encode, the standard

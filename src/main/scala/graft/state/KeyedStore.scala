@@ -5,6 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
+import graft.operators.BloomGate
+
 /** Keyed mutable serving table: hash-bucketed parquet with
   * partition-pruned changed-bucket upsert — the engine's analog of the
   * reference's changelog-backed RocksDB state stores
@@ -72,41 +74,47 @@ object KeyedStore {
   private val MetaFile = "_graft_buckets"
 
   private def writeBucketMeta(spark: SparkSession, basePath: String,
-      numBuckets: Int): Unit = {
-    val p = new Path(basePath, MetaFile)
-    val tmp = new Path(basePath, MetaFile + ".tmp")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // stage + rename so a crash mid-write can't leave a torn marker at
-    // the canonical name (readers of a missing/empty marker fall back)
-    val out = fs.create(tmp, true)
-    try out.write(numBuckets.toString.getBytes("UTF-8")) finally out.close()
-    fs.delete(p, false)
-    fs.rename(tmp, p)
-  }
+      numBuckets: Int): Unit =
+    // staged + renamed, and a failed rename throws: a missing marker
+    // would silently fall back to DefaultBuckets on every later read
+    BloomGate.writeFile(spark, new Path(basePath, MetaFile).toString,
+      numBuckets.toString.getBytes("UTF-8"))
 
   /** The table's bucket count as written — the layout is a property of
     * the TABLE, not of the caller: every reader/writer derives it from
     * this marker, so no caller can probe (or upsert against) the wrong
-    * bucket. [[DefaultBuckets]] when the marker is absent or garbled. */
-  def bucketCountOf(spark: SparkSession, basePath: String): Int = {
-    val p = new Path(basePath, MetaFile)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) DefaultBuckets
-    else {
-      val in = fs.open(p)
-      try {
-        // read to EOF — a single read() may legally return fewer bytes
-        // than available, which would silently truncate the count
-        val acc = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64)
-        var n = in.read(buf)
-        while (n >= 0) { acc.write(buf, 0, n); n = in.read(buf) }
-        val s = new String(acc.toByteArray, "UTF-8").trim
-        // an empty/garbled marker (crash between create and write of a
-        // pre-rename-era table) must not brick the store — fall back
-        scala.util.Try(s.toInt).filter(_ > 0).getOrElse(DefaultBuckets)
-      } finally in.close()
+    * bucket. [[DefaultBuckets]] when the marker is absent, or empty or
+    * garbled (a crash between create and write on a table written
+    * before the marker was staged) — such a marker must not brick the
+    * store. */
+  def bucketCountOf(spark: SparkSession, basePath: String): Int =
+    BloomGate.readFile(spark, new Path(basePath, MetaFile).toString)
+      .flatMap(b => scala.util.Try(new String(b, "UTF-8").trim.toInt).toOption)
+      .filter(_ > 0)
+      .getOrElse(DefaultBuckets)
+
+  private final case class Touched(rows: DataFrame, table: DataFrame, buckets: Int)
+
+  /** The batch's rows bucketed by the table's recorded count, and the
+    * table read pruned to the buckets those rows touch — the shared
+    * first step of [[upsert]] and [[probe]]. hash() is type-sensitive
+    * (hash(7: Int) != hash(7L)), so the key columns are cast to the
+    * TABLE's key types before bucketing, or an Int batch against a
+    * Long-keyed store would land in buckets lookup never reads. The
+    * bucketed rows are batch-small and feed both the bucket list and
+    * the caller's join, so they are pinned once; the touched-bucket
+    * list is collected to the driver (≤ B ints). */
+  private def touched(df: DataFrame, keyCols: Seq[String], basePath: String): Touched = {
+    val spark = df.sparkSession
+    val table = spark.read.parquet(basePath)
+    val aligned = keyCols.foldLeft(df) { (d, k) =>
+      d.withColumn(k, col(k).cast(table.schema(k).dataType))
     }
+    val rows = bucketed(aligned, keyCols, bucketCountOf(spark, basePath))
+      .localCheckpoint(eager = true)
+    val ids = rows.select(BucketCol).distinct().collect().map(_.getInt(0))
+    Touched(rows, table.filter(col(BucketCol).isin(ids.map(Integer.valueOf): _*)),
+      ids.length)
   }
 
   /** Upsert `changed` (one row per key) into the store at `basePath`,
@@ -135,31 +143,15 @@ object KeyedStore {
         .write.partitionBy(BucketCol).mode("overwrite").parquet(basePath)
       writeBucketMeta(spark, basePath, numBuckets)
     } else {
-      val b = bucketCountOf(spark, basePath)
-      // hash() is type-sensitive (hash(7: Int) != hash(7L)): align the
-      // batch's key columns to the TABLE's key types before bucketing,
-      // or a caller handing an Int batch to a Long-keyed store would
-      // write rows into buckets lookup never probes
-      val tableSchema = spark.read.parquet(basePath).schema
-      val aligned = keyCols.foldLeft(changed) { (df, k) =>
-        df.withColumn(k, col(k).cast(tableSchema(k).dataType))
-      }
-      // changed is batch-small (update-mode output: only keys whose
-      // latest value changed this trigger); pin it once — it feeds the
-      // bucket list, the anti-join and the union.
-      val ch = bucketed(aligned, keyCols, b).localCheckpoint(eager = true)
-      // driver-side list of touched buckets: ≤ B ints, model-sized
-      val touched = ch.select(BucketCol).distinct().collect().map(_.getInt(0))
-      val prev = spark.read.parquet(basePath)
-        .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
+      val t = touched(changed, keyCols, basePath)
       // null-safe key equality: null-keyed groups upsert like any other
       // key (plain equality would never match NULL = NULL and duplicate
       // them every batch).
-      val cond = keyCols.map(k => prev(k) <=> ch(k)).reduce(_ && _)
-      val merged = prev.join(ch, cond, "left_anti").unionByName(ch)
+      val cond = keyCols.map(k => t.table(k) <=> t.rows(k)).reduce(_ && _)
+      val merged = t.table.join(t.rows, cond, "left_anti").unionByName(t.rows)
       // one write task per touched bucket; localCheckpoint breaks the
       // read-path dependency so overwriting the same directories is safe
-      merged.repartition(touched.length.max(1), col(BucketCol))
+      merged.repartition(t.buckets.max(1), col(BucketCol))
         .localCheckpoint(eager = true)
         .write.partitionBy(BucketCol)
         .option("partitionOverwriteMode", "dynamic")
@@ -207,16 +199,8 @@ object KeyedStore {
     val spark = keys.sparkSession
     require(exists(spark, basePath),
       s"probe against uninitialized store $basePath (check isInitialized first)")
-    val b = bucketCountOf(spark, basePath)
-    val tableSchema = spark.read.parquet(basePath).schema
-    val aligned = keyCols.foldLeft(keys.select(keyCols.map(col): _*)) {
-      (df, k) => df.withColumn(k, col(k).cast(tableSchema(k).dataType))
-    }
-    val kb = bucketed(aligned, keyCols, b).localCheckpoint(eager = true)
-    val touched = kb.select(BucketCol).distinct().collect().map(_.getInt(0))
-    spark.read.parquet(basePath)
-      .filter(col(BucketCol).isin(touched.map(Integer.valueOf): _*))
-      .join(kb.dropDuplicates(keyCols), keyCols, "left_semi")
+    val t = touched(keys.select(keyCols.map(col): _*), keyCols, basePath)
+    t.table.join(t.rows.dropDuplicates(keyCols), keyCols, "left_semi")
       .drop(BucketCol)
   }
 

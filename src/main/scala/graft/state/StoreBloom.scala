@@ -1,13 +1,14 @@
 package graft.state
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.{col, not}
+import org.apache.spark.sql.functions.col
 
 import graft.operators.BloomGate
 
-/** Superset Bloom sketch over a [[KeyedStore]]'s key set — the shared
-  * lifecycle behind every bloom-gated incremental dedup store
-  * (document fingerprints, chunk digests).
+/** Superset Bloom sketch over a [[KeyedStore]]'s key set — the one
+  * gate and sketch lifecycle behind the bloom-gated exact-dedup stores
+  * (document fingerprints, chunk digests), both reached through
+  * [[graft.streaming.IncrementalDedup.admit]].
   *
   * INVARIANT: the persisted sketch always over-approximates the
   * store's key set, so a bloom-negative key is provably absent and
@@ -38,13 +39,6 @@ final class StoreBloom private[state] (spark: SparkSession, storePath: String,
   def prune(keys: DataFrame, keyCol: String): DataFrame =
     existing.fold(keys)(b =>
       keys.filter(BloomGate.mightContain(b, col(keyCol))))
-
-  /** (definitely-new, maybe-seen) split; None without a sketch. */
-  def split(keys: DataFrame, keyCol: String): Option[(DataFrame, DataFrame)] =
-    existing.map { b =>
-      val g = BloomGate.mightContain(b, col(keyCol))
-      (keys.filter(not(g)), keys.filter(g))
-    }
 
   /** Merge this batch's admitted keys into the sketch — call
     * immediately BEFORE the store upsert. No-op on an uninitialized

@@ -4,7 +4,6 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
-import graft.state.KeyedStore
 
 /** Incremental CHUNK-level dedup against all history — the streaming
   * form of [[graft.operators.Dedup.chunkDedup]]: each micro-batch's
@@ -23,12 +22,11 @@ import graft.state.KeyedStore
   *
   * Within a batch, the winner of a chunk is the minimum
   * (ts, doc_id, chunk_idx) occurrence — deterministic under any
-  * partition layout. Replay-idempotent on the IncrementalDedup
-  * contract: a digest already in the store still survives iff the
-  * store's recorded (first_id, first_ts, first_idx) equals the
-  * batch's own winner pick — i.e. THIS batch admitted it in a failed
-  * attempt — so a replayed batch reassembles exactly its original
-  * output and the re-upsert converges to the identical table.
+  * partition layout. Admission against the store is
+  * [[IncrementalDedup.admit]] over every chunk row, eligible iff it is
+  * its digest's winner, with the winner's (doc_id, ts, chunk_idx) as
+  * the recorded pick — so a replayed batch reassembles exactly its
+  * original output and the re-upsert converges to the identical table.
   */
 object IncrementalChunkDedup {
 
@@ -47,13 +45,6 @@ object IncrementalChunkDedup {
       splitParagraphs: Boolean = false,
       splitSentences: Boolean = false,
       bloomExpectedItems: Option[Long] = None): DataFrame = {
-    val spark = batch.sparkSession
-    // superset sketch over the store's chunk digests: bloom-negative
-    // digests (the bulk of a mostly-novel batch) skip the store probe
-    // — see StoreBloom for the invariant and crash ordering. Chunk
-    // stores carry ~docLen/chunkWords keys per document, so the gate
-    // matters even more here than at the whole-doc granularity.
-    val sb = graft.state.StoreBloom.of(spark, storePath, bloomExpectedItems)
     val docs = batch
       .groupBy(col(idCol).as("doc_id"))
       .agg(min_by(struct(col(textCol).as("text"), col(tsCol).as("ts")),
@@ -70,36 +61,12 @@ object IncrementalChunkDedup {
       .withColumn("is_winner",
         col("ts") === col("w.ts") && col("doc_id") === col("w.doc_id") &&
           col("chunk_idx") === col("w.chunk_idx"))
-    // against the store: a winner survives iff its digest is unseen,
-    // or seen with OUR pick recorded (the replayed-batch case)
-    val kept =
-      if (!KeyedStore.isInitialized(spark, storePath))
-        withWin.withColumn("is_kept", col("is_winner"))
-      else {
-        val probeKeys = withWin.select("ch").distinct()
-        val seen = KeyedStore
-          .probe(sb.fold(probeKeys)(_.prune(probeKeys, "ch")),
-            Seq("ch"), storePath)
-          .select("ch", "first_id", "first_ts", "first_idx")
-        withWin.join(seen, Seq("ch"), "left")
-          .withColumn("is_kept",
-            col("is_winner") && (col("first_id").isNull ||
-              (col("first_id") === col("doc_id") &&
-                col("first_ts") === col("ts") &&
-                col("first_idx") === col("chunk_idx"))))
-          .drop("first_id", "first_ts", "first_idx")
-      }
-    // pin: the upsert changes the store underneath the plan, and the
-    // reassembly + upsert must see the same rows
-    val pinned = kept.localCheckpoint(eager = true)
-    val admitted = pinned.filter(col("is_kept"))
-    sb.foreach(_.recordBefore(admitted, "ch"))
-    KeyedStore.upsert(
-      admitted
-        .select(col("ch"), col("doc_id").as("first_id"),
-          col("ts").as("first_ts"), col("chunk_idx").as("first_idx")),
-      Seq("ch"), storePath)
-    sb.foreach(_.recordAfter(admitted, "ch"))
+      .drop("w")
+    // chunk stores carry ~docLen/chunkWords keys per document, so the
+    // bloom gate matters even more here than at the whole-doc granularity
+    val pinned = IncrementalDedup.admit(withWin, col("is_winner"), "ch",
+      Seq("doc_id" -> "first_id", "ts" -> "first_ts", "chunk_idx" -> "first_idx"),
+      storePath, bloomExpectedItems)
     pinned.groupBy("doc_id", "ts")
       .agg(
         count(lit(1)).as("total_chunks"),

@@ -1,10 +1,10 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.{TextFunctions => T}
-import graft.state.KeyedStore
+import graft.state.{KeyedStore, StoreBloom}
 
 /** Incremental corpus ingestion with dedup against ALL history: each
   * micro-batch of documents is deduplicated within itself, then
@@ -25,25 +25,23 @@ import graft.state.KeyedStore
   *
   * Within a batch, first-wins is deterministic: the minimum
   * (timestamp, id) per fingerprint survives, independent of partition
-  * layout. Replay-idempotent INCLUDING the crash window between the
-  * store upsert and the downstream commit: a fingerprint already in
-  * the store is re-admitted iff the store's recorded (first_id,
-  * first_ts) equals the batch's own first-wins pick — i.e. THIS batch
-  * admitted it in the failed attempt — so a replayed batch re-emits
-  * exactly its original novel rows (never silently drops them), the
-  * re-upsert converges to the identical table, and the caller's sink
-  * can commit the novel rows transactionally by batch id.
+  * layout. Admission against the store is [[admit]], shared with
+  * [[IncrementalChunkDedup]]; its contract makes the tracker
+  * replay-idempotent INCLUDING the crash window between the store
+  * upsert and the downstream commit: a replayed batch re-emits exactly
+  * its original novel rows (never silently drops them), so the
+  * caller's sink can commit them transactionally by batch id.
   */
 object IncrementalDedup {
 
   /** One batch step (the foreachBatch body, callable in batch jobs
     * too): returns the novel rows of `batch` and upserts their
     * fingerprints. `batch`: (id, text, ts, …) with `idCol`/`tsCol`
-    * naming the identity and arrival order. */
+    * naming the identity and arrival order. Admission is [[admit]]'s
+    * first-wins step over the in-batch picks. */
   def dedupBatch(batch: DataFrame, idCol: String, textCol: String,
       tsCol: String, storePath: String,
       bloomExpectedItems: Option[Long] = None): DataFrame = {
-    val spark = batch.sparkSession
     val fp = batch.withColumn("fp", T.fingerprint(col(textCol)))
     // in-batch first-wins: min (ts, id) per fingerprint — deterministic
     // under any partitioning
@@ -52,36 +50,56 @@ object IncrementalDedup {
       .agg(min_by(struct(fp.columns.map(col): _*),
         struct(col(tsCol), col(idCol))).as("r"))
       .select(col("r.*"))
-    val storeInit = KeyedStore.isInitialized(spark, storePath)
-    val sb = graft.state.StoreBloom.of(spark, storePath, bloomExpectedItems)
-    // filter by the recorded (first_id, first_ts): unseen fp, OR seen
-    // with OUR first-wins pick — the replayed-batch case (idempotency
-    // note above)
-    def probed(candidates: DataFrame): DataFrame = {
-      val seen = KeyedStore
-        .probe(candidates.select("fp"), Seq("fp"), storePath)
-        .select("fp", "first_id", "first_ts")
-      candidates.join(seen, Seq("fp"), "left")
-        .filter(col("first_id").isNull ||
-          (col("first_id") === col(idCol) && col("first_ts") === col(tsCol)))
-        .drop("first_id", "first_ts")
-    }
-    val novel =
-      if (!storeInit) firsts
-      else sb.flatMap(_.split(firsts, "fp")) match {
-        case None => probed(firsts)
-        case Some((defNew, maybeSeen)) =>
-          // superset invariant ⇒ bloom-negatives are definitely novel
-          defNew.unionByName(probed(maybeSeen))
+    admit(firsts, lit(true), "fp", Seq(idCol -> "first_id", tsCol -> "first_ts"),
+      storePath, bloomExpectedItems)
+      .filter(col("is_kept"))
+      .drop("fp", "is_kept")
+  }
+
+  /** First-wins admission against the durable [[KeyedStore]] at
+    * `storePath` — the one store step of both exact-dedup trackers
+    * (this one and [[IncrementalChunkDedup]]). `candidates` carries the
+    * key column `keyCol`; the rows where `eligible` holds are the
+    * batch's picks, one per key. `picks` maps each candidate column of
+    * a pick to the store column that records it.
+    *
+    * Contract: a row is kept (`is_kept`) iff it is eligible and its
+    * key is unseen in the store, or seen with a recorded pick equal to
+    * ours — the replayed-batch case, where THIS batch admitted the key
+    * in a failed attempt, so a replay keeps exactly its original rows
+    * and the re-upsert converges to the identical table. The rows are
+    * pinned before the upsert changes the store underneath their plan
+    * (and because the upsert and the caller must see the same rows);
+    * the kept keys and picks are then upserted. With
+    * `bloomExpectedItems`, only bloom-positive keys are probed; the
+    * sketch's ordering around the upsert lives in [[StoreBloom]].
+    * Returns every candidate row, pinned, with `is_kept`. */
+  private[streaming] def admit(candidates: DataFrame, eligible: Column,
+      keyCol: String, picks: Seq[(String, String)], storePath: String,
+      bloomExpectedItems: Option[Long]): DataFrame = {
+    val spark = candidates.sparkSession
+    val sb = StoreBloom.of(spark, storePath, bloomExpectedItems)
+    val kept =
+      if (!KeyedStore.isInitialized(spark, storePath))
+        candidates.withColumn("is_kept", eligible)
+      else {
+        val keys = candidates.filter(eligible).select(keyCol)
+        val recorded = picks.map(_._2)
+        val seen = KeyedStore
+          .probe(sb.fold(keys)(_.prune(keys, keyCol)), Seq(keyCol), storePath)
+          .select(keyCol, recorded: _*)
+        val ours = picks.map { case (c, s) => col(s) === col(c) }.reduce(_ && _)
+        candidates.join(seen, Seq(keyCol), "left")
+          .withColumn("is_kept", eligible && (col(recorded.head).isNull || ours))
+          .drop(recorded: _*)
       }
-    // pin before the store changes underneath the plan, and because two
-    // consumers (upsert + caller) must see the same rows
-    val pinned = novel.localCheckpoint(eager = true)
-    sb.foreach(_.recordBefore(pinned, "fp"))
+    val pinned = kept.localCheckpoint(eager = true)
+    val admitted = pinned.filter(col("is_kept"))
+    sb.foreach(_.recordBefore(admitted, keyCol))
     KeyedStore.upsert(
-      pinned.select(col("fp"), col(idCol).as("first_id"), col(tsCol).as("first_ts")),
-      Seq("fp"), storePath)
-    sb.foreach(_.recordAfter(pinned, "fp"))
-    pinned.drop("fp")
+      admitted.select(col(keyCol) +: picks.map { case (c, s) => col(c).as(s) }: _*),
+      Seq(keyCol), storePath)
+    sb.foreach(_.recordAfter(admitted, keyCol))
+    pinned
   }
 }

@@ -129,6 +129,21 @@ class KeyedStoreSpec extends SparkSpec {
     assert(KeyedStore.read(spark, base).count() == 50)
   }
 
+  test("a failed bucket-marker rename fails the upsert instead of leaving no marker") {
+    import spark.implicits._
+    // without the marker every later read falls back to DefaultBuckets,
+    // and a 3-bucket table would be probed and upserted in the wrong
+    // buckets without any error
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.failrename.impl", classOf[FailingMarkerRenameFs].getName)
+    try {
+      val base = "failrename://" + tmp("kstore-rename")
+      val e = intercept[java.io.IOException](KeyedStore.upsert(
+        Seq(("a", 1L), ("b", 2L)).toDF("k", "n"), Seq("k"), base, numBuckets = 3))
+      assert(e.getMessage.contains("_graft_buckets"), e.getMessage)
+    } finally conf.unset("fs.failrename.impl")
+  }
+
   test("null-keyed rows upsert like any key (no per-batch duplication)") {
     import spark.implicits._
     val base = tmp("kstore-null")
@@ -228,4 +243,13 @@ class KeyedStoreSpec extends SparkSpec {
     assert(KeyedStore.read(spark, base).filter(col("state") === "State7")
       .select("doublingRate").as[String].head() == "133")
   }
+}
+
+/** The raw local file system under the `failrename` scheme, except that
+  * a rename onto a `_graft_buckets` bucket marker reports failure. */
+class FailingMarkerRenameFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("failrename:///")
+  override def rename(src: org.apache.hadoop.fs.Path,
+      dst: org.apache.hadoop.fs.Path): Boolean =
+    dst.getName != "_graft_buckets" && super.rename(src, dst)
 }

@@ -292,19 +292,6 @@ class LlmOperatorsSpec extends SparkSpec {
         "the perceptual operator would be redundant")
   }
 
-  test("frame sampling over declared video metadata: every stride-th index") {
-    import spark.implicits._
-    val meta = Seq((1L, 240), (2L, 24), (3L, 1), (4L, 25))
-      .toDF("doc_id", "n_frames")
-    val rows = Multimodal.sampleFrames(meta, stride = 24)
-      .select(col("doc_id"), col("sampled_frames")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(rows(1L) == (0 until 240 by 24).toSeq)
-    assert(rows(2L) == Seq(0))
-    assert(rows(3L) == Seq(0))
-    assert(rows(4L) == Seq(0, 24))
-  }
-
   test("DotProductL (codegen) equals the declarative zip_with/aggregate dot") {
     import graft.functions.{VectorFunctions => V}
     import graft.functions.expressions.GraftExpressions.dotQFast
@@ -323,10 +310,14 @@ class LlmOperatorsSpec extends SparkSpec {
 
   test("MinHashSig: length k, identical inputs share signatures, estimates Jaccard") {
     import graft.functions.{TextFunctions => T}
-    import graft.functions.expressions.GraftExpressions.minhashSig
-    val d = graft.sources.Tables.load(spark, sf, "documents")
-      .select(col("doc_id"), T.shingles3(T.words(col("text"))).as("shs"))
+    import graft.functions.expressions.GraftExpressions.{minhashSig, shingleHashes}
+    val docs = graft.sources.Tables.load(spark, sf, "documents")
+    val d = docs
+      .select(col("doc_id"), shingleHashes(T.words(col("text")), 3).as("shs"))
       .withColumn("sig", minhashSig(col("shs"), 64))
+    // only shingle hashes are signed: any other element type fails analysis
+    intercept[org.apache.spark.sql.AnalysisException](
+      docs.select(minhashSig(T.words(col("text")), 64)))
     assert(d.filter(size(col("sig")) =!= 64).count() == 0)
     // a doc joined to itself: all 64 positions equal => estimate 1.0
     val self = d.as("a").join(d.as("b"), col("a.doc_id") === col("b.doc_id"))
@@ -428,7 +419,7 @@ class LlmOperatorsSpec extends SparkSpec {
     import graft.functions.{VectorFunctions => V}
     val e = graft.sources.Tables.load(spark, sf, "embeddings").limit(50)
       .select(col("vec_id"), V.quantize(col("embedding")).as("qv"))
-      .withColumn("nsq", V.normSqQ(col("qv")))
+      .withColumn("nsq", V.dotQ(col("qv"), col("qv")))
     val selfSim = e.select(
       V.cosineFrom(V.dotQ(col("qv"), col("qv")), col("nsq"), col("nsq")).as("c"))
       .filter(abs(col("c") - 1.0) > 1e-12).count()

@@ -24,7 +24,11 @@ resolving types, so two members that share a name keep each other
 listed as reached.
 
 Prints one line per hit, `file:line name tests=<n>`, where n is the
-number of files under `src/test/scala` that name it. Stdlib only.
+number of files under `src/test/scala` that name it. Then prints the
+line totals of `src/main/scala` to stderr: code lines are the lines
+left non-blank by the same stripping, comment lines the other non-blank
+lines (comments, and the inner lines of multi-line strings). Stdlib
+only.
 """
 import os
 import re
@@ -185,6 +189,19 @@ def main():
             if not used:
                 tests = sum(name in s for s in test_sets)
                 print(f"{rel}:{ln} {name} tests={tests}")
+
+    main_src = os.path.join(root, "src", "main", "scala") + os.sep
+    code = comment = 0
+    for f in main_files:
+        if f.startswith(main_src):
+            raw = open(f, encoding="utf-8").read().split("\n")
+            for r, c in zip(raw, stripped[f].split("\n")):
+                if c.strip():
+                    code += 1
+                elif r.strip():
+                    comment += 1
+    print(f"src/main/scala: {code} code lines, {comment} comment lines",
+          file=sys.stderr)
 
 
 if __name__ == "__main__":
