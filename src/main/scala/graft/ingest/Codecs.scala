@@ -22,9 +22,7 @@ object Codecs {
   val statewiseStatsSchema: StructType = Encoders.product[StatewiseStats].schema
   val statewiseDeltaSchema: StructType = Encoders.product[StatewiseDelta].schema
   val districtwiseDataSchema: StructType = Encoders.product[DistrictwiseData].schema
-  val patientInfoSchema: StructType = Encoders.product[PatientInfo].schema
   val userPrefsSchema: StructType = Encoders.product[UserPrefs].schema
-  val testDataSchema: StructType = Encoders.product[StatewiseTestData].schema
 
   /** Decode a (key, value-json) frame into a typed Dataset. */
   def decode[T <: Product](df: DataFrame, schema: StructType)(

@@ -23,9 +23,10 @@ import org.apache.spark.sql.types._
   *                    ADC paths scan this and never the vectors.
   *   - `centroids/` — the k-row cluster model (broadcast at probe).
   *   - `codebook/`  — (m, c, cent) rows of the PQ codebook.
-  *   - `_graft_ann_ready` — commit marker, written last: a crashed
-  *                    build is invisible to [[isBuilt]] and simply
-  *                    rebuilt.
+  *   - `_graft_ann_ready` — commit marker. Commit order ([[commit]]):
+  *                    marker down → write the artifacts → marker up,
+  *                    so a crashed build is invisible to [[isBuilt]]
+  *                    and simply rebuilt.
   *
   * Everything in the build is deterministic (k-means inits from the
   * first k vec_ids, PQ trains on the first `sample` vec_ids with
@@ -55,55 +56,36 @@ object AnnIndex {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  /** Build all artifacts from a quantized corpus (vec_id, qv, nsq). */
+  /** Build all artifacts from a quantized corpus (vec_id, qv, nsq),
+    * through [[commit]]: a build that throws midway leaves the root
+    * unbuilt, never the old marker over half-rewritten artifacts. */
   def build(corpus: DataFrame, root: String, kClusters: Int, iters: Int,
       m: Int = 8, pqK: Int = 16, sample: Int = 2048): Unit = {
     val spark = corpus.sparkSession
-    val (indexed, cents) = Similarity.kmeansIndex(corpus, kClusters, iters)
-    // the assignment pass feeds both the ivf table and the encode pass:
-    // pin it so the corpus is scanned once per artifact, not re-assigned
-    val pinned = indexed.localCheckpoint(eager = true)
-    pinned.write.partitionBy("cluster").mode("overwrite")
-      .parquet(s"$root/ivf")
-    cents.write.mode("overwrite").parquet(s"$root/centroids")
-    val cb = Similarity.pqTrain(corpus, m, pqK, sample = sample)
-    val cbRows = for {
-      (sub, mm) <- cb.zipWithIndex
-      (cent, c) <- sub.zipWithIndex
-    } yield Row(mm, c, cent.toSeq)
-    val cbSchema = StructType(Seq(
-      StructField("m", IntegerType, nullable = false),
-      StructField("c", IntegerType, nullable = false),
-      StructField("cent", ArrayType(LongType, containsNull = false))))
-    spark.createDataFrame(java.util.Arrays.asList(cbRows: _*), cbSchema)
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/codebook")
-    Similarity.pqEncode(pinned, cb)
-      .select("vec_id", "cluster", "code")
-      .write.partitionBy("cluster").mode("overwrite").parquet(s"$root/codes")
-    writeMarker(spark, root)
+    commit(spark, root, Marker) {
+      val (indexed, cents) = Similarity.kmeansIndex(corpus, kClusters, iters)
+      // the assignment pass feeds both the ivf table and the encode pass:
+      // pin it so the corpus is scanned once per artifact, not re-assigned
+      val pinned = indexed.localCheckpoint(eager = true)
+      pinned.write.partitionBy("cluster").mode("overwrite")
+        .parquet(s"$root/ivf")
+      cents.write.mode("overwrite").parquet(s"$root/centroids")
+      val cb = Similarity.pqTrain(corpus, m, pqK, sample = sample)
+      val cbRows = for {
+        (sub, mm) <- cb.zipWithIndex
+        (cent, c) <- sub.zipWithIndex
+      } yield Row(mm, c, cent.toSeq)
+      val cbSchema = StructType(Seq(
+        StructField("m", IntegerType, nullable = false),
+        StructField("c", IntegerType, nullable = false),
+        StructField("cent", ArrayType(LongType, containsNull = false))))
+      spark.createDataFrame(java.util.Arrays.asList(cbRows: _*), cbSchema)
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/codebook")
+      Similarity.pqEncode(pinned, cb)
+        .select("vec_id", "cluster", "code")
+        .write.partitionBy("cluster").mode("overwrite").parquet(s"$root/codes")
+    }
   }
-
-  /** Commit: the marker carries a fresh GENERATION token. [[ensure]]'s
-    * lock-free fast path brackets its listings with two generation
-    * reads — same generation on both sides proves no build/append
-    * committed (or took the marker down) in between. */
-  private def writeMarker(spark: SparkSession, root: String): Unit = {
-    val mp = new Path(root, Marker)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val out = fs.create(mp, true)
-    out.write(java.util.UUID.randomUUID().toString
-      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-  }
-
-  /** The marker's generation token; None if absent/unreadable (not
-    * built, or an append holds it down). Legacy empty markers read as
-    * "" — still a stable token across the two bracket reads. */
-  private def markerGen(spark: SparkSession, root: String): Option[String] =
-    // read to EOF: a single read() may return a prefix of the token
-    try BloomGate.readFile(spark, new Path(root, Marker).toString)
-      .map(new String(_, java.nio.charset.StandardCharsets.UTF_8))
-    catch { case _: java.io.IOException => None }
 
   def load(spark: SparkSession, root: String): Handle = {
     require(isBuilt(spark, root), s"no ANN index at $root (run build first)")
@@ -253,95 +235,46 @@ object AnnIndex {
     }
   }
 
+  /** The one commit order of the persisted indexes (this one and
+    * [[TextIndex]]): the `marker` under `root` comes down before `write`
+    * touches an artifact and goes back up only after `write` returns.
+    * A writer that throws or dies midway leaves the root unbuilt, so
+    * readers fail fast and the next `ensure` rebuilds it. `ensure` and
+    * `TextIndex.upsert` run it under [[withBuildLock]]. */
+  private[graft] def commit(spark: SparkSession, root: String,
+      marker: String)(write: => Unit): Unit = {
+    val mp = new Path(root, marker)
+    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.delete(mp, false)
+    write
+    fs.create(mp, true).close()
+  }
+
   /** Build-if-absent + load: the registry/bench entry point. The root
     * is derived from the corpus location, a corpus FINGERPRINT, and
     * the index parameters, so distinct datasets, regenerated data, or
-    * changed configs never share artifacts. BUILDS serialize on the
-    * lock file — exactly one caller runs the build, the rest wait and
-    * load the committed artifacts (the in-lock isBuilt double-check).
-    * READS of a built index are lock-free: the generation-bracketed
-    * fast path below proves snapshot consistency without touching the
-    * lock, so probe-many workloads never serialize and a crashed
-    * holder's orphaned lock never stalls them. */
+    * changed configs never share artifacts. A built root loads without
+    * the lock, so probe-many workloads never serialize and a crashed
+    * holder's orphaned lock never stalls them; a load that fails falls
+    * to the locked path. BUILDS serialize on the lock file: exactly one
+    * caller builds, the rest re-check the marker under the lock and
+    * load the committed artifacts. `ensure` builds only a root whose
+    * marker is down, so it never rewrites a root that readers load; a
+    * direct [[build]] over such a root is outside this contract. */
   def ensure(corpus: DataFrame, root: String, kClusters: Int, iters: Int,
       m: Int = 8, pqK: Int = 16, sample: Int = 2048): Handle = {
     val spark = corpus.sparkSession
-    // LOCK-FREE fast path, generation-bracketed: read the marker's
-    // generation, snapshot the listings (load() builds the two tables'
-    // InMemoryFileIndex eagerly and collects the model-sized codebook),
-    // re-read the generation. Same token on both sides proves no
-    // append/build committed or took the marker down in between —
-    // append deletes the marker BEFORE its first table write and
-    // recommits with a NEW generation after the second — so the
-    // snapshot cannot straddle a slice. A changed/absent token (or a
-    // load tripping over a mid-append state) just falls to the locked
-    // path. This keeps built-index reads concurrent AND immune to a
-    // crashed holder's orphaned fresh-mtime lock, which the briefly-
-    // locked r8 fast path would have waited staleMs (10 min) on.
-    var attempt = 0
-    while (attempt < 3) {
-      markerGen(spark, root) match {
-        case Some(g) =>
-          val h =
-            try Some(load(spark, root))
-            catch { case scala.util.control.NonFatal(_) => None }
-          h match {
-            case Some(handle) if markerGen(spark, root).contains(g) =>
-              return handle
-            case _ => attempt += 1 // raced an append: retry, then lock
-          }
-        case None => attempt = 3 // not built (or append in flight)
-      }
-    }
-    withBuildLock(spark, root) {
+    val loaded =
+      if (!isBuilt(spark, root)) None
+      else try Some(load(spark, root))
+      catch { case scala.util.control.NonFatal(_) => None }
+    loaded.getOrElse(withBuildLock(spark, root) {
       if (!isBuilt(spark, root)) {
         buildObserver(root)
         build(corpus, root, kClusters, iters, m, pqK, sample)
       }
       load(spark, root)
-    }
-  }
-
-  /** Grow a built index by a new corpus slice WITHOUT re-training or
-    * re-encoding old rows: assign the new vectors to the EXISTING
-    * centroid model, PQ-encode them with the EXISTING codebook, and
-    * append the rows into the cluster-partitioned ivf/ and codes/
-    * tables (parquet append — existing files are never rewritten).
-    * This is production IVF/PQ maintenance: the model is fixed at
-    * build time and slices accrete in O(|slice|); re-train via
-    * [[build]] only when drift degrades recall (the fingerprint-root
-    * scheme already forces a rebuild when the SOURCE regenerates).
-    *
-    * Caller contract: `newCorpus` ids are disjoint from what the index
-    * already holds (appending an existing id duplicates it — this is
-    * accretion, not upsert). Serialized against concurrent builds and
-    * appends by the same lock as [[ensure]], and CRASH-SAFE behind the
-    * commit marker: the marker comes off before the first table write
-    * and back on after the second, so a crash mid-append leaves the
-    * root "not built" and the next [[ensure]] rebuilds from its corpus
-    * instead of serving an ivf/ that is one slice ahead of codes/.
-    * (A bare [[load]] RACING a live append lists the two tables'
-    * files at slightly different moments and can straddle the slice —
-    * call [[ensure]], whose generation-bracketed fast path detects the
-    * race and retries/locks, when appends run concurrently.) */
-  def append(newCorpus: DataFrame, root: String): Unit = {
-    val spark = newCorpus.sparkSession
-    withBuildLock(spark, root) {
-      require(isBuilt(spark, root), s"no ANN index at $root (run build first)")
-      val h = load(spark, root)
-      val assigned = Similarity
-        .assignToCentroids(newCorpus, h.centroids)
-        .localCheckpoint(eager = true) // one assignment pass feeds both tables
-      val mp = new Path(root, Marker)
-      val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(mp, false) // index reads as unbuilt while the writes run
-      assigned.write.partitionBy("cluster").mode("append")
-        .parquet(s"$root/ivf")
-      Similarity.pqEncode(assigned, h.codebook)
-        .select("vec_id", "cluster", "code")
-        .write.partitionBy("cluster").mode("append").parquet(s"$root/codes")
-      writeMarker(spark, root) // recommit under a NEW generation
-    }
+    })
   }
 
   /** Source fingerprint for index-root derivation: fold (relative

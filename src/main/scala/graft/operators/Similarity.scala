@@ -358,14 +358,14 @@ object Similarity {
   }
 
   /** Assign every corpus vector to its nearest centroid (cosine) in a
-    * FIXED centroid model — the shared pass of [[kmeansIndex]]'s Lloyd
-    * rounds and `AnnIndex.append`'s model-preserving index growth.
+    * FIXED centroid model — the pass each of [[kmeansIndex]]'s Lloyd
+    * rounds runs.
     * Argmax as an AGGREGATE, not a window: max_by gets a map-side
     * partial phase, so the shuffle moves n assigned rows instead of all
     * n×k scored rows (round-3 finding). Tie-break: highest sim, then
     * LOWEST cluster id (the window's `orderBy(sim desc, cluster)`),
     * encoded as max over struct(sim, -cluster). */
-  def assignToCentroids(corpus: DataFrame, cents: DataFrame): DataFrame =
+  private def assignToCentroids(corpus: DataFrame, cents: DataFrame): DataFrame =
     corpus.crossJoin(broadcast(cents))
       .withColumn("sim",
         V.cosineFrom(dotQFast(col("qv"), col("cqv")), col("nsq"), col("cnsq")))
@@ -405,8 +405,9 @@ object Similarity {
     (assign(cents), cents)
   }
 
-  /** SemDedup (the Abbas et al. 2023 shape): semantic dedup by k-means
-    * partitioning + within-cluster exact cosine, then connected-
+  /** SemDedup (the Abbas et al. 2023 shape) over a PRE-ASSIGNED
+    * clustered corpus (vec_id, qv, nsq, cluster), e.g. [[kmeansIndex]]'s
+    * inverted file: within-cluster exact cosine, then connected-
     * component resolution so each near-dup group keeps exactly one
     * representative (its minimum vec_id). Returns one row per vector:
     * (vec_id, cluster, canonical_id, keep).
@@ -418,15 +419,7 @@ object Similarity {
     * |cluster|², so k grows ∝ n to hold the expected cluster size — and
     * with it the per-key join fan-out — constant as the corpus scales;
     * the resolve pass is the same distributed label propagation as
-    * q44's. */
-  def semdedup(corpus: DataFrame, k: Int, iters: Int,
-      threshold: Double): DataFrame =
-    semdedupAssigned(kmeansIndex(corpus, k, iters)._1, threshold)
-
-  /** [[semdedup]] over a PRE-ASSIGNED clustered corpus (vec_id, qv,
-    * nsq, cluster) — e.g. `AnnIndex`'s persisted inverted file: the
-    * k-means passes are index-build cost paid once, and each dedup
-    * run pays only the within-cluster pair join + resolution. */
+    * q44's. The k-means passes are index-build cost paid once. */
   def semdedupAssigned(indexed: DataFrame, threshold: Double): DataFrame = {
     val pairs = indexed.as("a")
       .join(indexed.as("b"),
@@ -442,25 +435,6 @@ object Similarity {
         coalesce(col("canonical_id"), col("vec_id")).as("canonical_id"))
       .withColumn("keep", col("canonical_id") === col("vec_id"))
   }
-
-  /** Cross-split leakage audit over [[semdedupAssigned]] output — the
-    * embedding-space complement of the token-overlap audit (q89):
-    * paraphrase contamination that shares no 3-gram still lands in one
-    * semantic dup group, and a group straddling train/eval is exactly
-    * an eval-set leak. Split membership is a pure function of the id
-    * ([[Sampling.splitColumn]]), projected per member — no corpus
-    * join; the audit costs one aggregation over the already-resolved
-    * assignment. Returns (canonical_id, n_members, splits) for groups
-    * spanning >1 split. The oracled q94 runs the same composition over
-    * the hash-checkable sign-LSH pair family; this form rides the
-    * production k-means clusters. */
-  def semdedupSplitLeaks(assigned: DataFrame): DataFrame =
-    assigned
-      .withColumn("split", Sampling.splitColumn(col("vec_id")))
-      .groupBy("canonical_id")
-      .agg(count(lit(1)).as("n_members"),
-        array_sort(collect_set(col("split"))).as("splits"))
-      .filter(size(col("splits")) > 1)
 
   /** IVF approximate top-k: score queries against the centroid model
     * (broadcast), probe the nProbe nearest inverted lists, exact re-rank

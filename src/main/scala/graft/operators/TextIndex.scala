@@ -24,12 +24,13 @@ import graft.functions.{TextFunctions => T}
   *     posting LIST as the value so a term is one row.
   *   - `stats/` — one row: (n_docs, sum_dl, avgdl, max_df,
   *     n_buckets) — the BM25 corpus constants + the layout contract.
-  *   - `_INDEX_COMMITTED` — written last; its absence means rebuild.
+  *   - `_INDEX_COMMITTED` — the commit marker; its absence means rebuild.
   *
-  * Builds are serialized by [[AnnIndex.withBuildLock]] (same
-  * cross-process lock, stale-break and heartbeat semantics); `ensure`
-  * double-checks the marker under the lock so concurrent callers
-  * build exactly once.
+  * Writers are [[build]] and [[upsert]], serialized by
+  * [[AnnIndex.withBuildLock]] (same cross-process lock, stale-break and
+  * heartbeat semantics), and both commit through [[AnnIndex.commit]]:
+  * marker down → write the artifacts → marker up. `ensure` re-checks
+  * the marker under the lock so concurrent callers build exactly once.
   *
   * 100 TB posture: the build is one tokenize + one (term, doc) count
   * + one term-keyed collect_list shuffle — the same passes a
@@ -45,8 +46,8 @@ object TextIndex {
   val AlgoVersion = 3 // v3: forward index (doc -> terms/dl) enabling upsert
 
   /** Default bucket count. A BUILD-TIME KNOB since r10 (recorded in
-    * stats as `n_buckets`, honored by every reader): upsert/append
-    * rewrite whole touched bucket directories, so the rewrite cost of a
+    * stats as `n_buckets`, honored by every reader): upsert
+    * rewrites whole touched bucket directories, so the rewrite cost of a
     * fixed batch is ≈ touched_buckets × (index_bytes / n_buckets) —
     * with the bucket count pinned, a batch whose term set spans all
     * buckets rewrites a FIXED FRACTION of the index, i.e. cost linear
@@ -79,7 +80,7 @@ object TextIndex {
   }
 
   /** The per-term posting rows for a document frame — shared by
-    * [[build]] (whole corpus) and [[append]] (the new slice). */
+    * [[build]] (whole corpus) and [[upsert]] (the replacement docs). */
   private def postingRows(docs: DataFrame): DataFrame = {
     val toks = docs
       .select(col("doc_id"), T.words(col("text")).as("ws"))
@@ -112,71 +113,47 @@ object TextIndex {
         array_sort(array_distinct(col("ws"))).as("terms"))
       .withColumn("dbucket", dbucketOf(col("doc_id"), n))
 
-  private def writeMarker(spark: SparkSession, root: String): Unit = {
-    val mp = new Path(root, Marker)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.create(mp, true).close()
-  }
-
-  /** Over-cap terms stay in the index as DF-TOMBSTONES: the true df
-    * with an EMPTY posting list (`slice(postings, 1, 0)` — an empty
-    * array of the right type). Dropping the row entirely (the first
-    * cut) broke [[append]] two ways: a build-dropped term reappearing
-    * in an appended slice full-outer-merged against NOTHING, so its
-    * df restarted at the slice's count (near-maximal idf over an
-    * incomplete posting list — silently wrong rankings), and a
-    * touched bucket whose merged rows were ALL filtered wrote zero
-    * rows, which dynamic partition overwrite interprets as "leave the
-    * old directory alone" — stale over-cap postings kept serving.
-    * With tombstones a term row never disappears, so df accumulates
-    * exactly and every touched bucket always rewrites. */
-  private def applyCap(rows: DataFrame, maxDf: Int): DataFrame =
-    if (maxDf <= 0) rows
-    else rows.withColumn("postings",
-      when(col("df") > maxDf, slice(col("postings"), 1, 0))
-        .otherwise(col("postings")))
-
   /** Build the index from (doc_id, text) docs. `maxDf > 0` tombstones
     * terms in more than `maxDf` documents (true df kept, postings
     * emptied — the classic stop-list cap; their idf ≈ 0 contribution
-    * is the trade). The cap is RECORDED in stats and reapplied by
-    * [[append]], so the two paths cannot diverge. */
+    * is the trade). Such a df-tombstone keeps the term's row, so its
+    * idf stays exact. The cap is recorded in stats; [[upsert]] refuses
+    * a capped index. */
   def build(docs: DataFrame, root: String, maxDf: Int = 0,
       numBuckets: Int = Buckets): Unit = {
     require(numBuckets >= 1 && numBuckets <= 65536,
       s"numBuckets must be in [1, 65536], got $numBuckets")
     val spark = docs.sparkSession
-    // marker DOWN first: a rebuild over an existing root must not keep
-    // serving isBuilt==true while the postings directory is mid-
-    // overwrite (append's discipline, applied here too)
-    val mp = new Path(root, Marker)
-    val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(mp, false)
-    val kept = applyCap(postingRows(docs), maxDf)
-      .withColumn("tbucket", tbucketOf(col("term"), numBuckets))
-    kept.write.partitionBy("tbucket").mode("overwrite")
-      .parquet(s"$root/postings")
-    // the schema files make an EMPTY index (or an empty probe of a
-    // bucketless read) readable: partitioned writes of zero rows emit
-    // no part files, and a schemaless parquet read of that throws
-    kept.limit(0).coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/schema")
-    val fwd = fwdRows(docs, numBuckets)
-    fwd.write.partitionBy("dbucket").mode("overwrite")
-      .parquet(s"$root/fwd")
-    fwd.limit(0).coalesce(1).write.mode("overwrite")
-      .parquet(s"$root/fwd_schema")
-    // stats aggregate off the (small, just-written) forward index — the
-    // same (n_docs, sum_dl) a direct doc scan would produce, without a
-    // third corpus tokenize
-    readFwd(spark, root)
-      .agg(count(lit(1)).cast("long").as("n_docs"),
-        sum(col("dl")).cast("long").as("sum_dl"),
-        (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
-      .withColumn("max_df", lit(maxDf))
-      .withColumn("n_buckets", lit(numBuckets))
-      .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
-    writeMarker(spark, root)
+    AnnIndex.commit(spark, root, Marker) {
+      val rows = postingRows(docs)
+      val kept = (if (maxDf <= 0) rows
+        else rows.withColumn("postings", // slice(…, 1, 0): a typed empty array
+          when(col("df") > maxDf, slice(col("postings"), 1, 0))
+            .otherwise(col("postings"))))
+        .withColumn("tbucket", tbucketOf(col("term"), numBuckets))
+      kept.write.partitionBy("tbucket").mode("overwrite")
+        .parquet(s"$root/postings")
+      // the schema files make an EMPTY index (or an empty probe of a
+      // bucketless read) readable: partitioned writes of zero rows emit
+      // no part files, and a schemaless parquet read of that throws
+      kept.limit(0).coalesce(1).write.mode("overwrite")
+        .parquet(s"$root/schema")
+      val fwd = fwdRows(docs, numBuckets)
+      fwd.write.partitionBy("dbucket").mode("overwrite")
+        .parquet(s"$root/fwd")
+      fwd.limit(0).coalesce(1).write.mode("overwrite")
+        .parquet(s"$root/fwd_schema")
+      // stats aggregate off the (small, just-written) forward index — the
+      // same (n_docs, sum_dl) a direct doc scan would produce, without a
+      // third corpus tokenize
+      readFwd(spark, root)
+        .agg(count(lit(1)).cast("long").as("n_docs"),
+          sum(col("dl")).cast("long").as("sum_dl"),
+          (sum(col("dl")).cast("double") / count(lit(1))).as("avgdl"))
+        .withColumn("max_df", lit(maxDf))
+        .withColumn("n_buckets", lit(numBuckets))
+        .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
+    }
   }
 
   /** The postings table read with the recorded schema — works even
@@ -190,128 +167,15 @@ object TextIndex {
     spark.read.schema(spark.read.parquet(s"$root/fwd_schema").schema)
       .parquet(s"$root/fwd")
 
-  /** append/upsert need the v3 forward-index layout; an index root
+  /** upsert needs the v3 forward-index layout; an index root
     * persisted by pre-v3 code has the commit marker but no `fwd/`, and
     * without this check the failure is a raw path-does-not-exist from
     * deep inside the merge instead of a designed error. */
-  private def requireV3Layout(spark: SparkSession, root: String, op: String): Unit = {
+  private def requireV3Layout(spark: SparkSession, root: String): Unit = {
     val p = new Path(s"$root/fwd_schema")
     val ok = p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
-    require(ok, s"$op against index $root built by a pre-v$AlgoVersion " +
+    require(ok, s"upsert against index $root built by a pre-v$AlgoVersion " +
       "layout (no forward index) — delete the root and rebuild")
-  }
-
-  /** The full-outer posting merge shared by [[append]] and [[upsert]]:
-    * dfs add (each side's df is exact over its own posting list and the
-    * lists are disjoint by contract), a one-sided term passes its list
-    * through, a both-sided term concatenates and re-sorts. Extracted so
-    * the spec'd "incremental == rebuild bit-for-bit" invariant has ONE
-    * implementation to hold. */
-  private def mergePostings(old: DataFrame, fresh: DataFrame, n: Int): DataFrame =
-    old.as("o")
-      .join(fresh.as("n"), Seq("term"), "full_outer")
-      .select(col("term"),
-        (coalesce(col("o.df"), lit(0L)) + coalesce(col("n.df"), lit(0L)))
-          .as("df"),
-        when(col("o.postings").isNull, col("n.postings"))
-          .when(col("n.postings").isNull, col("o.postings"))
-          .otherwise(sort_array(concat(col("o.postings"), col("n.postings"))))
-          .as("postings"))
-      .withColumn("tbucket", tbucketOf(col("term"), n))
-
-  /** Append NEW documents to a built index without touching unrelated
-    * buckets: the slice's posting rows full-outer-merge with the
-    * existing rows of exactly the term buckets the slice's terms hash
-    * into (posting lists concatenate and re-sort; dfs add — exact
-    * because appended doc_ids must be NEW, the post-dedup ingestion
-    * contract of the incremental family), and only those bucket
-    * directories rewrite (dynamic partition overwrite). Spec'd:
-    * append-then-probe == rebuild-over-union, bit-for-bit including
-    * avgdl (dl sums are exact longs).
-    *
-    * Concurrency: runs under the same cross-process build lock; the
-    * commit marker comes down first and returns last, so a concurrent
-    * probe STARTED during the rewrite fails fast ("no text index")
-    * instead of reading a half-rewritten bucket slice. Best-effort,
-    * not a guarantee: the probe's marker check and its bucket read are
-    * not atomic, so a probe that passed the check just before the
-    * marker drops can still observe the rewrite — true isolation
-    * needs a versioned snapshot path, out of scope for this
-    * single-writer ingest contract. The build-time `maxDf` (recorded in
-    * stats) is reapplied to the merged dfs — a term crossing the cap
-    * through the append becomes a df-tombstone, exactly as a rebuild
-    * over the union would tombstone it.
-    *
-    * Durability: the merged rows are STAGED to disk before the
-    * postings directory is overwritten. A localCheckpoint pin is not
-    * a safe barrier here on a real cluster — checkpoint blocks live
-    * in executor storage, and an executor lost mid-overwrite would
-    * recompute its partitions FROM LINEAGE, re-reading the
-    * half-rewritten directory and committing corrupted rows. The
-    * staging write makes the overwrite's input durable and
-    * lineage-free. */
-  def append(newDocs: DataFrame, root: String): Unit = {
-    val spark = newDocs.sparkSession
-    AnnIndex.withBuildLock(spark, root) {
-      require(isBuilt(spark, root),
-        s"append against unbuilt index $root (run ensure/build first)")
-      requireV3Layout(spark, root, "append")
-      val oldStats = spark.read.parquet(s"$root/stats").head()
-      val maxDf = oldStats.getAs[Int]("max_df")
-      val nb = bucketsOf(oldStats)
-      val newRows = postingRows(newDocs)
-        .withColumn("tbucket", tbucketOf(col("term"), nb))
-        .localCheckpoint(true)
-      val touched = newRows.select("tbucket").distinct()
-        .collect().map(_.getInt(0))
-      // empty slice: nothing to merge, count, or rewrite
-      if (touched.nonEmpty) {
-      val existing = readPostings(spark, root)
-        .filter(col("tbucket").isin(touched.map(Integer.valueOf): _*))
-      val merged = mergePostings(existing, newRows, nb)
-      val staging = s"$root/.staging-append"
-      applyCap(merged, maxDf)
-        .write.mode("overwrite").parquet(staging)
-      // forward index: the appended docs' rows join the touched
-      // dbuckets (appended ids are NEW, so merge = old bucket rows +
-      // new rows), staged through the same discipline
-      val newFwd = fwdRows(newDocs, nb).localCheckpoint(true)
-      val touchedD = newFwd.select("dbucket").distinct()
-        .collect().map(_.getInt(0))
-      val fwdStaging = s"$root/.staging-append-fwd"
-      readFwd(spark, root)
-        .filter(col("dbucket").isin(touchedD.map(Integer.valueOf): _*))
-        .select("doc_id", "dl", "terms", "dbucket")
-        .write.mode("overwrite").parquet(fwdStaging)
-      newFwd.select("doc_id", "dl", "terms", "dbucket")
-        .write.mode("append").parquet(fwdStaging)
-      val delta = newFwd
-        .agg(count(lit(1)).cast("long").as("n"),
-          sum(col("dl")).cast("long").as("s")).head()
-      val (n2, s2) = (oldStats.getAs[Long]("n_docs") + delta.getAs[Long]("n"),
-        oldStats.getAs[Long]("sum_dl") + delta.getAs[Long]("s"))
-      // marker down: probes fail fast for the duration of the rewrite
-      val mp = new Path(root, Marker)
-      val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(mp, false)
-      spark.read.parquet(staging)
-        .write.partitionBy("tbucket").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$root/postings")
-      spark.read.parquet(fwdStaging)
-        .write.partitionBy("dbucket").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$root/fwd")
-      import spark.implicits._
-      Seq((n2, s2, s2.toDouble / n2)).toDF("n_docs", "sum_dl", "avgdl")
-        .withColumn("max_df", lit(maxDf))
-        .withColumn("n_buckets", lit(nb))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
-      writeMarker(spark, root)
-      fs.delete(new Path(staging), true)
-      fs.delete(new Path(fwdStaging), true)
-      }
-    }
   }
 
   /** UPSERT a batch against a built index: each input row REPLACES the
@@ -319,8 +183,8 @@ object TextIndex {
     * NULL `text` is a TOMBSTONE — the document is deleted. The
     * reference's KTable upsert/tombstone semantics
     * (covid19-stats Covid19Stats.java's latest-per-key tables) applied
-    * to the retrieval index, closing the ingest loop append() alone
-    * cannot: real feeds re-send and retract documents.
+    * to the retrieval index: real feeds re-send and retract documents,
+    * and a replayed batch converges to the same index.
     *
     * Mechanics: the forward index answers "which term rows mention the
     * upserted ids" (bucket-pruned on dbucket), so retraction touches
@@ -338,11 +202,16 @@ object TextIndex {
     * Requires an UNCAPPED index (maxDf == 0): a df-tombstoned term has
     * no posting list to delete from, so deletions that bring its df
     * back under the cap could not recover the postings a rebuild would
-    * have — upsert == rebuild would silently break. The cap is a
-    * stop-list for append-only corpora; mutable corpora rely on idf.
+    * have — upsert == rebuild would silently break. A capped index is
+    * rebuilt, never upserted; mutable corpora rely on idf.
     *
     * The batch must be pre-collapsed: one row per doc_id (last-wins
     * collapsing is the caller's contract, checked here).
+    *
+    * The rewritten buckets are STAGED to disk before the commit
+    * ([[AnnIndex.commit]]) overwrites them: a localCheckpoint pin lives
+    * in executor storage, and an executor lost mid-overwrite would
+    * recompute from the half-rewritten directory.
     *
     * Spec'd: upsert-then-probe == rebuild-over-current-set bit-for-bit
     * including stats and the forward index, for mixes of replace /
@@ -352,7 +221,7 @@ object TextIndex {
     AnnIndex.withBuildLock(spark, root) {
       require(isBuilt(spark, root),
         s"upsert against unbuilt index $root (run ensure/build first)")
-      requireV3Layout(spark, root, "upsert")
+      requireV3Layout(spark, root)
       val oldStats = spark.read.parquet(s"$root/stats").head()
       val maxDf = oldStats.getAs[Int]("max_df")
       val nb = bucketsOf(oldStats)
@@ -426,7 +295,18 @@ object TextIndex {
           .groupBy("term")
           .agg(count(lit(1)).cast("long").as("df"),
             sort_array(collect_list(col("p"))).as("postings"))
-        val merged = mergePostings(stripped, newRows, nb)
+        // dfs add: the stripped lists hold no upserted id, the new
+        // lists only upserted ids
+        val merged = stripped.as("o")
+          .join(newRows.as("n"), Seq("term"), "full_outer")
+          .select(col("term"),
+            (coalesce(col("o.df"), lit(0L)) + coalesce(col("n.df"), lit(0L)))
+              .as("df"),
+            when(col("o.postings").isNull, col("n.postings"))
+              .when(col("n.postings").isNull, col("o.postings"))
+              .otherwise(sort_array(concat(col("o.postings"), col("n.postings"))))
+              .as("postings"))
+          .withColumn("tbucket", tbucketOf(col("term"), nb))
         // two writes, not a union: pass and merged share `existing`'s
         // lineage, the unionByName constraint-rewrite trap
         pass.select("term", "df", "postings", "tbucket")
@@ -452,47 +332,46 @@ object TextIndex {
       val s2 = (if (oldStats.isNullAt(oldStats.fieldIndex("sum_dl"))) 0L
         else oldStats.getAs[Long]("sum_dl")) -
         oldAgg.getAs[Long]("s") + newAgg.getAs[Long]("s")
-      // marker down: probes fail fast for the duration of the rewrite
-      val mp = new Path(root, Marker)
-      val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.delete(mp, false)
-      if (touchedT.nonEmpty) {
-        // read staging with the RECORDED schema: a delete-heavy batch
-        // can stage zero rows (overwrite of an empty frame emits no
-        // part files), and a schemaless read of that throws
-        val staged = spark.read
-          .schema(spark.read.parquet(s"$root/schema").schema)
-          .parquet(staging)
-        val present = staged.select("tbucket").distinct()
+      val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
+      // probes fail fast ("no text index") while the rewrite runs
+      AnnIndex.commit(spark, root, Marker) {
+        if (touchedT.nonEmpty) {
+          // read staging with the RECORDED schema: a delete-heavy batch
+          // can stage zero rows (overwrite of an empty frame emits no
+          // part files), and a schemaless read of that throws
+          val staged = spark.read
+            .schema(spark.read.parquet(s"$root/schema").schema)
+            .parquet(staging)
+          val present = staged.select("tbucket").distinct()
+            .collect().map(_.getInt(0)).toSet
+          staged.write.partitionBy("tbucket").mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .parquet(s"$root/postings")
+          // a touched bucket with zero surviving rows: dynamic overwrite
+          // left its old directory — delete it, a rebuild would not have it
+          (touchedT.toSet -- present).foreach { b =>
+            fs.delete(new Path(s"$root/postings/tbucket=$b"), true) }
+        }
+        val stagedFwd = spark.read
+          .schema(spark.read.parquet(s"$root/fwd_schema").schema)
+          .parquet(fwdStaging)
+        val presentD = stagedFwd.select("dbucket").distinct()
           .collect().map(_.getInt(0)).toSet
-        staged.write.partitionBy("tbucket").mode("overwrite")
+        stagedFwd.write.partitionBy("dbucket").mode("overwrite")
           .option("partitionOverwriteMode", "dynamic")
-          .parquet(s"$root/postings")
-        // a touched bucket with zero surviving rows: dynamic overwrite
-        // left its old directory — delete it, a rebuild would not have it
-        (touchedT.toSet -- present).foreach { b =>
-          fs.delete(new Path(s"$root/postings/tbucket=$b"), true) }
+          .parquet(s"$root/fwd")
+        (touchedD.toSet -- presentD).foreach { b =>
+          fs.delete(new Path(s"$root/fwd/dbucket=$b"), true) }
+        import spark.implicits._
+        // an emptied corpus writes NULL sum_dl/avgdl, exactly as a
+        // rebuild's aggregate over zero docs would
+        Seq((n2, if (n2 == 0) None else Some(s2),
+          if (n2 == 0) None else Some(s2.toDouble / n2)))
+          .toDF("n_docs", "sum_dl", "avgdl")
+          .withColumn("max_df", lit(maxDf))
+          .withColumn("n_buckets", lit(nb))
+          .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
       }
-      val stagedFwd = spark.read
-        .schema(spark.read.parquet(s"$root/fwd_schema").schema)
-        .parquet(fwdStaging)
-      val presentD = stagedFwd.select("dbucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-      stagedFwd.write.partitionBy("dbucket").mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .parquet(s"$root/fwd")
-      (touchedD.toSet -- presentD).foreach { b =>
-        fs.delete(new Path(s"$root/fwd/dbucket=$b"), true) }
-      import spark.implicits._
-      // an emptied corpus writes NULL sum_dl/avgdl, exactly as a
-      // rebuild's aggregate over zero docs would
-      Seq((n2, if (n2 == 0) None else Some(s2),
-        if (n2 == 0) None else Some(s2.toDouble / n2)))
-        .toDF("n_docs", "sum_dl", "avgdl")
-        .withColumn("max_df", lit(maxDf))
-        .withColumn("n_buckets", lit(nb))
-        .coalesce(1).write.mode("overwrite").parquet(s"$root/stats")
-      writeMarker(spark, root)
       fs.delete(new Path(staging), true)
       fs.delete(new Path(fwdStaging), true)
     }
@@ -533,7 +412,7 @@ object TextIndex {
     * shared core of [[bm25]] and [[bm25Micros]]. */
   private def termScores(spark: SparkSession, root: String,
       queries: DataFrame, k1: Double, b: Double): DataFrame = {
-    // fail-fast BEFORE touching stats: an unbuilt root (or an append's
+    // fail-fast BEFORE touching stats: an unbuilt root (or an upsert's
     // marker-down rewrite window) must surface as the designed error,
     // not a raw path-does-not-exist from the stats read
     require(isBuilt(spark, root), s"no text index at $root (run ensure first)")

@@ -1378,9 +1378,9 @@ object LlmQueries {
     * candidate generation + exact integer-cosine verify), the
     * deterministic split assignment projected onto both pair endpoints
     * (a pure function of the id — no corpus-sized join), keep pairs
-    * straddling splits. Production runs the identical audit over
-    * `Similarity.semdedupSplitLeaks` on the k-means clusters
-    * (spec-checked — k-means isn't oracle-portable). */
+    * straddling splits. The sign-LSH family stands in for k-means
+    * clusters here because it is hash-oracled; k-means isn't
+    * oracle-portable. */
   val embeddingSplitLeakage: Q = {
     val planes = V.portablePlanes(16, 64)
     val vals = planes.zipWithIndex

@@ -138,10 +138,15 @@ object KeyedStore {
       numBuckets: Int = DefaultBuckets): Unit = {
     val spark = changed.sparkSession
     if (!exists(spark, basePath)) {
+      // marker first: if its write throws, no table exists yet and the
+      // replay creates again with the same count. Dynamic overwrite
+      // keeps the marker; a plain overwrite clears the whole base path.
+      writeBucketMeta(spark, basePath, numBuckets)
       val ch = bucketed(changed, keyCols, numBuckets).localCheckpoint(eager = true)
       ch.repartition(col(BucketCol))
-        .write.partitionBy(BucketCol).mode("overwrite").parquet(basePath)
-      writeBucketMeta(spark, basePath, numBuckets)
+        .write.partitionBy(BucketCol)
+        .option("partitionOverwriteMode", "dynamic")
+        .mode("overwrite").parquet(basePath)
     } else {
       val t = touched(changed, keyCols, basePath)
       // null-safe key equality: null-keyed groups upsert like any other

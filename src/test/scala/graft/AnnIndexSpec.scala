@@ -71,61 +71,6 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnIndex.isBuilt(spark, root))
   }
 
-  test("append assigns with the existing model, equals fixed-model rebuild-over-union, rewrites nothing") {
-    val all = corpus
-    val first = all.filter(col("vec_id") < 400)
-    val slice = all.filter(col("vec_id") >= 400)
-    val root = tmp()
-    AnnIndex.build(first, root, kClusters = 8, iters = 2)
-
-    // snapshot every data file before the append
-    def files(sub: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      walk(new java.io.File(s"$root/$sub")).filter(_.getName.endsWith(".parquet"))
-        .map(f => f.getAbsolutePath -> (f.length(), f.lastModified())).toMap
-    }
-    val ivfBefore = files("ivf"); val codesBefore = files("codes")
-
-    AnnIndex.append(slice, root)
-
-    // append never rewrites: every pre-append file survives byte- and
-    // mtime-identical; the slice arrived purely as NEW files
-    val ivfAfter = files("ivf"); val codesAfter = files("codes")
-    assert(ivfBefore.forall { case (p, s) => ivfAfter.get(p).contains(s) },
-      "append rewrote existing ivf files")
-    assert(codesBefore.forall { case (p, s) => codesAfter.get(p).contains(s) },
-      "append rewrote existing codes files")
-    assert(ivfAfter.size > ivfBefore.size)
-
-    // contents == rebuild-over-union under the FIXED original model:
-    // same centroids, same codebook, every row (old and new) assigned
-    // and encoded as one pass over the union would have
-    val h = AnnIndex.load(spark, root)
-    val unionAssigned = Similarity.assignToCentroids(all, h.centroids)
-    def asn(df: DataFrame) = df.select("vec_id", "cluster").collect()
-      .map(r => r.getLong(0) -> r.getInt(1)).toMap
-    assert(asn(h.indexed) == asn(unionAssigned))
-    def cds(df: DataFrame) = df.select("vec_id", "code").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Int](1)).toMap
-    assert(cds(h.encoded) ==
-      cds(Similarity.pqEncode(unionAssigned, h.codebook)))
-
-    // and the probe path sees the appended rows: append-then-probe ==
-    // probe over the fixed-model union index
-    val queries = all.filter(col("vec_id") < 10)
-    assert(
-      topkRows(Similarity.annIvfTopK(h.indexed, h.centroids, queries, 5, 4)) ==
-        topkRows(Similarity.annIvfTopK(unionAssigned, h.centroids, queries, 5, 4)))
-    assert(
-      topkRows(Similarity.annIvfPqTopKEncoded(h.encoded, h.centroids,
-        queries, 5, 4, h.codebook)) ==
-        topkRows(Similarity.annIvfPqTopKEncoded(
-          Similarity.pqEncode(unionAssigned, h.codebook)
-            .select("vec_id", "cluster", "code"),
-          h.centroids, queries, 5, 4, h.codebook)))
-  }
-
   test("concurrent ensure() calls build exactly once (lock file serializes builders)") {
     val root = tmp()
     val c = corpus.filter(col("vec_id") < 100).localCheckpoint(true)
@@ -150,50 +95,6 @@ class AnnIndexSpec extends SparkSpec {
       AnnIndex.ensure(c, root, kClusters = 4, iters = 1)
       assert(builds.get() == 1)
     } finally AnnIndex.buildObserver = _ => ()
-  }
-
-  test("the production loop composes: incremental dedup gates what index append admits") {
-    // stream batch -> IncrementalEmbeddingNearDedup (novel survivors
-    // only) -> AnnIndex.append -> probe: the full ingest loop a
-    // 100 TB embedding pipeline runs per batch. Near-dups must never
-    // reach the index; appended novelty must be immediately probe-able.
-    import spark.implicits._
-    import java.sql.Timestamp
-    val t1 = Timestamp.valueOf("2020-04-08 00:00:00")
-    val store = Files.createTempDirectory("annloop").toFile.getAbsolutePath
-    val root = tmp()
-    def vec(id: Long): Seq[Float] =
-      graft.sources.Tables.load(spark, sf, "embeddings")
-        .filter(col("vec_id") === id).select("embedding")
-        .collect().head.getSeq[Float](0)
-
-    // batch 1 seeds store and index (all four vectors novel)
-    val b1 = Seq((0L, vec(0), t1), (1L, vec(1), t1), (2L, vec(2), t1),
-      (3L, vec(3), t1)).toDF("doc_id", "vec", "ts")
-    val n1 = graft.streaming.IncrementalEmbeddingNearDedup
-      .dedupBatch(b1, "doc_id", "vec", "ts", store)
-    AnnIndex.build(Similarity.quantize(n1, "vec", "doc_id"), root,
-      kClusters = 2, iters = 2, m = 8, pqK = 4)
-
-    // batch 2: a near-copy of vector 0 plus one genuinely new vector
-    val nudged = (vec(0).head + 0.001f) +: vec(0).tail
-    val b2 = Seq((10L, nudged, t1), (11L, vec(5), t1)).toDF("doc_id", "vec", "ts")
-    val n2 = graft.streaming.IncrementalEmbeddingNearDedup
-      .dedupBatch(b2, "doc_id", "vec", "ts", store)
-    assert(n2.select("doc_id").collect().map(_.getLong(0)).toSeq == Seq(11L))
-    AnnIndex.append(Similarity.quantize(n2, "vec", "doc_id"), root)
-
-    val h = AnnIndex.load(spark, root)
-    val indexIds = h.indexed.select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(indexIds == Set(0L, 1L, 2L, 3L, 11L),
-      s"near-dup leaked into (or novelty missing from) the index: $indexIds")
-    // the appended vector answers probes: a fresh query carrying its
-    // embedding finds 11 as nearest (nProbe = all clusters: exhaustive)
-    val probe = Similarity.quantize(
-      Seq((99L, vec(5))).toDF("vec_id", "embedding"), "embedding", "vec_id")
-    val top = Similarity.annIvfTopK(h.indexed, h.centroids, probe, 1, 2)
-      .select("neighbor_id").collect().map(_.getLong(0)).toSeq
-    assert(top == Seq(11L), s"appended vector not probe-able: $top")
   }
 
   test("a dead holder's stale lock is broken; a live holder's heartbeat keeps it held") {
@@ -248,33 +149,26 @@ class AnnIndexSpec extends SparkSpec {
       assert(h.indexed.count() == 64)
       assert(secs < 60.0,
         f"ensure() on a built index took $secs%.1f s behind an orphan " +
-          "lock — the generation-bracketed fast path is not lock-free")
+          "lock — the built-index fast path is not lock-free")
     } finally fs.delete(lock, false)
   }
 
-  test("append rotates the commit generation (the fast path's straddle detector)") {
+  test("a rebuild that throws midway leaves the root unbuilt; ensure() rebuilds it") {
     val root = tmp()
-    val c = corpus.limit(64).localCheckpoint(true)
-    AnnIndex.ensure(c, root, kClusters = 2, iters = 1)
-    def gen(): String = {
-      val mp = new org.apache.hadoop.fs.Path(root, "_graft_ann_ready")
-      val fs = mp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val in = fs.open(mp)
-      try {
-        val buf = new Array[Byte](64)
-        val n = in.read(buf)
-        new String(buf, 0, math.max(n, 0), "UTF-8")
-      } finally in.close()
+    val c = corpus
+    AnnIndex.build(c.filter(col("vec_id") < 100), root, kClusters = 4, iters = 1)
+    // m = 7 does not divide the 64 dims: pqTrain's require throws after
+    // ivf/ and centroids/ were already rewritten over the full corpus
+    val e = intercept[IllegalArgumentException] {
+      AnnIndex.build(c, root, kClusters = 4, iters = 1, m = 7)
     }
-    val g1 = gen()
-    assert(g1.nonEmpty, "commit marker carries no generation token")
-    AnnIndex.append(
-      corpus.filter(col("vec_id") >= 64 && col("vec_id") < 80)
-        .withColumn("vec_id", col("vec_id") + 10000), root)
-    val g2 = gen()
-    assert(g2.nonEmpty && g2 != g1,
-      "append recommitted under the SAME generation — a concurrent " +
-        "reader could not detect the straddle")
+    assert(e.getMessage.contains("not divisible"), e.getMessage)
+    assert(!AnnIndex.isBuilt(spark, root),
+      "a failed rebuild left the old marker over half-rewritten artifacts")
+    val h = AnnIndex.ensure(c, root, kClusters = 4, iters = 1)
+    val n = c.count()
+    assert(h.indexed.count() == n)
+    assert(h.encoded.count() == n)
   }
 
   test("source fingerprint sees paths, not leaf names: compensating subdir swaps differ") {

@@ -136,12 +136,21 @@ class KeyedStoreSpec extends SparkSpec {
     // buckets without any error
     val conf = spark.sparkContext.hadoopConfiguration
     conf.set("fs.failrename.impl", classOf[FailingMarkerRenameFs].getName)
+    val local = tmp("kstore-rename")
+    val batch = Seq(("a", 1L), ("b", 2L)).toDF("k", "n")
     try {
-      val base = "failrename://" + tmp("kstore-rename")
       val e = intercept[java.io.IOException](KeyedStore.upsert(
-        Seq(("a", 1L), ("b", 2L)).toDF("k", "n"), Seq("k"), base, numBuckets = 3))
+        batch, Seq("k"), "failrename://" + local, numBuckets = 3))
       assert(e.getMessage.contains("_graft_buckets"), e.getMessage)
     } finally conf.unset("fs.failrename.impl")
+    // the replayed batch, on a file system whose rename works, must
+    // create the table with the requested layout, not take the
+    // existing-table branch and fall back to DefaultBuckets
+    KeyedStore.upsert(batch, Seq("k"), local, numBuckets = 3)
+    assert(KeyedStore.bucketCountOf(spark, local) == 3)
+    val got = KeyedStore.probe(Seq("a", "b").toDF("k"), Seq("k"), local)
+      .select("k", "n").as[(String, Long)].collect().toSet
+    assert(got == Set(("a", 1L), ("b", 2L)))
   }
 
   test("null-keyed rows upsert like any key (no per-batch duplication)") {

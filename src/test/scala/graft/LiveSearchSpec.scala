@@ -9,26 +9,25 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.operators.TextIndex
 import graft.serve.SearchEndpoint
 
-/** The reference's news-sources loop at retrieval grain — the r11
-  * verdict's task 5: a RUNNING stream appends document batches into
-  * the persisted text index ([[TextIndex.append]] inside foreachBatch)
-  * while [[SearchEndpoint]] serves `/search?q=` over the same root
-  * between micro-batches. The two r11 serving faces composed: the
+/** The reference's news-sources loop at retrieval grain: a RUNNING
+  * stream upserts document batches into the persisted text index
+  * ([[TextIndex.upsert]] inside foreachBatch) while [[SearchEndpoint]]
+  * serves `/search?q=` over the same root between micro-batches — the
   * continuously-materialized store (NewsUpdateServiceImpl's refresh
-  * loop) and the interactive query face, exercised TOGETHER where the
-  * prior specs covered append and serve separately.
+  * loop) and the interactive query face, exercised together.
   *
-  * Load-bearing assertions, after EACH of the two appends:
-  *  - the same query's hit set GROWS with the appended docs;
+  * Load-bearing assertions, after EACH of the two batches and after a
+  * replay of the second:
+  *  - the same query's hit set GROWS with the fed docs;
   *  - the served body equals BYTE-FOR-BYTE the answer of a FRESH index
-  *    rebuilt over everything fed so far (append ≡ rebuild at the
-  *    serving face — the index-upsert duality contract, read over
-  *    HTTP).
+  *    rebuilt over everything fed so far (upsert ≡ rebuild at the
+  *    serving face, read over HTTP);
+  *  - re-applying a batch's write, as a replayed micro-batch does,
+  *    leaves the served body unchanged (the batch step is idempotent).
   *
-  * Queries run BETWEEN batches: append holds the cross-process build
+  * Queries run BETWEEN batches: upsert holds the cross-process build
   * lock and drops the commit marker while rewriting, so a probe
-  * DURING the rewrite fails fast by design (TextIndex.append's
-  * documented single-writer contract) — the loop here is
+  * DURING the rewrite fails fast by design — the loop here is
   * materialize-then-serve, the reference's own cadence. */
 class LiveSearchSpec extends SparkSpec {
 
@@ -63,11 +62,10 @@ class LiveSearchSpec extends SparkSpec {
     val root = tmp("livesearch")
     TextIndex.build(docs(initial: _*), root)
 
+    val write = (b: DataFrame, _: Long) => TextIndex.upsert(b, root)
     val ms = MemoryStream[(Long, String)]
     val q = ms.toDF().toDF("doc_id", "text").writeStream
-      .foreachBatch { (b: DataFrame, _: Long) =>
-        TextIndex.append(b, root)
-      }
+      .foreachBatch(write)
       .start()
     val handle = SearchEndpoint.start(spark, root)
     try {
@@ -110,6 +108,13 @@ class LiveSearchSpec extends SparkSpec {
       assert(servedBody("epsilon") ==
         rebuildBody("epsilon", initial ++ batch1 ++ batch2),
         "untouched-term body diverged from the rebuild")
+
+      // batch 2's write once more, as a replayed micro-batch: the index
+      // must not count its documents twice
+      write(docs(batch2: _*), 1L)
+      assert(servedBody("zzuniq") ==
+        rebuildBody("zzuniq", initial ++ batch1 ++ batch2),
+        "served body diverged from the rebuild after replaying batch 2")
     } finally {
       handle.stop()
       q.stop()

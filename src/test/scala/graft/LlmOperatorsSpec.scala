@@ -697,7 +697,8 @@ class LlmOperatorsSpec extends SparkSpec {
     import graft.operators.Similarity
     val corpus = Similarity.quantize(
       graft.sources.Tables.load(spark, sf, "embeddings"), "embedding", "vec_id")
-    val out = Similarity.semdedup(corpus, k = 8, iters = 2, threshold = 0.4).cache()
+    val out = Similarity.semdedupAssigned(
+      Similarity.kmeansIndex(corpus, k = 8, iters = 2)._1, threshold = 0.4).cache()
     assert(out.count() == corpus.count(), "one row per vector")
     // exact within-cluster pairs >= threshold, computed independently
     val tagged = corpus.join(out.select("vec_id", "cluster", "keep"), "vec_id")
@@ -718,43 +719,6 @@ class LlmOperatorsSpec extends SparkSpec {
       .map(_.getLong(0)).filterNot(inPairs.contains)
     assert(unjustified.isEmpty, s"dropped without cause: ${unjustified.take(5).toSeq}")
     out.unpersist()
-  }
-
-  test("semdedupSplitLeaks flags a planted cross-split paraphrase, and only real straddlers") {
-    import spark.implicits._
-    import graft.operators.{Sampling, Similarity}
-    val base = graft.sources.Tables.load(spark, sf, "embeddings")
-    // find a source id and a fresh id that land in DIFFERENT splits
-    // (split is a pure function of the id, so this is just arithmetic)
-    def splitOf(id: Long): String =
-      Seq(id).toDF("id").select(Sampling.splitColumn(col("id"))).head().getString(0)
-    val srcId = 0L
-    val cloneId = (100000L to 100100L).find(splitOf(_) != splitOf(srcId)).get
-    val srcVec = base.filter(col("vec_id") === srcId)
-      .select("embedding").head().getSeq[Float](0)
-    val planted = base.select("vec_id", "embedding").unionAll(
-      Seq((cloneId, (srcVec.head + 0.001f) +: srcVec.tail))
-        .toDF("vec_id", "embedding"))
-    val assigned = Similarity.semdedup(
-      Similarity.quantize(planted, "embedding", "vec_id"),
-      k = 8, iters = 2, threshold = 0.95)
-    val leaks = Similarity.semdedupSplitLeaks(assigned).cache()
-    val leakRows = leaks.collect()
-      .map(r => r.getLong(0) -> r.getSeq[String](2).toSet).toMap
-    // the planted paraphrase group (canonical = min id = srcId) is
-    // flagged as straddling its two splits
-    assert(leakRows.contains(srcId),
-      s"planted cross-split near-dup not flagged: ${leakRows.keySet}")
-    assert(leakRows(srcId) == Set(splitOf(srcId), splitOf(cloneId)))
-    // and every flagged group REALLY straddles: recompute independently
-    val audit = assigned
-      .withColumn("split", Sampling.splitColumn(col("vec_id")))
-      .groupBy("canonical_id")
-      .agg(countDistinct(col("split")).as("ns"))
-      .filter(col("ns") > 1)
-      .collect().map(_.getLong(0)).toSet
-    assert(leakRows.keySet == audit)
-    leaks.unpersist()
   }
 
   test("PQ-ADC finds planted near-duplicates and zero-distance exact codes") {

@@ -93,29 +93,6 @@ class TextIndexSpec extends SparkSpec {
     assert(terms === Set("spark", "join"))
   }
 
-  test("append-then-probe equals rebuild-over-union, bit-for-bit") {
-    val half1 = docs.filter(col("doc_id") % 2 === 0)
-    val half2 = docs.filter(col("doc_id") % 2 =!= 0)
-    val appended = tmp("tidx-app")
-    TextIndex.build(half1, appended)
-    TextIndex.append(half2, appended)
-    val rebuilt = tmp("tidx-reb")
-    TextIndex.build(docs, rebuilt)
-    def rows(root: String) = spark.read.parquet(s"$root/postings")
-      .drop("tbucket").orderBy("term").collect().map(_.toString).toSeq
-    assert(rows(appended) === rows(rebuilt))
-    def stats(root: String) = spark.read.parquet(s"$root/stats")
-      .head().toString
-    assert(stats(appended) === stats(rebuilt))
-    assert(fwdOf(appended) === fwdOf(rebuilt))
-    // the served surfaces agree too: phrase hits are integer-exact
-    import spark.implicits._
-    val ph = Seq((0L, "spark join", 0L, "spark"), (0L, "spark join", 1L, "join"))
-      .toDF("phrase_id", "phrase", "idx", "term")
-    assert(TextIndex.phraseHits(spark, appended, ph).collect().map(_.toString).sorted
-      === TextIndex.phraseHits(spark, rebuilt, ph).collect().map(_.toString).sorted)
-  }
-
   test("bucket-count knob: layout honors it, content is bucket-invariant, append/upsert stay bit-exact") {
     // the 100 TB upsert-locality knob (ARCHITECTURE §4): more buckets =
     // finer rewrite granularity; results must not depend on it
@@ -142,14 +119,7 @@ class TextIndexSpec extends SparkSpec {
     def served(root: String) = TextIndex.bm25Micros(spark, root, queries)
       .collect().map(_.toString).sorted.toSeq
     assert(served(r64) === served(r16))
-    // append and upsert against the 64-bucket index == rebuild at 64
-    val half1 = docs.filter(col("doc_id") % 2 === 0)
-    val half2 = docs.filter(col("doc_id") % 2 =!= 0)
-    val app = tmp("tidx-b64app")
-    TextIndex.build(half1, app, numBuckets = 64)
-    TextIndex.append(half2, app)
-    assert(postingsOf(app) === postingsOf(r64))
-    assert(statsOf(app) === statsOf(r64))
+    // upsert against the 64-bucket index == rebuild at 64
     val up = tmp("tidx-b64up")
     TextIndex.build(docs, up, numBuckets = 64)
     import spark.implicits._
@@ -173,9 +143,8 @@ class TextIndexSpec extends SparkSpec {
 
   test("the text ingest loop composes: incremental dedup gates what index append admits") {
     // stream batch -> IncrementalDedup (novel survivors only) ->
-    // TextIndex.append -> serve: the text twin of the ANN ingest loop.
-    // Duplicates must never reach the index; appended novelty must be
-    // immediately servable through BM25 and phrase probes.
+    // TextIndex.upsert -> serve. Duplicates must never reach the index;
+    // upserted novelty must be immediately servable through BM25.
     import spark.implicits._
     import java.sql.Timestamp
     val t1 = Timestamp.valueOf("2020-04-08 00:00:00")
@@ -194,7 +163,7 @@ class TextIndexSpec extends SparkSpec {
     val n2 = graft.streaming.IncrementalDedup
       .dedupBatch(b2, "doc_id", "text", "ts", store)
     assert(n2.select("doc_id").collect().map(_.getLong(0)).toSeq === Seq(11L))
-    TextIndex.append(n2.select("doc_id", "text"), root)
+    TextIndex.upsert(n2.select("doc_id", "text"), root)
 
     // the dup never entered; the novelty serves immediately
     val post = spark.read.parquet(s"$root/postings")
@@ -206,7 +175,7 @@ class TextIndexSpec extends SparkSpec {
       Seq((99L, "vector"), (99L, "filter")).toDF("query_id", "term"))
       .orderBy(col("score").desc).select("doc_id")
       .collect().map(_.getLong(0)).toSeq
-    assert(hits === Seq(11L), s"appended doc not servable: $hits")
+    assert(hits === Seq(11L), s"upserted doc not servable: $hits")
   }
 
   test("upsert (replace + insert + delete) equals rebuild over the current set, bit-for-bit") {
@@ -364,9 +333,6 @@ class TextIndexSpec extends SparkSpec {
     fs.delete(new org.apache.hadoop.fs.Path(root, "fwd"), true)
     fs.delete(new org.apache.hadoop.fs.Path(root, "fwd_schema"), true)
     val batch = Seq((9000L, "fresh doc")).toDF("doc_id", "text")
-    val ea = intercept[IllegalArgumentException] { TextIndex.append(batch, root) }
-    assert(ea.getMessage.contains("pre-v3") && ea.getMessage.contains("rebuild"),
-      s"append on a v2 root must name the layout gap, got: ${ea.getMessage}")
     val eu = intercept[IllegalArgumentException] { TextIndex.upsert(batch, root) }
     assert(eu.getMessage.contains("pre-v3") && eu.getMessage.contains("rebuild"))
     // probes are unaffected: the v2 read path never touches fwd/
@@ -393,20 +359,5 @@ class TextIndexSpec extends SparkSpec {
     assert(rows.length === dfs.length)
     assert(rows.filter(_._1 > cap).forall(_._2 == 0))
     assert(rows.filter(_._1 <= cap).forall(_._2 > 0))
-
-    // the code-review scenario: a capped build + an append that pushes
-    // terms over the cap must equal a capped rebuild over the union —
-    // df accumulates (never restarts at the slice's count) and newly
-    // over-cap terms tombstone
-    val h1 = docs.filter(col("doc_id") % 2 === 0)
-    val h2 = docs.filter(col("doc_id") % 2 =!= 0)
-    val appended = tmp("tidx-cap-app")
-    TextIndex.build(h1, appended, maxDf = cap)
-    TextIndex.append(h2, appended)
-    val rebuilt = tmp("tidx-cap-reb")
-    TextIndex.build(docs, rebuilt, maxDf = cap)
-    def all(root: String) = spark.read.parquet(s"$root/postings")
-      .drop("tbucket").orderBy("term").collect().map(_.toString).toSeq
-    assert(all(appended) === all(rebuilt))
   }
 }
