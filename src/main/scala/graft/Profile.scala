@@ -1,14 +1,11 @@
 package graft
 
-import scala.collection.mutable
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
 /** Measurement aid (optimization rounds): runs the named queries once
-  * (noop sink, after one warmup) with a stage listener and prints a
-  * per-stage cost table — executor run time, shuffle read/write bytes,
-  * spill, task count — so the expensive stage of a slow query is
+  * (noop sink, after one warmup) and prints a per-stage cost table —
+  * executor run and CPU time, task count, shuffle read/write bytes,
+  * input, spill, output — so the expensive stage of a slow query is
   * identifiable without the Spark UI (disabled in this harness).
   *
   * Usage: runMain graft.Profile <sfDir> q01_x[,q02_y,...]
@@ -20,57 +17,25 @@ object Profile {
     val spark = GraftSession.configure(SparkSession.builder(),
       GraftSession.defaultCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-
-    case class St(name: String, ms: Long, cpuMs: Long, tasks: Int,
-        shRead: Long, shWrite: Long, input: Long, spill: Long,
-        fetchWaitMs: Long)
-    // appended from the listener-bus thread while the main thread only
-    // reads it AFTER waitUntilEmpty below — the synchronized block plus
-    // the drain is what makes that safe (ADVICE r14)
-    val stages = mutable.ArrayBuffer.empty[St]
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        val si = sc.stageInfo
-        val m = si.taskMetrics
-        stages.synchronized {
-          stages += St(si.name.takeWhile(_ != '\n').take(90),
-            m.executorRunTime, m.executorCpuTime / 1000000,
-            si.numTasks, m.shuffleReadMetrics.totalBytesRead,
-            m.shuffleWriteMetrics.bytesWritten, m.inputMetrics.bytesRead,
-            m.memoryBytesSpilled,
-            m.shuffleReadMetrics.fetchWaitTime)
-        }
-      }
-    }
+    val listener = Measure.listen(spark)
 
     names.foreach { name =>
       val fn = SparkEntry.queries(name)
-      def once(): Unit = {
-        fn(spark, sfDir).write.mode("overwrite").format("noop").save()
-        GraftSession.releaseCaches(spark)
+      Measure.timedNoop(spark)(fn(spark, sfDir)) // warmup
+      val wall = Measure.labelled(spark, name) {
+        Measure.timedNoop(spark)(fn(spark, sfDir))
       }
-      once() // warmup
-      stages.synchronized(stages.clear())
-      spark.sparkContext.addSparkListener(listener)
-      val t0 = System.nanoTime()
-      once()
-      val wall = (System.nanoTime() - t0) / 1e9
-      // drain the bus before detaching: tail StageCompleted events are
-      // posted asynchronously and would otherwise be missed (ADVICE
-      // r14; listenerBus.waitUntilEmpty is private[spark], so a short
-      // sleep is the accessible drain — this is a dev-only measurement
-      // tool, never in a query or bench path)
-      Thread.sleep(500)
-      spark.sparkContext.removeSparkListener(listener)
-      val snap = stages.synchronized(stages.toVector)
+      Measure.drain(spark)
+      val snap = listener.rows(name)
       println(f"== $name wall=$wall%.2fs stages=${snap.size} " +
-        f"sumRun=${snap.map(_.ms).sum / 1000.0}%.2fs " +
+        f"sumRun=${snap.map(_.runMs).sum / 1000.0}%.2fs " +
         f"sumCpu=${snap.map(_.cpuMs).sum / 1000.0}%.2fs")
-      snap.sortBy(-_.ms).take(14).foreach { s =>
-        println(f"   run=${s.ms / 1000.0}%6.2fs cpu=${s.cpuMs / 1000.0}%6.2fs " +
-          f"tasks=${s.tasks}%4d shR=${s.shRead / 1024}%8dK shW=${s.shWrite / 1024}%8dK " +
-          f"in=${s.input / 1024 / 1024}%5dM spill=${s.spill / 1024 / 1024}%4dM " +
-          f"fw=${s.fetchWaitMs}%5d  ${s.name}")
+      snap.sortBy(-_.runMs).take(14).foreach { s =>
+        println(f"   run=${s.runMs / 1000.0}%6.2fs cpu=${s.cpuMs / 1000.0}%6.2fs " +
+          f"tasks=${s.tasks}%4d shR=${s.shuffleRead / 1024}%8dK " +
+          f"shW=${s.shuffleWrite / 1024}%8dK in=${s.input / 1024 / 1024}%5dM " +
+          f"spill=${(s.spillMem + s.spillDisk) / 1024 / 1024}%4dM " +
+          f"out=${s.output / 1024 / 1024}%5dM  ${s.name}")
       }
     }
     spark.stop()

@@ -1,13 +1,13 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale stress harness (dev-run, not part of the driver contract):
   * amplifies the sf corpus N× with a controlled duplicate structure,
-  * then drives the flagship dedup/decontamination pipelines while a
-  * SparkListener totals shuffle read/write bytes and spill per stage.
+  * then drives the flagship dedup/decontamination pipelines while
+  * [[Measure.StageListener]] totals shuffle read/write bytes and spill
+  * per harness stage.
   *
   * Purpose: the correctness gate proves the operators RIGHT at small
   * SF; this harness measures whether their cost curves stay LINEAR as
@@ -38,28 +38,13 @@ import org.apache.spark.sql.functions._
   */
 object Stress {
 
-  /** Per-stage task-metric totals, swapped by label between stages. */
-  final class MetricsListener extends SparkListener {
-    case class Tot(var shufRead: Long = 0L, var shufWrite: Long = 0L,
-      var spillMem: Long = 0L, var spillDisk: Long = 0L,
-      var outBytes: Long = 0L, var tasks: Long = 0L)
-    @volatile var label: String = "setup"
-    val totals = new scala.collection.concurrent.TrieMap[String, Tot]()
-    override def onTaskEnd(t: SparkListenerTaskEnd): Unit = {
-      val m = t.taskMetrics
-      if (m != null) {
-        val tot = totals.getOrElseUpdate(label, Tot())
-        tot.synchronized {
-          tot.shufRead += m.shuffleReadMetrics.totalBytesRead
-          tot.shufWrite += m.shuffleWriteMetrics.bytesWritten
-          tot.spillMem += m.memoryBytesSpilled
-          tot.spillDisk += m.diskBytesSpilled
-          tot.outBytes += m.outputMetrics.bytesWritten
-          tot.tasks += 1
-        }
-      }
-    }
-  }
+  /** The summed stage rows of one harness stage. */
+  final case class Tot(shufRead: Long, shufWrite: Long, spillMem: Long,
+      spillDisk: Long, outBytes: Long, tasks: Long)
+  def total(rows: Seq[Measure.StageRow]): Tot =
+    Tot(rows.map(_.shuffleRead).sum, rows.map(_.shuffleWrite).sum,
+      rows.map(_.spillMem).sum, rows.map(_.spillDisk).sum,
+      rows.map(_.output).sum, rows.map(_.tasks.toLong).sum)
 
   def amplified(spark: SparkSession, sfDir: String, n: Int): DataFrame = {
     val docs = graft.sources.Tables.load(spark, sfDir, "documents")
@@ -85,19 +70,31 @@ object Stress {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val n = sys.env.get("SPARK_GRAFT_AMPLIFY").map(_.toInt).getOrElse(20)
     val spark = GraftSession.local()
-    val listener = new MetricsListener
-    spark.sparkContext.addSparkListener(listener)
-
-    // materialize the amplified corpus once so every stage reads the
-    // same columnar files (as production would), not the generator
-    val root = s"${System.getProperty("java.io.tmpdir")}/graft_stress/" +
-      s"v2_${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}_x$n"
-    val marker = new java.io.File(s"$root/_done")
-    if (!marker.exists()) {
-      amplified(spark, sfDir, n).repartition(32)
-        .write.mode("overwrite").parquet(s"$root/documents")
-      marker.createNewFile()
+    val listener = Measure.listen(spark)
+    // jobs outside a measured stage (corpus builds, index seeds) count
+    // as setup in the closing grand total
+    spark.sparkContext.setLocalProperty(Measure.LabelProperty, "setup")
+    // a label's totals, read only after the bus has delivered its stages
+    def totals(label: String): Tot = {
+      Measure.drain(spark)
+      total(listener.rows(label))
     }
+
+    // the amplified corpus materializes once per (sf, N) so every stage
+    // reads the same columnar files (as production would), not the
+    // generator; returns its root
+    def corpusRoot(nAmp: Int): String = {
+      val r = s"${System.getProperty("java.io.tmpdir")}/graft_stress/" +
+        s"v2_${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}_x$nAmp"
+      val marker = new java.io.File(s"$r/_done")
+      if (!marker.exists()) {
+        amplified(spark, sfDir, nAmp).repartition(32)
+          .write.mode("overwrite").parquet(s"$r/documents")
+        marker.createNewFile()
+      }
+      r
+    }
+    val root = corpusRoot(n)
     val corpus = spark.read.parquet(s"$root/documents")
     val nDocs = corpus.count()
     System.err.println(s"[stress] corpus: $nDocs docs at $root")
@@ -106,11 +103,8 @@ object Stress {
     val only = sys.env.get("SPARK_GRAFT_STAGES")
       .map(_.split(",").map(_.trim).toSet)
     def stage(name: String)(df: => DataFrame): Unit = if (only.forall(_.contains(name))) {
-      listener.label = name
-      val t0 = System.nanoTime()
-      df.write.mode("overwrite").format("noop").save()
-      val sec = (System.nanoTime() - t0) / 1e9
-      val m = listener.totals(name)
+      val sec = Measure.labelled(spark, name)(Measure.timedNoop(spark)(df))
+      val m = totals(name)
       val json = f"""{"stage":"$name","sec":$sec%.2f,"docs":$nDocs,""" +
         f""""docs_per_sec":${nDocs / sec}%.0f,""" +
         s""""shuffle_read_b":${m.shufRead},"shuffle_write_b":${m.shufWrite},""" +
@@ -187,15 +181,14 @@ object Stress {
     }
     stage("vocab_coverage") {
       // q150's shape: one corpus-sized count, then vocab-sized prefix
-      // sums (two subtotal passes) — time and shuffle must be dominated
+      // sums (one subtotal pass) — time and shuffle must be dominated
       // by the count stage, flat per-doc as N grows
       val counts = corpus
         .select(explode(split(col("text"), " ")).as("term"))
         .groupBy("term").agg(count(lit(1)).as("cnt"))
-      val order = Seq(col("cnt").desc, col("term").asc)
-      graft.operators.Ranks.globalRunningSum(
-        graft.operators.Ranks.globalRunningSum(counts, order, col("cnt"), "cum"),
-        order, lit(1L), "rnk")
+      graft.operators.Ranks.globalRunningSums(counts,
+        Seq(col("cnt").desc, col("term").asc),
+        Seq(col("cnt") -> "cum", lit(1L) -> "rnk"))
         .select("cum", "rnk")
     }
     // the q259 contrast pair: distinct-token cardinality per source,
@@ -379,31 +372,22 @@ object Stress {
         import spark.implicits._
         val corpusN =
           if (nAmp == n) corpus
-          else {
-            val r = s"${System.getProperty("java.io.tmpdir")}/graft_stress/" +
-              s"v2_${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}_x$nAmp"
-            val m = new java.io.File(s"$r/_done")
-            if (!m.exists()) {
-              amplified(spark, sfDir, nAmp).repartition(32)
-                .write.mode("overwrite").parquet(s"$r/documents")
-              m.createNewFile()
-            }
-            spark.read.parquet(s"$r/documents")
-          }
+          else spark.read.parquet(s"${corpusRoot(nAmp)}/documents")
         val root = s"${System.getProperty("java.io.tmpdir")}/graft_stress/" +
           s"tidx_${sfDir.replaceAll("[^A-Za-z0-9._-]", "_")}_x${nAmp}_b$nb"
-        listener.label = s"${name}_build"
-        graft.operators.TextIndex.ensure(
-          corpusN.select("doc_id", "text"), root, maxDf = 0, numBuckets = nb)
-        listener.label = s"${name}_seed"
-        graft.operators.TextIndex.upsert(
-          (0 until 200).map(upsertDoc(_, 0)).toDF("doc_id", "text"), root)
-        listener.label = name
-        val t0 = System.nanoTime()
-        graft.operators.TextIndex.upsert(
-          (0 until 200).map(upsertDoc(_, 1)).toDF("doc_id", "text"), root)
-        val sec = (System.nanoTime() - t0) / 1e9
-        val m = listener.totals(name)
+        Measure.labelled(spark, s"${name}_build") {
+          graft.operators.TextIndex.ensure(
+            corpusN.select("doc_id", "text"), root, maxDf = 0, numBuckets = nb)
+        }
+        Measure.labelled(spark, s"${name}_seed") {
+          graft.operators.TextIndex.upsert(
+            (0 until 200).map(upsertDoc(_, 0)).toDF("doc_id", "text"), root)
+        }
+        val sec = Measure.labelled(spark, name)(Measure.timed(spark) {
+          graft.operators.TextIndex.upsert(
+            (0 until 200).map(upsertDoc(_, 1)).toDF("doc_id", "text"), root)
+        })
+        val m = totals(name)
         val idxBytes = {
           val p = new org.apache.hadoop.fs.Path(s"$root/postings")
           p.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -446,18 +430,18 @@ object Stress {
         val p = new org.apache.hadoop.fs.Path(root)
         val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
         fs.delete(p, true)
-        listener.label = s"${name}_build"
-        val base = spark.range(nRows.toLong).select(
-          col("id").as("k"), (col("id") * 7).as("total"), lit(0L).as("ver"))
-        graft.state.KeyedStore.upsert(base, Seq("k"), root, numBuckets = nb)
-        listener.label = name
-        val t0 = System.nanoTime()
-        val batch = spark.range(32).select(
-          (col("id") * (nRows / 32) + 5).as("k"),
-          (col("id") * 7 + 1).as("total"), lit(1L).as("ver"))
-        graft.state.KeyedStore.upsert(batch, Seq("k"), root)
-        val sec = (System.nanoTime() - t0) / 1e9
-        val m = listener.totals(name)
+        Measure.labelled(spark, s"${name}_build") {
+          val base = spark.range(nRows.toLong).select(
+            col("id").as("k"), (col("id") * 7).as("total"), lit(0L).as("ver"))
+          graft.state.KeyedStore.upsert(base, Seq("k"), root, numBuckets = nb)
+        }
+        val sec = Measure.labelled(spark, name)(Measure.timed(spark) {
+          val batch = spark.range(32).select(
+            (col("id") * (nRows / 32) + 5).as("k"),
+            (col("id") * 7 + 1).as("total"), lit(1L).as("ver"))
+          graft.state.KeyedStore.upsert(batch, Seq("k"), root)
+        })
+        val m = totals(name)
         val storeBytes = fs.getContentSummary(p).getLength
         println(f"""{"stage":"$name","sec":$sec%.2f,""" +
           s""""store_rows":$nRows,"n_buckets":$nb,""" +
@@ -496,19 +480,14 @@ object Stress {
     def rankStage(rows: Long, distinct: Long): Unit = {
       val name = s"rank_r${rows / 1000000}m_d$distinct"
       if (only.forall(_.contains(name))) {
-        listener.label = name
-        val t0 = System.nanoTime()
-        graft.queries.StatQueries.mannWhitneyReport(
-          spark.range(rows).select(
-            concat(lit("s"), pmod(col("id"), lit(20L)).cast("string"))
-              .as("source"),
-            pmod(xxhash64(col("id")), lit(distinct)).as("x")))
-          .write.mode("overwrite").format("noop").save()
-        val sec = (System.nanoTime() - t0) / 1e9
-        // the report pins its value table (localCheckpoint); release so
-        // the next point measures itself
-        GraftSession.releaseCaches(spark)
-        val m = listener.totals(name)
+        val sec = Measure.labelled(spark, name)(Measure.timedNoop(spark) {
+          graft.queries.StatQueries.mannWhitneyReport(
+            spark.range(rows).select(
+              concat(lit("s"), pmod(col("id"), lit(20L)).cast("string"))
+                .as("source"),
+              pmod(xxhash64(col("id")), lit(distinct)).as("x")))
+        })
+        val m = totals(name)
         println(f"""{"stage":"$name","sec":$sec%.2f,""" +
           s""""rows":$rows,"distinct":$distinct,""" +
           f""""rows_per_sec":${rows / sec}%.0f,""" +
@@ -582,19 +561,14 @@ object Stress {
             (lit(off) + pmod(xxhash64(col("id") + 777L), lit(w * hops)))
               .as("dst")))
         val seeds = spark.range(w).select(col("id"))
-        def run(label: String, mh: Int): Double = {
-          listener.label = label
-          val t0 = System.nanoTime()
-          graft.operators.Paths.boundedDistances(edges, seeds, maxHops = mh)
-            .groupBy("dist").agg(count(lit(1)).as("n"))
-            .write.mode("overwrite").format("noop").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          GraftSession.releaseCaches(spark)
-          sec
-        }
+        def run(label: String, mh: Int): Double =
+          Measure.labelled(spark, label)(Measure.timedNoop(spark) {
+            graft.operators.Paths.boundedDistances(edges, seeds, maxHops = mh)
+              .groupBy("dist").agg(count(lit(1)).as("n"))
+          })
         val sec2 = run(s"${name}_h2", 2)
         val sec = run(name, hops)
-        val m = listener.totals(name)
+        val m = totals(name)
         println(f"""{"stage":"$name","sec":$sec%.2f,"sec_h2":$sec2%.2f,""" +
           f""""sec_per_hop":${(sec - sec2) / (hops - 2)}%.3f,""" +
           s""""frontier":$w,"hops":$hops,"deg":$deg,""" +
@@ -638,19 +612,14 @@ object Stress {
         val edges = spark.range(nNodes * deg).select(
           pmod(xxhash64(col("id")), lit(nNodes)).as("src"),
           pmod(xxhash64(col("id") + 1234567L), lit(nNodes)).as("dst"))
-        def run(label: String, it: Int): Double = {
-          listener.label = label
-          val t0 = System.nanoTime()
-          graft.operators.Centrality.integerPageRank(edges, iters = it)
-            .agg(sum(col("pr")).as("s"))
-            .write.mode("overwrite").format("noop").save()
-          val sec = (System.nanoTime() - t0) / 1e9
-          GraftSession.releaseCaches(spark)
-          sec
-        }
+        def run(label: String, it: Int): Double =
+          Measure.labelled(spark, label)(Measure.timedNoop(spark) {
+            graft.operators.Centrality.integerPageRank(edges, iters = it)
+              .agg(sum(col("pr")).as("s"))
+          })
         val sec2 = run(s"${name}_i2", 2)
         val sec = run(name, iters)
-        val m = listener.totals(name)
+        val m = totals(name)
         println(f"""{"stage":"$name","sec":$sec%.2f,"sec_i2":$sec2%.2f,""" +
           f""""sec_per_iter":${(sec - sec2) / (iters - 2)}%.3f,""" +
           s""""nodes":$nNodes,"deg":$deg,"iters":$iters,""" +
@@ -700,11 +669,12 @@ object Stress {
         graft.operators.Multimodal.ensurePayloads(
           corpus.select("doc_id", "text"), s"$root/media"))
     }
-    val grand = listener.totals.values
+    Measure.drain(spark)
+    val grand = total(listener.rows)
     System.err.println(
-      s"[stress] total shuffle read ${grand.map(_.shufRead).sum / (1 << 20)} MiB, " +
-        s"write ${grand.map(_.shufWrite).sum / (1 << 20)} MiB, " +
-        s"spill ${grand.map(t => t.spillMem + t.spillDisk).sum / (1 << 20)} MiB")
+      s"[stress] total shuffle read ${grand.shufRead / (1 << 20)} MiB, " +
+        s"write ${grand.shufWrite / (1 << 20)} MiB, " +
+        s"spill ${(grand.spillMem + grand.spillDisk) / (1 << 20)} MiB")
     spark.stop()
   }
 }

@@ -264,10 +264,9 @@ object AuditQueries {
     val counts = t(s, dir, "documents")
       .select(explode(T.words(col("text"))).as("term"))
       .groupBy("term").agg(count(lit(1)).as("cnt"))
-    val order = Seq(col("cnt").desc, col("term").asc)
-    val curve = Ranks.globalRunningSum(
-      Ranks.globalRunningSum(counts, order, col("cnt"), "cum"),
-      order, lit(1L), "rnk")
+    val curve = Ranks.globalRunningSums(counts,
+      Seq(col("cnt").desc, col("term").asc),
+      Seq(col("cnt") -> "cum", lit(1L) -> "rnk"))
     val total = counts.agg(sum(col("cnt")).cast(LongType).as("total"))
     val thresholds = s.createDataFrame(
       java.util.Arrays.asList(Seq(50L, 90L, 95L, 99L).map(org.apache.spark.sql.Row(_)): _*),

@@ -2568,10 +2568,8 @@ object StatQueries {
           .as("g"))
     val h = f.groupBy("x")
       .agg(sum(col("g")).as("a"), sum(lit(1L) - col("g")).as("b"))
-    val cum = graft.operators.Ranks.globalRunningSum(
-      graft.operators.Ranks.globalRunningSum(
-        h, Seq(col("x")), col("a"), "ca"),
-      Seq(col("x")), col("b"), "cb")
+    val cum = graft.operators.Ranks.globalRunningSums(h, Seq(col("x")),
+        Seq(col("a") -> "ca", col("b") -> "cb"))
       .select(col("x"), (col("a") + col("b")).as("w"), col("ca"), col("cb"))
     val tot = h.agg(sum(col("a")).as("n"), sum(col("b")).as("m"))
     val gap = ((col("m").cast("double") * col("ca")
@@ -2704,10 +2702,8 @@ object StatQueries {
     val h = f.groupBy("x")
       .agg(sum(col("g")).as("a"), sum(lit(1L) - col("g")).as("b"))
       .localCheckpoint(true) // value grid; cumulatives + totals
-    val cum = graft.operators.Ranks.globalRunningSum(
-      graft.operators.Ranks.globalRunningSum(
-        h, Seq(col("x")), col("a"), "ca"),
-      Seq(col("x")), col("b"), "cb")
+    val cum = graft.operators.Ranks.globalRunningSums(h, Seq(col("x")),
+      Seq(col("a") -> "ca", col("b") -> "cb"))
     val tot = h.agg(sum(col("a")).as("n"), sum(col("b")).as("m"))
     val d = cum.crossJoin(broadcast(tot))
       .agg(

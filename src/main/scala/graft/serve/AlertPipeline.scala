@@ -54,19 +54,12 @@ object AlertPipeline {
     * partition, so one task sends a batch's alerts, and any stateful
     * operator in `deltaStream` (the `DeltaTracker` upstream) keeps its
     * state in one in-memory partition. `deltaStream` must therefore be
-    * keyed by a serving key space (states, districts), not by users.
-    *
-    * P8 observability (the reference's peek at
-    * Covid19PatientAnalyzer.java:88 and the bot's logging peeks at
-    * KafkaStreamsConfig.java:162-163): an `Observation` rides the fanout
-    * plan itself — zero extra passes — and reports per-batch metrics to
-    * `onMetrics`. */
+    * keyed by a serving key space (states, districts), not by users. */
   def run(deltaStream: DataFrame, prefs: Dataset[UserPrefs],
-      send: (String, String) => Unit,
-      onMetrics: (Long, Map[String, Any]) => Unit = (_, _) => ())
+      send: (String, String) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     Streams.foreachBatch(deltaStream, ServingSized, "append", None)(
-      sendBatch(_, _, prefs, send, onMetrics))
+      sendBatch(_, _, prefs, send))
 
   /** The composite serving form: [[run]] with the user prefs read per
     * micro-batch from a durable [[graft.state.KeyedStore]] (the
@@ -82,7 +75,6 @@ object AlertPipeline {
   def runWithStore(deltaStream: DataFrame, prefsStorePath: String,
       send: (String, String) => Unit,
       checkpointLocation: Option[String] = None,
-      onMetrics: (Long, Map[String, Any]) => Unit = (_, _) => (),
       sentMarkerDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     // markers are keyed by batchId, and batchIds are only stable under
@@ -100,7 +92,7 @@ object AlertPipeline {
         val prefs = graft.state.KeyedStore.read(spark, prefsStorePath)
           .select(col("userId"), col("myStates"), col("subscribed"))
           .as[UserPrefs]
-        sendBatch(batch, batchId, prefs, send, onMetrics, sentMarkerDir)
+        sendBatch(batch, batchId, prefs, send, sentMarkerDir)
     }
   }
 
@@ -120,25 +112,16 @@ object AlertPipeline {
     * the checkpoint. */
   def sendBatch(batch: DataFrame, batchId: Long, prefs: Dataset[UserPrefs],
       send: (String, String) => Unit,
-      onMetrics: (Long, Map[String, Any]) => Unit = (_, _) => (),
       sentMarkerDir: Option[String] = None): Unit = {
     val hadoopConf = batch.sparkSession.sparkContext.hadoopConfiguration
     val marker = sentMarkerDir.map(d =>
       new org.apache.hadoop.fs.Path(d, s"batch-$batchId"))
     val fs = marker.map(_.getFileSystem(hadoopConf))
     if (marker.zip(fs).exists { case (m, f) => f.exists(m) }) return
-    val obs = org.apache.spark.sql.Observation(
-      s"alert_fanout_${batchId}_${System.nanoTime()}")
-    val out = fanout(batch, prefs)
-      .observe(obs,
-        count(lit(1)).as("n_alerts"),
-        approx_count_distinct(col("userId")).as("n_users"),
-        approx_count_distinct(col("state")).as("n_states"))
-    out.select(col("userId"), col("alertText"))
+    fanout(batch, prefs).select(col("userId"), col("alertText"))
       .foreachPartition { rows: Iterator[org.apache.spark.sql.Row] =>
         rows.foreach(r => send(r.getString(0), r.getString(1)))
       }
-    onMetrics(batchId, obs.get)
     marker.zip(fs).foreach { case (m, f) =>
       f.mkdirs(m.getParent)
       f.create(m, true).close()

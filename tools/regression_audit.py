@@ -2,10 +2,12 @@
 """Round-over-round per-query regression self-audit (r12 verdict task 6).
 
 Aligns the current bench_out.json (full-precision name->seconds maps)
-against a prior round's archived BENCH_r{N}.json trailer (ds-arrays
-form: qmed/qmin decisecond value arrays in REGISTRY-NAME-SORTED order)
-and reports every query whose MIN regressed by >= --threshold (default
-1.5x), plus the improvements at the same bar for symmetry.
+against a prior round's archived BENCH_r{N}.json trailer and reports
+every query whose MIN regressed by >= --threshold (default 1.5x), plus
+the improvements at the same bar for symmetry. From the trailer it
+reads only `qmin`, the decisecond min array in REGISTRY-NAME-SORTED
+order, which every trailer form that keeps per-query data carries
+(archived records from r11 on).
 
 The prior trailer carries no names (the 1900-char tail budget), so the
 alignment reconstructs them: the prior registry's name list is the
@@ -129,7 +131,7 @@ def main():
                   "(or a paired add+remove omitted from --new/--removed); "
                   "pass --prior-correctness CORRECTNESS_r{N}.json to "
                   "verify the name set exactly", file=sys.stderr)
-        # ds-arrays form: deciseconds, -1 = failed
+        # qmin: deciseconds, -1 = failed
         prior_mins = {n: v / 10.0 for n, v in zip(prior_names, arr) if v >= 0}
 
     regress, improve = [], []
